@@ -285,7 +285,7 @@ def check_hll_mergeable(spark, sf_dir):
 
 def check_semantic_dedup(spark, sf_dir):
     """Planted exact duplicates (20 copied vectors at shifted ids) must
-    ALL be pruned — identical vectors land in the same KMeans cell and
+    ALL be pruned — identical vectors land in the same quantizer cell and
     cosine 1.0 always clears the threshold, so planted-dup recall is a
     hard 1.0 bound, not a tolerance. Ambient cell-recall (what fraction
     of corpus-wide >= 0.4 pairs the cells capture) is reported as
@@ -326,13 +326,14 @@ def check_semantic_dedup(spark, sf_dir):
     same = sum(1 for a, b in brute if cells[a] == cells[b])
     out.unpersist()
     # Soft floor on the ambient numbers (round 10, VERDICT r9 #7): the
-    # planted bound can't see a KMeans regression that silently halves
+    # planted bound can't see a quantizer regression that silently halves
     # how many corpus-wide near-dup pairs land in one cell. Absolute
-    # recall is geometry- and cell-count-dependent (measured 0.59 at
-    # sf0.01 / 16 cells but 0.29 at sf0.1 / 16 cells — both healthy),
-    # so the floor is QUALITY-relative: an uninformative assignment
-    # puts a pair same-cell with probability Σ nᵢ(nᵢ−1)/N(N−1); a
-    # healthy KMeans captures 4-10× that, so requiring ≥3× random
+    # recall is geometry- and cell-count-dependent (numpy Lloyd, 16
+    # cells: 0.24 at sf0.001, 0.34 at sf0.01, 0.27 at sf0.1 — all
+    # healthy), so the floor is QUALITY-relative: an uninformative
+    # assignment puts a pair same-cell with probability
+    # Σ nᵢ(nᵢ−1)/N(N−1); a healthy quantizer captures about 4-5.5× that
+    # (3.8× at sf0.001), so requiring ≥3× random
     # trips on a clustering collapse at any SF without flaking on
     # geometry. Skipped when the bounded corpus has <10 ambient pairs
     # (a ratio of a handful of pairs is noise, not signal).

@@ -62,13 +62,13 @@ def cmd_translate(
 ) -> None:
     """§3.1 main pipeline over one CSV, mock translator (offline)."""
     from .operators.aggregates import observed_run_counters
-    from .plans.pipeline import translate_docs
+    from .plans.pipeline import _translate_docs_held
     from .sources.writers import write_output_csv
 
     print(f"Translating {input_csv} -> {language} -> {output_csv}")
     print("(offline run: deterministic mock translator — plug "
           "OpenAIBatchTransport for the live Batch API)")
-    rows = translate_docs(_todo_from_csv(spark, input_csv), limit=4000)
+    rows, held = _translate_docs_held(_todo_from_csv(spark, input_csv), limit=4000)
     out = rows.select(
         F.col("description_id"),
         F.col("english_sentence"),
@@ -79,13 +79,17 @@ def cmd_translate(
     )
     # R-20 counters ride the sink write (zero extra passes).
     observed, obs = observed_run_counters(out)
-    write_output_csv(
-        observed.select(
-            "description_id", "english_sentence", "translated_sentence"
-        ),
-        output_csv,
-        single_file=True,
-    )
+    try:
+        write_output_csv(
+            observed.select(
+                "description_id", "english_sentence", "translated_sentence"
+            ),
+            output_csv,
+            single_file=True,
+        )
+    finally:
+        for df in held:
+            df.unpersist()
     m = obs.get
     total, failed = m["total_rows"], m["failed"]
     print(f"\nTotal rows:      {total}")

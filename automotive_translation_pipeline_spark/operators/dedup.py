@@ -1179,98 +1179,51 @@ def semantic_dedup(
     fit_cap: int = 20_000,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic near-duplicate pruning
-    over an embedding column — KMeans clusters bound the pairwise
-    work, exact cosine pairs above ``threshold`` form dedup clusters
-    WITHIN each cell, and one representative survives per cluster.
+    over an embedding column — coarse-quantizer cells bound the
+    pairwise work, exact cosine pairs above ``threshold`` form dedup
+    clusters WITHIN each cell, and one representative survives per
+    cluster.
 
     Representative election follows the paper: keep the member LEAST
-    similar to its KMeans centroid (the most "interesting" example,
+    similar to its cell centroid (the most "interesting" example,
     preserving diversity at the cluster edge), ties broken by id.
 
     Scale shape: within-cell pairwise cosine is quadratic in CELL
     size, so total pair work is ``n x cell_size`` — linear in the
     corpus ONLY if cells stay constant-sized. The default
-    ``n_cells=None`` derives that automatically (``ceil(n / target_cell_size)``; the one count
-    action is cheap here — this operator already runs KMeans fit
-    actions, laziness is spent). A FIXED n_cells grows cells with the
-    corpus and goes quadratic — fine for a known size, wrong as a
-    scaling default. The quantizer fits on a deterministic md5-hash
-    sample capped at ``fit_cap`` vectors (KMeans cost per iteration is
-    fit rows x cells; centroids converge on a sample — the same trade
-    as the IVF index), then assigns the FULL corpus in one pass.
-    Components and election run over the pair-touched subset only.
-    Like SemDeDup itself, cross-cell near-dups are invisible by
-    design — that recall loss is measured by the sweep's accuracy
-    hook rather than assumed.
+    ``n_cells=None`` derives that automatically (``ceil(n / target_cell_size)``;
+    the one count action is cheap here — the quantizer fit collects
+    its training set anyway, laziness is spent). A FIXED n_cells grows
+    cells with the corpus and goes quadratic — fine for a known size,
+    wrong as a scaling default. The quantizer is the IVF one
+    (similarity._coarse_quantize): numpy Lloyd on a deterministic
+    md5-hash sample capped at ``fit_cap`` vectors, then the FULL corpus
+    assigned in one pass. Components and election run over the
+    pair-touched subset only. Like SemDeDup itself, cross-cell
+    near-dups are invisible by design — that recall loss is measured
+    by the sweep's accuracy hook rather than assumed.
 
     Returns (id, cell, component, centroid_cos, is_canonical) for
     every input vector; ``is_canonical=False`` rows are the prune set.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+    from .similarity import _coarse_quantize, _dot, _norm
 
-    from .sampling import hash_sample
-
-    vecs = emb.select(
-        F.col(id_col),
-        F.col(vec_col),
-        array_to_vector(
-            F.transform(F.col(vec_col), lambda x: x.cast("double"))
-        ).alias("__feat"),
-    )
-    n = vecs.count()
+    n = emb.count()
     if n_cells is None:
         n_cells = max(4, -(-n // target_cell_size))  # ceil division
-    # KMeans needs k <= fit rows: beyond target_cell_size * fit_cap / 2
-    # vectors the cap binds and cells grow past target — raise fit_cap
-    # if constant cell size matters at that scale.
-    fit_set = vecs if n <= fit_cap else hash_sample(vecs, id_col, fit_cap / n)
-    # Clamp against the ACTUAL fit-sample row count, not the expected
-    # fit_cap/2: a hash sample that under-delivers on a skewed id
-    # distribution would otherwise hand KMeans k > rows. The fit is
-    # eager anyway, so the count adds one scan of the sampled side.
-    n_fit = n if n <= fit_cap else fit_set.count()
-    n_cells = min(n_cells, max(4, n_fit // 2), max(1, n_fit))
-    model = KMeans(k=n_cells, seed=seed, featuresCol="__feat").fit(fit_set)
-    cents = model.clusterCenters()
-    cent_df = emb.sparkSession.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-        "__cell int, __centroid array<double>",
+    assigned, cent_df = _coarse_quantize(
+        emb, n_cells, seed, id_col, vec_col, n=n, fit_cap=fit_cap
     )
-    assigned = (
-        model.transform(vecs)
-        .select(id_col, vec_col, F.col("prediction").alias("__cell"))
-        .persist()
-    )
+    assigned = assigned.persist()
     # Cosine of each vector to its own centroid (broadcast dim table).
-    dot = F.aggregate(
-        F.zip_with(
-            F.col(vec_col),
-            F.col("__centroid"),
-            lambda x, y: x.cast("double") * y,
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm_v = F.sqrt(
-        F.aggregate(
-            F.col(vec_col),
-            F.lit(0.0),
-            lambda acc, x: acc + x.cast("double") * x.cast("double"),
-        )
-    )
-    norm_c = F.sqrt(
-        F.aggregate(
-            F.col("__centroid"), F.lit(0.0), lambda acc, x: acc + x * x
-        )
-    )
+    vec, cent = F.col(vec_col), F.col("__centroid")
     # One interpreted ArrayAggregate tree, not two: CodegenFallback
     # expressions get no common-subexpression elimination, so the
     # negated election key derives from the scored column.
     scored = assigned.join(F.broadcast(cent_df), "__cell").select(
         F.col(id_col),
         F.col("__cell"),
-        (dot / (norm_v * norm_c)).alias("centroid_cos"),
+        (_dot(vec, cent) / (_norm(vec) * _norm(cent))).alias("centroid_cos"),
     ).withColumn("__neg_ccos", -F.col("centroid_cos"))
     pairs = _cell_pairs_arrow(
         assigned.select(id_col, vec_col, "__cell"),
@@ -1302,7 +1255,7 @@ def semantic_dedup(
     )
     # Materialize BEFORE dropping the assignment cache: the returned
     # plan references `assigned` in two branches, and unpersisting a
-    # still-lazy result would recompute the KMeans assignment (and the
+    # still-lazy result would recompute the cell assignment (and the
     # interpreted centroid cosines) on every downstream action.
     result = result.localCheckpoint()
     assigned.unpersist()

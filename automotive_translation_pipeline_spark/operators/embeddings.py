@@ -192,7 +192,8 @@ def pca_fit(
 
     NOTE: fitting is EAGER by contract (a ``first()`` to probe the
     dimension and the partial-reduce collect) — this is a model-fit
-    API like ``semantic_dedup``'s quantizer, not a lazy plan builder.
+    API like the IVF/SemDeDup coarse quantizer
+    (``similarity._coarse_quantize``), not a lazy plan builder.
     """
     import numpy as np
     import pandas as pd

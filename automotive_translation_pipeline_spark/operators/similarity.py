@@ -243,36 +243,18 @@ def cosine_topk_ivf(
     query_id_col: str = "query_id",
     seed: int = 42,
 ) -> DataFrame:
-    """IVF-style approximate top-k: KMeans coarse quantizer partitions
-    the corpus into cells; each query probes only its ``n_probe``
-    nearest cells and scores exactly within them.
+    """IVF-style approximate top-k: a coarse quantizer
+    (:func:`_coarse_quantize`) partitions the corpus into cells; each
+    query probes only its ``n_probe`` nearest cells and scores exactly
+    within them.
 
     This is the 10^9-vector shape (Odyssey/REPOSE in PAPERS.md): the
-    corpus is scanned once to train/assign, queries touch
-    ``n_probe/n_cells`` of the data, and the cell assignment can be
-    written as a partition column so probes become partition pruning.
+    quantizer trains on a bounded sample, the corpus is scanned once to
+    assign, queries touch ``n_probe/n_cells`` of the data, and the cell
+    assignment can be written as a partition column so probes become
+    partition pruning.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    vecs = corpus.select(
-        F.col(id_col),
-        F.col(vec_col),
-        array_to_vector(
-            F.transform(F.col(vec_col), lambda x: x.cast("double"))
-        ).alias("__feat"),
-    )
-    model = KMeans(k=n_cells, seed=seed, featuresCol="__feat").fit(vecs)
-    assigned = model.transform(vecs).select(
-        id_col, vec_col, F.col("prediction").alias("__cell")
-    )
-    centroids = [
-        [float(x) for x in c] for c in model.clusterCenters()
-    ]
-    cent_df = corpus.sparkSession.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)],
-        "__cell int, __centroid array<double>",
-    )
+    assigned, cent_df = _coarse_quantize(corpus, n_cells, seed, id_col, vec_col)
     return _probe_and_score(
         assigned, cent_df, queries, k, n_probe, id_col, vec_col, query_id_col
     )
@@ -295,29 +277,63 @@ def build_ivf_index(
     shuffle-free write, and every query batch after it touches
     ``n_probe/n_cells`` of the FILES, not just of the rows.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    vecs = corpus.select(
-        F.col(id_col),
-        F.col(vec_col),
-        array_to_vector(
-            F.transform(F.col(vec_col), lambda x: x.cast("double"))
-        ).alias("__feat"),
-    )
-    model = KMeans(k=n_cells, seed=seed, featuresCol="__feat").fit(vecs)
+    assigned, cent_df = _coarse_quantize(corpus, n_cells, seed, id_col, vec_col)
     # "cell" (no underscore prefix): underscore-led paths are treated
     # as hidden by the file readers.
-    assigned = model.transform(vecs).select(
-        id_col, vec_col, F.col("prediction").alias("cell")
+    assigned.withColumnRenamed("__cell", "cell").write.mode(
+        "overwrite"
+    ).partitionBy("cell").parquet(f"{path}/corpus")
+    cent_df.toDF("cell", "centroid").coalesce(1).write.mode("overwrite").parquet(
+        f"{path}/centroids"
     )
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/corpus")
-    cent_rows = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    corpus.sparkSession.createDataFrame(
-        cent_rows, "cell int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+
+
+def _coarse_quantize(
+    corpus: DataFrame,
+    n_cells: int,
+    seed: int = 42,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    n: int | None = None,
+    fit_cap: int = 20_000,
+) -> tuple[DataFrame, DataFrame]:
+    """The one coarse quantizer behind IVF, the persisted IVF index and
+    SemDeDup: ``n_cells`` centroids from :func:`_lloyd_codebook` with one
+    subspace (L2-normalized space), then every vector assigned to its
+    nearest centroid by :func:`pq_encode` in one Arrow-batched pass.
+
+    The fit set is the corpus up to ``fit_cap`` vectors, beyond that a
+    deterministic md5-hash sample of about ``fit_cap`` (at 100 TB the
+    fit stays the same size), ordered by id so the centroids do not
+    depend on partitioning. ``n`` is the corpus count if the caller has
+    it. Cells are clamped to half the fit rows (at least 4, at most
+    all of them): past ``fit_cap / 2`` cells the cap binds.
+
+    Returns (corpus as (id, vec, __cell), centroids as
+    (__cell int, __centroid array<double>))."""
+    import numpy as np
+
+    from .sampling import hash_sample
+
+    if n is None:
+        n = corpus.count()
+    # Full 32-bit hash resolution: with the default 10k buckets the
+    # fraction rounds to an empty sample past 200M vectors.
+    fit_set = (
+        corpus if n <= fit_cap
+        else hash_sample(corpus, id_col, fit_cap / n, buckets=1 << 32)
+    )
+    rows = sorted(fit_set.select(id_col, vec_col).collect(), key=lambda r: r[0])
+    X = np.array([r[1] for r in rows], dtype=np.float64)
+    n_codes = min(n_cells, max(4, len(X) // 2), max(1, len(X)))
+    codebook = _lloyd_codebook(X, m=1, n_codes=n_codes, seed=seed)
+    assigned = pq_encode(corpus.select(id_col, vec_col), codebook, vec_col).select(
+        id_col, vec_col, F.col("__codes")[0].alias("__cell")
+    )
+    cent_df = corpus.sparkSession.createDataFrame(
+        list(enumerate(codebook[0])), "__cell int, __centroid array<double>"
+    )
+    return assigned, cent_df
 
 
 def build_pq_codebook(
@@ -351,7 +367,8 @@ def _lloyd_codebook(
     """numpy-only core of :func:`build_pq_codebook` (normalize, split
     into ``m`` subspaces, 12 Lloyd iterations each) — shared with
     tools/train_pq_codebook.py so the committed frozen codebook is
-    trained by EXACTLY the code the live trainer runs."""
+    trained by EXACTLY the code the live trainer runs, and with
+    :func:`_coarse_quantize` (``m=1``)."""
     import numpy as np
 
     X = np.asarray(X, dtype=np.float64).copy()
@@ -366,8 +383,7 @@ def _lloyd_codebook(
         sub = X[:, i * ds : (i + 1) * ds]
         cents = sub[rng.choice(len(sub), size=n_codes, replace=False)].copy()
         for _ in range(12):  # Lloyd iterations; converges fast at these sizes
-            d2 = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
+            assign = _nearest_centroid(sub, cents)
             for j in range(n_codes):
                 mask = assign == j
                 if mask.any():
@@ -404,37 +420,43 @@ def frozen_pq_codebook() -> list[list[list[float]]]:
 _FROZEN_PQ_CODEBOOK = None
 
 
+def _nearest_centroid(X, cents):
+    """Row-wise index of the nearest centroid, the one argmin kernel of
+    the Lloyd fit and the :func:`pq_encode` assignment. It uses
+    ||x-c||² = ||x||² - 2x·c + ||c||² with ||x||² dropped (constant per
+    row): one matmul instead of an n x k x d difference tensor. Ties go
+    to the lower centroid index."""
+    d2 = -2.0 * X @ cents.T + (cents * cents).sum(axis=1)[None, :]
+    return d2.argmin(axis=1)
+
+
 def pq_encode(
     corpus: DataFrame,
     codebook: list[list[list[float]]],
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Encode each corpus vector as ``m`` small codes (nearest centroid
     per subspace, after L2 normalization) — the one-time, scan-once
     build pass. Vectorized Arrow-batched pandas UDF: the argmin over
-    centroids is a numpy matmul per batch, not per row."""
+    centroids is a numpy matmul per batch, not per row. Returns
+    ``corpus`` with an added ``__codes`` column."""
+    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     m = len(codebook)
     ds = len(codebook[0][0])
+    cents = [np.array(sub, dtype=np.float64) for sub in codebook]
 
     @pandas_udf("array<int>")
     def _encode(vecs: pd.Series) -> pd.Series:
-        import numpy as np
-
         X = np.array(vecs.tolist(), dtype=np.float64)
         X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
         codes = np.empty((len(X), m), dtype=np.int32)
         for i in range(m):
-            sub = X[:, i * ds : (i + 1) * ds]
-            cents = np.array(codebook[i], dtype=np.float64)
-            # ||x-c||² = ||x||² - 2x·c + ||c||²; ||x||² constant per row
-            d2 = -2.0 * sub @ cents.T + (cents * cents).sum(axis=1)[None, :]
-            codes[:, i] = d2.argmin(axis=1)
+            codes[:, i] = _nearest_centroid(X[:, i * ds : (i + 1) * ds], cents[i])
         return pd.Series([list(map(int, row)) for row in codes])
 
-    return corpus.select(F.col(id_col), _encode(F.col(vec_col)).alias("__codes"))
+    return corpus.withColumn("__codes", _encode(F.col(vec_col)))
 
 
 def cosine_topk_pq(
@@ -473,7 +495,7 @@ def cosine_topk_pq(
         )
     m = len(codebook)
     ds = len(codebook[0][0])
-    codes = pq_encode(corpus, codebook, id_col=id_col, vec_col=vec_col)
+    codes = pq_encode(corpus, codebook, vec_col).select(id_col, "__codes")
 
     # Normalized query + per-subspace ADC tables as plain expressions.
     tables = F.array(

@@ -90,8 +90,19 @@ def translate_docs(todo: DataFrame, limit: int = 4000) -> DataFrame:
     ``todo`` must carry (description_id, english_sentence, shard, seq)
     — already filtered and deduplicated. Both the batch flagship and
     the streaming flagship (streaming/flagship.py, per micro-batch) run
-    exactly this fragment.
+    exactly this fragment. Callers that own a sink write and must
+    release the persisted intermediates afterwards use
+    :func:`_translate_docs_held`.
     """
+    return _translate_docs_held(todo, limit)[0]
+
+
+def _translate_docs_held(
+    todo: DataFrame, limit: int = 4000
+) -> tuple[DataFrame, list[DataFrame]]:
+    """:func:`translate_docs` plus the frames it persists. The caller
+    unpersists them once the result has been written; until then the
+    result's plan reads them."""
     # The batch assignment feeds BOTH the request materialization and
     # the expected-rows join side; unpersisted, Spark recomputes the
     # scan→filter→anti-join→window chain per consumer (4 source scans
@@ -113,7 +124,7 @@ def translate_docs(todo: DataFrame, limit: int = 4000) -> DataFrame:
     expected = assigned.select(
         "batch_id", "description_id", "english_sentence", "seq"
     )
-    return _rejoin_and_flag(expected, parsed)
+    return _rejoin_and_flag(expected, parsed), [assigned, responses]
 
 
 def _stage_table(

@@ -96,6 +96,10 @@ _CHANGED_THIS_ROUND = frozenset({
     "profile_psi_drift",  # one bucket-count pass + conditional-agg pivot
     "embedding_pca_recon",  # one scatter fit + fused two-rank recon pass
     "basket_brand_lift",  # row-local pair generation; self-join removed
+    # one vector quantizer (numpy Lloyd + pq_encode assignment, no MLlib):
+    "ann_cosine_ivf",
+    "ann_cosine_ivf_indexed",
+    "dedup_semantic_prune",
 })
 
 
@@ -3800,9 +3804,10 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("ann_cosine_ivf", None)
 def ann_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN (KMeans coarse quantizer + cell probing) — rows-only:
-    KMeans centroids aren't oracle-reproducible; recall vs brute force
-    is asserted in tests (test_ivf_topk_recall_vs_bruteforce)."""
+    """IVF ANN (numpy Lloyd coarse quantizer + cell probing) — rows-only:
+    the centroids are trained per call, not frozen repo data, so the
+    oracle cannot replay them; recall vs brute force is asserted in
+    tests (test_ivf_topk_recall_vs_bruteforce)."""
     from .operators.similarity import cosine_topk_ivf
 
     t = load_testdata(spark, sf_dir)
@@ -3948,10 +3953,10 @@ def ann_cosine_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("ann_cosine_ivf_indexed", None)
 def ann_cosine_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN over a PERSISTED index: the corpus is written
-    partitioned by coarse-quantizer cell, so probing becomes partition
-    pruning at the scan (rows-only for the same reason as
-    ann_cosine_ivf; parity with the in-memory IVF and the pruning plan
-    are test-asserted)."""
+    partitioned by its coarse-quantizer cell (the numpy Lloyd quantizer
+    ann_cosine_ivf uses), so probing becomes partition pruning at the
+    scan (rows-only for the same reason as ann_cosine_ivf; parity with
+    the in-memory IVF and the pruning plan are test-asserted)."""
     from urllib.parse import urlparse
 
     from .operators.similarity import build_ivf_index, cosine_topk_ivf_indexed
@@ -8285,15 +8290,16 @@ def variant_props_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_semantic_prune",
-    None,  # rows-only: KMeans cell assignment is engine-specific;
+    None,  # rows-only: centroids are trained per call, not frozen;
     # bounded-verified by accuracy.check_semantic_dedup (planted exact
     # duplicates MUST be pruned — recall 1.0 — plus ambient-pair
     # cell-recall reported) and unit tests.
 )
 def dedup_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023) over the embeddings table
-    (operators/dedup.py:semantic_dedup): KMeans cells bound the
-    pairwise cosine work, within-cell pairs >= 0.4 collapse to
+    (operators/dedup.py:semantic_dedup): coarse-quantizer cells (the
+    IVF quantizer, numpy Lloyd on a bounded sample) bound the pairwise
+    cosine work, within-cell pairs >= 0.4 collapse to
     components, and the member least similar to its centroid survives
     per component (diversity-preserving election). n_cells=None keeps
     cell size ~constant as the corpus grows (pair work stays linear;

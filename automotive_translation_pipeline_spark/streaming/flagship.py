@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..ledger import Ledger
-from ..plans.pipeline import translate_docs
+from ..plans.pipeline import _translate_docs_held
 from ..schemas import DESCRIPTIONS
 
 
@@ -128,16 +128,22 @@ def run_streaming_translation(
                     ),
                 )
             )
-            result = translate_docs(docs, limit=limit).select(
-                "batch_id",
-                "description_id",
-                "english_sentence",
-                "translation",
-                "is_failed",
-                "is_suspicious",
-                "shift_suspect",
-            )
-            result.write.mode("append").parquet(output_path)
+            result, held = _translate_docs_held(docs, limit=limit)
+            try:
+                result.select(
+                    "batch_id",
+                    "description_id",
+                    "english_sentence",
+                    "translation",
+                    "is_failed",
+                    "is_suspicious",
+                    "shift_suspect",
+                ).write.mode("append").parquet(output_path)
+            finally:
+                # Per micro-batch intermediates: without this every
+                # trigger leaves two cached frames behind.
+                for df in held:
+                    df.unpersist()
             if ledger is not None:
                 ledger.update_status(job_id, "completed", output_file=output_path)
         except Exception:

@@ -53,6 +53,21 @@ def test_cli_translate_end_to_end(spark, tmp_path, capsys):
     assert "9" not in by_id
 
 
+def test_cli_translate_releases_persisted_frames(spark, tmp_path):
+    """A translate job leaves no persisted RDD behind: the pipeline's
+    two cached intermediates are released after the sink write, so a
+    long-lived session running many jobs does not accumulate them."""
+    src = tmp_path / "in.csv"
+    _write_csv(
+        src, [(str(i), f"brake pad kit {i} with sensor") for i in range(1, 13)]
+    )
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    cli.cmd_translate(spark, str(src), "German", str(tmp_path / "out.csv"))
+    after = set(jsc.getPersistentRDDs().keySet().toArray())
+    assert after - before == set()
+
+
 def test_cli_analyze_taxonomy(spark, tmp_path, capsys):
     payload = {"1": "first sentence here", "2": "second sentence here"}
     clean = json.dumps({k: mock_translation(v) for k, v in payload.items()})

@@ -4,7 +4,7 @@ automotive_translation_pipeline_spark/resources/pq_codebook_v1.json.
 The ann_cosine_pq oracle promotion (round 10, VERDICT r9 #2) needs the
 TRAINED centroids to be a fixed constant both engines can share — the
 ann_cosine_lsh pattern, where the SRP planes are inlined into the
-DuckDB oracle as VALUES literals. KMeans seeded from data can't be
+DuckDB oracle as VALUES literals. Lloyd centroids fit on data can't be
 replayed in SQL, so the codebook is trained ONCE here (pyarrow +
 the same _lloyd_codebook numpy core the live trainer uses) and
 committed; the catalog entry and the oracle both consume the frozen
