@@ -100,6 +100,8 @@ _CHANGED_THIS_ROUND = frozenset({
     "ann_cosine_ivf",
     "ann_cosine_ivf_indexed",
     "dedup_semantic_prune",
+    # lazy table resolution (views register on access):
+    "agg_grouping_sets",
 })
 
 
@@ -3565,9 +3567,10 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (the cube/rollup generalization): per-lang,
     per-source, and grand totals in ONE shuffle with a grouping-id
-    column — via the SQL surface over the registered testdata views
-    (there is no DataFrame-API spelling for arbitrary sets)."""
-    load_testdata(spark, sf_dir)
+    column — via the SQL surface over the testdata view (there is no
+    DataFrame-API spelling for arbitrary sets). Views register on first
+    access, so the table is touched before the SQL names it."""
+    load_testdata(spark, sf_dir)["documents"]
     return spark.sql(
         """
         SELECT lang, source, count(*) AS n,

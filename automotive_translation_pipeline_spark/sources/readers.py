@@ -8,6 +8,7 @@ predicate" and "scan everything then filter" is the whole job.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -82,15 +83,25 @@ def read_response_jsonl(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-# Columns written as parquet TIMESTAMP(NANOS, adjustedToUTC=false), which
-# Spark 4.1 rejects (PARQUET_TYPE_ILLEGAL) unless the nanosAsLong escape
-# hatch maps them to bigint; rebuilt to timestamps below. Only `events.ts`
-# is NANOS — lineitem/orders timestamps are TIMESTAMP(MILLIS) and read
-# natively as timestamp_ntz (so range predicates on them push to the scan
-# with no special handling).
+# Columns that may be written as parquet TIMESTAMP(NANOS), which Spark 4.1
+# rejects (PARQUET_TYPE_ILLEGAL) unless the nanosAsLong escape hatch maps
+# them to bigint; `_rebuild_nanos_ts` turns them back into timestamps. The
+# committed testdata stores `events.ts` (and lineitem/orders dates) as
+# TIMESTAMP(MICROS), read natively as timestamp_ntz, so this is a compat
+# path for files written with NANOS timestamps and a no-op on the repo data.
 _NANO_TS_COLS = {
     "events": ("ts",),
 }
+
+
+def _rebuild_nanos_ts(df: DataFrame, table: str) -> DataFrame:
+    """Rebuild ``table``'s NANOS columns that arrived as ``bigint``."""
+    for col in _NANO_TS_COLS.get(table, ()):
+        if dict(df.dtypes).get(col) == "bigint":
+            # Integer division — float division loses 1µs at ~1.7e18
+            # nanos, silently shifting timestamps off the oracle's.
+            df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
+    return df
 
 
 def ts_nanos(literal: str) -> int:
@@ -122,21 +133,22 @@ def scan_ts_pruned(
 
     Two cases, one interface:
 
-    - TIMESTAMP(NANOS) columns (``events.ts``) arrive as ``bigint``
-      (``nanosAsLong``) and ``load_testdata`` rebuilds them with a
-      projection Catalyst cannot invert — a filter on the rebuilt
-      column stays ABOVE the scan and every row group is read.
-      nanos→timestamp is strictly monotonic, hence
+    - TIMESTAMP(MICROS/MILLIS) columns — every timestamp in the repo
+      testdata (``events.ts``, ``l_shipdate``, ``o_orderdate``) — read
+      natively as ``timestamp_ntz``; the predicate applies as-is and
+      pushes on its own. The helper just guarantees it sits on the scan
+      column before any projection/join.
+    - TIMESTAMP(NANOS) columns (the compat path for NANOS files) arrive
+      as ``bigint`` (``nanosAsLong``) and are rebuilt with a projection
+      Catalyst cannot invert — a filter on the rebuilt column stays
+      ABOVE the scan and every row group is read. nanos→timestamp is
+      strictly monotonic, hence
       ``ts OP literal ⇔ raw OP epoch_nanos(literal)`` exactly: pushing
       the raw-domain twin reaches the parquet reader as
       ``PushedFilters`` and prunes row groups / pages via min-max
       statistics. At 100 TB with time-sorted or time-partitioned files
       this is the difference between scanning the requested day and
       scanning the month.
-    - TIMESTAMP(MILLIS) columns (``l_shipdate``, ``o_orderdate``) read
-      natively as ``timestamp_ntz``; the predicate applies as-is and
-      pushes on its own. The helper just guarantees it sits on the
-      scan column before any projection/join.
 
     ``preds``: list of ``(column, op, timestamp_literal)`` with op in
     ``>= > <= <``.
@@ -153,32 +165,55 @@ def scan_ts_pruned(
             df = df.filter(
                 _RANGE_OPS[op](F.col(col), F.lit(literal).cast("timestamp"))
             )
-    for col in _NANO_TS_COLS.get(table, ()):
-        if dtypes.get(col) == "bigint":
-            df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
-    return df
+    return _rebuild_nanos_ts(df, table)
 
 
-def load_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load the driver's parquet tables and register them as temp views."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Engine contract (safe to set on any session the driver hands us):
-    spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    out: dict[str, DataFrame] = {}
-    for name in TESTDATA_TABLES:
+class _LazyTables(Mapping):
+    """Read-only ``name -> DataFrame`` view of one scale-factor dir.
+
+    Listing the present tables runs no Spark job; a table is read
+    (parquet schema inference: one job), NANOS-rebuilt and registered as
+    a temp view on first access, then memoized, so repeated access
+    within one query returns the same DataFrame. Nothing is shared
+    across ``load_testdata`` calls: each call builds fresh plans.
+    """
+
+    def __init__(self, spark: SparkSession, sf_dir: str):
+        self._spark, self._dir = spark, sf_dir
         # Tables absent from a partial scale-factor directory are
         # skipped, not errors: a query touches only the tables it
         # reads, and large-SF corpora are generated per table family
         # (e.g. documents+embeddings only for the text/dedup sweeps).
         # Accessing a skipped table raises KeyError at the call site.
-        if not os.path.exists(f"{sf_dir}/{name}.parquet"):
-            continue
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        for c in _NANO_TS_COLS.get(name, ()):
-            if dict(df.dtypes).get(c) == "bigint":
-                # Integer division — float division loses 1µs at ~1.7e18
-                # nanos, silently shifting timestamps off the oracle's.
-                df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
+        self._names = tuple(
+            n for n in TESTDATA_TABLES if os.path.exists(f"{sf_dir}/{n}.parquet")
+        )
+        self._resolved: dict[str, DataFrame] = {}
+
+    def __getitem__(self, name: str) -> DataFrame:
+        if name not in self._resolved:
+            if name not in self._names:
+                raise KeyError(name)
+            df = self._spark.read.parquet(f"{self._dir}/{name}.parquet")
+            df = _rebuild_nanos_ts(df, name)
+            df.createOrReplaceTempView(name)
+            self._resolved[name] = df
+        return self._resolved[name]
+
+    def __contains__(self, name: object) -> bool:
+        return name in self._names  # membership must not resolve the table
+
+    def __iter__(self) -> Iterator[str]:
+        return iter(self._names)
+
+    def __len__(self) -> int:
+        return len(self._names)
+
+
+def load_testdata(spark: SparkSession, sf_dir: str) -> Mapping[str, DataFrame]:
+    """The driver's parquet tables, each read and registered as a temp
+    view on first access (see ``_LazyTables``)."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # Engine contract (safe to set on any session the driver hands us):
+    spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+    return _LazyTables(spark, sf_dir)

@@ -561,9 +561,13 @@ def main() -> None:
         "cpus": CPUS,
         "calib_cpu_s": calib,
     }
+    detail_path = os.path.join(here, detail_file)
     try:
-        with open(os.path.join(here, detail_file), "w") as fh:
+        # Write-then-rename in the same dir: a run killed mid-dump leaves
+        # the previous sidecar whole instead of a truncated one.
+        with open(detail_path + ".tmp", "w") as fh:
             json.dump(detail, fh)
+        os.replace(detail_path + ".tmp", detail_path)
     except OSError:
         detail_file = None  # read-only checkout: line stays complete
     payload = {

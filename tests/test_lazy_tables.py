@@ -1,0 +1,99 @@
+"""``load_testdata`` is a lazy table accessor: creating it lists the
+tables and runs no Spark job; a table is read, NANOS-rebuilt and
+registered as a temp view on first access only."""
+
+from __future__ import annotations
+
+import shutil
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from automotive_translation_pipeline_spark import queries_catalog as qc
+from automotive_translation_pipeline_spark.sources import (
+    load_testdata,
+    scan_ts_pruned,
+    ts_nanos,
+)
+
+
+def _jobs(spark, group, fn):
+    """(result of fn(), number of Spark jobs it ran under ``group``)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_accessor_creation_runs_no_job(spark, sf_dir):
+    t, n = _jobs(spark, "lazy-create", lambda: load_testdata(spark, sf_dir))
+    assert n == 0
+    assert len(t) == 10
+    assert "documents" in t
+
+
+def test_first_access_runs_at_most_one_job_and_memoizes(spark, sf_dir):
+    t = load_testdata(spark, sf_dir)
+    docs, n = _jobs(spark, "lazy-access", lambda: t["documents"])
+    assert n <= 1
+    assert t["documents"] is docs
+    assert spark.catalog.tableExists("documents")
+
+
+def test_partial_dir_lists_only_present_tables(spark, sf_dir, tmp_path):
+    shutil.copy(f"{sf_dir}/documents.parquet", tmp_path / "documents.parquet")
+    t = load_testdata(spark, str(tmp_path))
+    assert len(t) == 1
+    assert list(t) == ["documents"]
+    assert "orders" not in t
+    with pytest.raises(KeyError):
+        t["orders"]
+    assert t["documents"].count() > 0
+
+
+def test_sql_entry_registers_its_view_on_access(spark, sf_dir):
+    spark.catalog.dropTempView("documents")
+    rows = qc.queries()["agg_grouping_sets"](spark, sf_dir).collect()
+    assert rows
+    assert sum(r.n for r in rows if r.g_lang == 1 and r.g_source == 1) > 0
+
+
+# 2023-11-14 22:13:20 UTC plus sub-microsecond digits that the micros
+# rebuild must truncate, not round.
+_NANOS = [1_700_000_000_000_000_999, 1_700_000_100_123_456_789, 1_700_090_000_000_000_001]
+
+
+@pytest.fixture
+def nanos_dir(tmp_path):
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2, 3], pa.int64()),
+            "ts": pa.array(_NANOS, pa.timestamp("ns")),
+        }),
+        tmp_path / "events.parquet",
+    )
+    assert pq.read_schema(tmp_path / "events.parquet").field("ts").type == pa.timestamp("ns")
+    return str(tmp_path)
+
+
+def test_nanos_events_rebuild_to_truncated_micros(spark, nanos_dir):
+    ev = load_testdata(spark, nanos_dir)["events"]
+    assert dict(ev.dtypes)["ts"] == "timestamp"
+    got = [r.us for r in ev.orderBy("event_id").select(F.unix_micros("ts").alias("us")).collect()]
+    assert got == [n // 1000 for n in _NANOS]
+
+
+def test_nanos_events_range_pushes_raw_nanos_bound(spark, nanos_dir):
+    spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
+    lo, hi = "2023-11-14 22:14:00", "2023-11-15"
+    df = scan_ts_pruned(spark, nanos_dir, "events", [("ts", ">=", lo), ("ts", "<", hi)])
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    scan = [line for line in plan.splitlines() if "FileScan" in line][0]
+    assert f"GreaterThanOrEqual(ts,{ts_nanos(lo)})" in scan
+    assert f"LessThan(ts,{ts_nanos(hi)})" in scan
+    assert [r.event_id for r in df.collect()] == [2]

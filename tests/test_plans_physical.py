@@ -40,7 +40,7 @@ def test_q1_scan_pruning(spark, sf_dir):
 
 def test_q6_ts_pushdown_reaches_scan(spark, sf_dir):
     """The date range must land in PushedFilters (l_shipdate is
-    TIMESTAMP(MILLIS) → native timestamp_ntz scan, so the predicate
+    TIMESTAMP(MICROS) → native timestamp_ntz scan, so the predicate
     pushes as-is) — losing this means full row-group scans on every
     date-filtered query."""
     plan = _physical(spark, "tpch_q6_forecast_revenue", sf_dir)
@@ -52,10 +52,12 @@ def test_q6_ts_pushdown_reaches_scan(spark, sf_dir):
 
 
 def test_events_nanos_pushdown_reaches_scan(spark, sf_dir):
-    """events.ts is TIMESTAMP(NANOS) → bigint under nanosAsLong; the
-    timestamp rebuild is a projection Catalyst can't invert, so the
-    range predicate must be applied in the raw nanos domain
-    (scan_ts_pruned) to reach the reader as a PushedFilter."""
+    """The repo's events.ts is TIMESTAMP(MICROS), so this guards the
+    native-timestamp branch of scan_ts_pruned: the range predicate sits
+    on the scan column and reaches the reader as a PushedFilter. The
+    NANOS compat branch (bigint under nanosAsLong, pushed in the raw
+    nanos domain) is exercised on a written NANOS file in
+    test_lazy_tables.py."""
     plan = _physical(spark, "events_ts_range_pruned", sf_dir)
     scan = [l for l in plan.splitlines() if "FileScan" in l][0]
     assert "GreaterThanOrEqual(ts," in scan
