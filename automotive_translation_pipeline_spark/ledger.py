@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .schemas import LEDGER
+from .sources import local_frame
 
 # Terminal + transient states (BATCH_TRACKING_GUIDE.md:169-182).
 TERMINAL_STATUSES = ("completed", "failed", "download_failed")
@@ -86,7 +87,7 @@ class Ledger:
             }
             for r in rows
         ]
-        writer = self.spark.createDataFrame(normalized, LEDGER).write.mode(
+        writer = local_frame(self.spark, normalized, LEDGER).write.mode(
             "append"
         )
         if self.storage == "delta":
@@ -126,7 +127,8 @@ class Ledger:
         from delta.tables import DeltaTable  # noqa: PLC0415 — gated above
 
         now = int(time.time())
-        src = self.spark.createDataFrame(
+        src = local_frame(
+            self.spark,
             [
                 {
                     "batch_id": r["batch_id"],

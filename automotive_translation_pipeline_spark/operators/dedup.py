@@ -1124,48 +1124,47 @@ def prefix_filter_jaccard_pairs(
     )
 
 
-def _cell_pairs_arrow(
-    assigned: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    cell_col: str = "__cell",
-) -> DataFrame:
-    """Within-cell cosine pairs >= threshold on the Arrow fast path:
-    one numpy GEMM per cell instead of per-pair zip_with/aggregate
-    lambdas — ArrayAggregate is CodegenFallback (interpreted), and at
-    ~16 us/pair it dominates SemDeDup's runtime (measured 80 of 89 s
-    at sf1); a 500x64 cell is one ~microseconds matmul. State per
-    group is bounded by cell size x dim (the operator's own
-    target_cell_size contract). Cosines differ from the column form
-    only in float summation order (SIMD vs sequential) — parity-tested
-    to 1e-9 in test_curation_round6."""
+def _cell_pairs(x, threshold: float):
+    """Cosine pairs >= ``threshold`` among the rows of one cell's
+    vector matrix ``x``, as (row i, row j, cosine) with i < j: one numpy
+    GEMM per cell instead of per-pair zip_with/aggregate lambdas —
+    ArrayAggregate is CodegenFallback (interpreted), and at ~16 us/pair
+    it dominated SemDeDup's runtime (measured 80 of 89 s at sf1); a
+    500x64 cell is one ~microseconds matmul. Cosines differ from the
+    column form (``embedding_near_dup``) only in float summation order
+    (SIMD vs sequential) — parity-tested in test_curation_round6."""
     import numpy as np
-    import pandas as pd
 
-    def pairs_of(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pd.DataFrame(
-                {"id_a": pd.Series(dtype="int64"),
-                 "id_b": pd.Series(dtype="int64"),
-                 "cosine": pd.Series(dtype="float64")}
-            )
-        x = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(x, axis=1)
-        norms[norms == 0.0] = 1.0
-        sim = (x @ x.T) / np.outer(norms, norms)
-        ids = pdf[id_col].to_numpy()
-        iu, ju = np.triu_indices(len(ids), k=1)
-        keep = sim[iu, ju] >= threshold
-        a, b = ids[iu[keep]], ids[ju[keep]]
-        lo, hi = np.minimum(a, b), np.maximum(a, b)
-        return pd.DataFrame(
-            {"id_a": lo, "id_b": hi, "cosine": sim[iu, ju][keep]}
-        )
+    norms = np.linalg.norm(x, axis=1)
+    norms[norms == 0.0] = 1.0
+    sim = (x @ x.T) / np.outer(norms, norms)
+    iu, ju = np.triu_indices(len(x), k=1)
+    cos = sim[iu, ju]
+    keep = cos >= threshold
+    return iu[keep], ju[keep], cos[keep]
 
-    return assigned.groupBy(cell_col).applyInPandas(
-        pairs_of, schema="id_a long, id_b long, cosine double"
-    )
+
+def _min_labels(n: int, i, j):
+    """Connected components of the edges ``(i[k], j[k])`` over nodes
+    ``0..n-1``, every node labeled with the smallest node of its
+    component: the min-label recurrence of :func:`connected_components`,
+    in numpy, with pointer jumping after each round so a long chain
+    collapses in O(log length) rounds."""
+    import numpy as np
+
+    label = np.arange(n)
+    while True:
+        nxt = label.copy()
+        lo = np.minimum(label[i], label[j])
+        np.minimum.at(nxt, i, lo)
+        np.minimum.at(nxt, j, lo)
+        # A label is always a node of the same component, so following
+        # it to that node's own label never leaves the component.
+        while not np.array_equal(nxt[nxt], nxt):
+            nxt = nxt[nxt]
+        if np.array_equal(nxt, label):
+            return label
+        label = nxt
 
 
 def semantic_dedup(
@@ -1198,15 +1197,34 @@ def semantic_dedup(
     wrong as a scaling default. The quantizer is the IVF one
     (similarity._coarse_quantize): numpy Lloyd on a deterministic
     md5-hash sample capped at ``fit_cap`` vectors, then the FULL corpus
-    assigned in one pass. Components and election run over the
-    pair-touched subset only. Like SemDeDup itself, cross-cell
+    assigned in one pass.
+
+    Pairs are only made inside a cell, so every dedup cluster lies
+    inside one cell (the Odyssey shape: partition by a learned
+    quantizer, then work within each partition). Everything after the
+    assignment is therefore ONE grouped Arrow pass, a single shuffle
+    on the cell carrying (id, vector): per cell, rows sorted by id, a
+    GEMM gives the pairs (:func:`_cell_pairs`), numpy min-label
+    propagation gives components labeled by their min id
+    (:func:`_min_labels`), each row's cosine to its cell centroid is
+    scored against the codebook the kernel closes over (at most
+    ``fit_cap / 2`` rows, so no per-row centroid column rides the
+    shuffle), and the election runs in the same frame. The kernel's
+    state is one cell (cell size x dim plus its pair matrix), bounded
+    by ``target_cell_size``. Like SemDeDup itself, cross-cell
     near-dups are invisible by design — that recall loss is measured
     by the sweep's accuracy hook rather than assumed.
 
     Returns (id, cell, component, centroid_cos, is_canonical) for
     every input vector; ``is_canonical=False`` rows are the prune set.
+    The result is lazy: each action re-runs the assignment and the
+    grouped pass (the quantizer fit is already done).
     """
-    from .similarity import _coarse_quantize, _dot, _norm
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    from .similarity import _coarse_quantize
 
     n = emb.count()
     if n_cells is None:
@@ -1214,52 +1232,51 @@ def semantic_dedup(
     assigned, cent_df = _coarse_quantize(
         emb, n_cells, seed, id_col, vec_col, n=n, fit_cap=fit_cap
     )
-    assigned = assigned.persist()
-    # Cosine of each vector to its own centroid (broadcast dim table).
-    vec, cent = F.col(vec_col), F.col("__centroid")
-    # One interpreted ArrayAggregate tree, not two: CodegenFallback
-    # expressions get no common-subexpression elimination, so the
-    # negated election key derives from the scored column.
-    scored = assigned.join(F.broadcast(cent_df), "__cell").select(
-        F.col(id_col),
-        F.col("__cell"),
-        (_dot(vec, cent) / (_norm(vec) * _norm(cent))).alias("centroid_cos"),
-    ).withColumn("__neg_ccos", -F.col("centroid_cos"))
-    pairs = _cell_pairs_arrow(
-        assigned.select(id_col, vec_col, "__cell"),
-        id_col=id_col, vec_col=vec_col, threshold=threshold,
+    # A local relation: collecting it runs no Spark job.
+    cents = np.array([c for _, c in sorted(cent_df.collect())], dtype=np.float64)
+    id_type = emb.schema[id_col].dataType
+    schema = T.StructType(
+        [
+            T.StructField(id_col, id_type),
+            T.StructField("cell", T.IntegerType()),
+            T.StructField("component", id_type),
+            T.StructField("centroid_cos", T.DoubleType()),
+            T.StructField("is_canonical", T.BooleanType()),
+        ]
     )
-    # Round 10 (guide §1.2/§2.4): election inlined instead of routed
-    # through canonical_survivors — the generic helper projects the
-    # carry columns away, which forced a second full pass over
-    # `scored` (the interpreted ArrayAggregate centroid cosine is the
-    # expensive per-row work) plus a corpus-wide re-join to get
-    # cell/centroid_cos back. Same component labeling, same
-    # (__neg_ccos DESC, id ASC) window election — `is_canonical` is
-    # bit-identical — but scored is computed once and never re-joined.
-    comp = connected_components(pairs.select("id_a", "id_b")).withColumnRenamed(
-        "node", id_col
-    )
-    labeled = scored.select(id_col, "__cell", "centroid_cos", "__neg_ccos").join(
-        comp, id_col, "left"
-    ).withColumn("component", F.coalesce("component", F.col(id_col)))
-    w = Window.partitionBy("component").orderBy(
-        F.col("__neg_ccos").desc(), F.col(id_col)
-    )
-    result = labeled.select(
-        id_col,
-        F.col("__cell").alias("cell"),
-        "component",
-        "centroid_cos",
-        (F.row_number().over(w) == 1).alias("is_canonical"),
-    )
-    # Materialize BEFORE dropping the assignment cache: the returned
-    # plan references `assigned` in two branches, and unpersisting a
-    # still-lazy result would recompute the cell assignment (and the
-    # interpreted centroid cosines) on every downstream action.
-    result = result.localCheckpoint()
-    assigned.unpersist()
-    return result
+
+    def dedup_cell(pdf: pd.DataFrame) -> pd.DataFrame:
+        order = np.argsort(pdf[id_col].to_numpy(), kind="stable")
+        ids = pdf[id_col].to_numpy()[order]
+        x = np.vstack(pdf[vec_col].to_numpy()[order]).astype(np.float64)
+        cell = int(pdf["__cell"].iloc[0])
+        i, j, _ = _cell_pairs(x, threshold)
+        label = _min_labels(len(ids), i, j)
+        # Left-to-right sums, the order the column form's aggregate()
+        # adds in, so centroid_cos is bit-identical to it.
+        c = cents[cell]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            ccos = np.cumsum(x * c, axis=1)[:, -1] / (
+                np.sqrt(np.cumsum(x * x, axis=1)[:, -1])
+                * np.sqrt(np.cumsum(c * c)[-1])
+            )
+        # Per component: lowest centroid_cos first, then lowest id.
+        rank = np.lexsort((ids, ccos, label))
+        first = np.ones(len(ids), dtype=bool)
+        first[1:] = label[rank][1:] != label[rank][:-1]
+        canonical = np.empty(len(ids), dtype=bool)
+        canonical[rank] = first
+        return pd.DataFrame(
+            {
+                id_col: ids,
+                "cell": np.full(len(ids), cell, dtype=np.int32),
+                "component": ids[label],
+                "centroid_cos": ccos,
+                "is_canonical": canonical,
+            }
+        )
+
+    return assigned.groupBy("__cell").applyInPandas(dedup_cell, schema)
 
 
 def duplicate_spans(

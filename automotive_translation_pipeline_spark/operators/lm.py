@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import normalized_text
+from ..sources import local_frame
 
 
 # Same row gate as BIGRAM_BROADCAST_MAX_VOCAB, for the word
@@ -622,8 +623,10 @@ def bpe_train_merges(
         )
     )
     _, merges = _bpe_loop(words, n_merges)
-    return df.sparkSession.createDataFrame(
-        merges, "merge_rank int, left string, right string, pair_count long"
+    return local_frame(
+        df.sparkSession,
+        merges,
+        "merge_rank int, left string, right string, pair_count long",
     )
 
 

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources import local_frame
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -360,7 +362,7 @@ def synth_media(spark, n: int = 64) -> DataFrame:
         else:
             content = mp4_bytes(w, h, dur, payload)
         rows.append((i, mtype, bytearray(content), (w, h, dur, "synthetic")))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def _stub_feature(content: bytes | None, dim: int = FEATURE_DIM) -> list[float]:

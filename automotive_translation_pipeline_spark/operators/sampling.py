@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources import local_frame
+
 #: Buckets for percentage splits: 10_000 gives 0.01% resolution.
 DEFAULT_BUCKETS = 10_000
 
@@ -90,7 +92,8 @@ def mixture_sample(
     corpus shuffle anywhere.
     """
     spark = df.sparkSession
-    shares = spark.createDataFrame(
+    shares = local_frame(
+        spark,
         [(g, float(w)) for g, w in target_shares.items()],
         f"{group_col} string, __share double",
     )

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import normalized_text
+from ..sources import local_frame
 
 
 def build_postings(
@@ -107,7 +108,7 @@ def bm25_candidates(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
         F.sum(F.size("__toks")).cast("double").alias("total_tokens"),
     )
-    qdf = spark.createDataFrame(queries, ["query_id", "qtext"])
+    qdf = local_frame(spark, queries, "query_id long, qtext string")
     qterms = qdf.select(
         "query_id",
         F.explode(F.split(normalized_text(F.col("qtext")), " ")).alias("word"),

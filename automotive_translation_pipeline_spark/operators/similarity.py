@@ -22,6 +22,8 @@ import pandas as pd  # noqa: F401 — resolves pandas_udf type hints at runtime
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources import local_frame
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -310,7 +312,12 @@ def _coarse_quantize(
     all of them): past ``fit_cap / 2`` cells the cap binds.
 
     Returns (corpus as (id, vec, __cell), centroids as
-    (__cell int, __centroid array<double>))."""
+    (__cell int, __centroid array<double>)). The assignment is lazy; the
+    fit is eager (one count if ``n`` is not given, one fit-set collect).
+    The centroid table is built on the driver with ``local_frame``: a
+    local relation, so joining it starts no Python worker and
+    collecting it runs no Spark job (SemDeDup collects it back into the
+    codebook its per-cell kernel closes over)."""
     import numpy as np
 
     from .sampling import hash_sample
@@ -330,8 +337,10 @@ def _coarse_quantize(
     assigned = pq_encode(corpus.select(id_col, vec_col), codebook, vec_col).select(
         id_col, vec_col, F.col("__codes")[0].alias("__cell")
     )
-    cent_df = corpus.sparkSession.createDataFrame(
-        list(enumerate(codebook[0])), "__cell int, __centroid array<double>"
+    cent_df = local_frame(
+        corpus.sparkSession,
+        list(enumerate(codebook[0])),
+        "__cell int, __centroid array<double>",
     )
     return assigned, cent_df
 

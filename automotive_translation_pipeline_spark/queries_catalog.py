@@ -31,7 +31,7 @@ from .operators.aggregates import error_rollup, group_counts
 from .operators.dedup import anti_join_dedup, exact_dedup
 from .operators.packing import assign_batches_cumsum, with_cost
 from .operators.windows import last_wins, sequence_check, shift_flags, topk_recent
-from .sources import load_testdata, scan_ts_pruned
+from .sources import load_testdata, local_frame, scan_ts_pruned
 
 QuerySpec = tuple[Callable[[SparkSession, str], DataFrame], str | None]
 
@@ -102,6 +102,8 @@ _CHANGED_THIS_ROUND = frozenset({
     "dedup_semantic_prune",
     # lazy table resolution (views register on access):
     "agg_grouping_sets",
+    # driver-built tables as Arrow local relations (sources.local_frame):
+    "heavy_hitters_cms",
 })
 
 
@@ -5101,7 +5103,8 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
                 est <= 1.2 * r["exact_count"] + 10,
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "w string, exact_count long, never_undercounts boolean, "
         "within_loose_bound boolean",

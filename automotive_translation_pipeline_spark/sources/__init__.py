@@ -4,6 +4,7 @@ from .pyds import (  # noqa: F401
 )
 from .readers import (  # noqa: F401
     load_testdata,
+    local_frame,
     read_descriptions_csv,
     read_descriptions_dir,
     read_request_jsonl,

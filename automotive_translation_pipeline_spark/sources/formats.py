@@ -24,6 +24,8 @@ from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .readers import local_frame
+
 
 def _warehouse_path(spark: SparkSession, name: str) -> str:
     root = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
@@ -55,7 +57,7 @@ def avro_available(spark: SparkSession) -> bool:
 
     try:
         with tempfile.TemporaryDirectory() as d:
-            spark.createDataFrame([], "probe long").write.format(
+            local_frame(spark, [], "probe long").write.format(
                 "avro"
             ).mode("overwrite").save(f"{d}/probe")
         return True

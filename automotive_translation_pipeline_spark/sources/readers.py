@@ -8,10 +8,11 @@ predicate" and "scan everything then filter" is the whole job.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator, Mapping
+from collections.abc import Iterable, Iterator, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..schemas import BATCH_RESPONSE, DESCRIPTIONS, TESTDATA_TABLES
 
@@ -81,6 +82,39 @@ def read_response_jsonl(spark: SparkSession, path: str) -> DataFrame:
         "error",
         "_corrupt_record",
     )
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable, schema: StructType | str
+) -> DataFrame:
+    """A driver-built table (tuples, dicts or ``Row``s) as a DataFrame.
+
+    Same rows and schema as ``spark.createDataFrame(rows, schema)``,
+    but shipped as one Arrow table, which Spark plans as a
+    ``LocalTableScan``. The list form becomes ``parallelize`` → a
+    ``PythonRDD`` scan, which starts Python-worker tasks every time the
+    plan runs — even when nothing else in the query touches Python.
+
+    Dict rows match the schema by field name, tuples and ``Row``s by
+    position (the ``createDataFrame`` rule). Nested structs may be
+    tuples, ``Row``s or dicts; binary may be ``bytes`` or
+    ``bytearray``. ``schema`` is a ``StructType`` or a DDL string.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    names = struct.fieldNames()
+    records = [[r[n] for n in names] if isinstance(r, dict) else r for r in rows]
+    arrow = to_arrow_schema(struct)
+    table = pa.Table.from_arrays(
+        [
+            pa.array([r[i] for r in records], type=field.type)
+            for i, field in enumerate(arrow)
+        ],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, struct)
 
 
 # Columns that may be written as parquet TIMESTAMP(NANOS), which Spark 4.1

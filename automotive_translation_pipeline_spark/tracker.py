@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from .functions.timeutil import format_unix_ts
 from .ledger import Ledger
+from .sources import local_frame
 
 _LIST_HEADERS = (
     "batch_id",
@@ -102,7 +103,7 @@ def cmd_details(ledger: Ledger, job_id: str) -> None:
     r = row.asDict()
     formatted = (
         _with_formatted_time(
-            ledger.spark.createDataFrame([row], ledger.events().schema)
+            local_frame(ledger.spark, [row], ledger.events().schema)
         )
         .collect()[0]
         .asDict()

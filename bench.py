@@ -536,6 +536,8 @@ def main() -> None:
 
     total = round(sum(per_query.values()), 3)
     sf = sf_tag(SF_DIR)
+    # The same value, of the same type, in the sidecar and the line.
+    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     # ONE-LINE DIET (round 11, VERDICT r10 #2/next-#3): the driver
     # captures only the trailing ~2000 chars of this line, and the
     # round-9 artifact became unparseable because queries_times /
@@ -557,7 +559,7 @@ def main() -> None:
         "accuracy": accuracy,
         "queries_iqr_heavy": per_query_iqr,
         "queries": per_query,
-        "sf": sf,
+        "sf": sf_val,
         "cpus": CPUS,
         "calib_cpu_s": calib,
     }
@@ -590,7 +592,6 @@ def main() -> None:
     # (same suite + harness, data from tools/gen_testdata.py — see
     # SCALE.md "Measured scale-up"); per-query numbers live in the
     # committed files themselves.
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     for committed_sf, fname in ((1.0, "BENCH_sf1.json"),
                                 (3.0, "BENCH_sf3.json")):
         path = os.path.join(here, fname)

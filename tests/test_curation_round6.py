@@ -242,11 +242,14 @@ def test_semantic_dedup_deterministic(spark):
 
 
 def test_cell_pairs_arrow_parity_with_column_form(spark):
-    """The GEMM kernel returns the same pair set and (to 1e-9) the
-    same cosines as the column-expression embedding_near_dup on the
-    same blocks."""
+    """SemDeDup's per-cell pair step (the GEMM in ``_cell_pairs``, run
+    by the grouped Arrow kernel) returns the same pair set and (to
+    5e-5) the same cosines as the column-expression embedding_near_dup
+    on the same blocks."""
+    import numpy as np
+
     from automotive_translation_pipeline_spark.operators.dedup import (
-        _cell_pairs_arrow,
+        _cell_pairs,
         embedding_near_dup,
     )
     from automotive_translation_pipeline_spark.sources import load_testdata
@@ -259,15 +262,18 @@ def test_cell_pairs_arrow_parity_with_column_form(spark):
             blocked, threshold=0.4, block_col="__cell"
         ).collect()
     }
-    arrow_form = {
-        (r["id_a"], r["id_b"]): r["cosine"]
-        for r in _cell_pairs_arrow(
-            blocked.select("vec_id", "embedding", "__cell"),
-            "vec_id", "embedding", 0.4,
-        ).collect()
-    }
-    assert set(arrow_form) == set(col_form)
-    for k, v in arrow_form.items():
+    cells: dict = {}
+    for r in blocked.select("vec_id", "embedding", "__cell").collect():
+        cells.setdefault(r["__cell"], []).append((r["vec_id"], r["embedding"]))
+    gemm_form = {}
+    for members in cells.values():
+        members.sort()  # the kernel sorts each cell by id
+        ids = [v for v, _ in members]
+        x = np.array([e for _, e in members], dtype=np.float64)
+        i, j, cos = _cell_pairs(x, 0.4)
+        gemm_form.update({(ids[a], ids[b]): c for a, b, c in zip(i, j, cos)})
+    assert set(gemm_form) == set(col_form)
+    for k, v in gemm_form.items():
         # column form rounds to 4 digits on output
         assert abs(v - col_form[k]) < 5e-5
 
