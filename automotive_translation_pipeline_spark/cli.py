@@ -209,9 +209,7 @@ def cmd_analyze_batch(
     missing translations, extras (R-15 ``detect_extras``), and the
     R-29 order check — from the request JSONL that created the batch
     plus the response JSONL."""
-    from .functions.parsing import parse_translations
-    from .functions.predicates import is_truncated
-    from .functions.repair import repair_json_udf
+    from .functions.parsing import parse_responses
     from .operators.joins import detect_extras
     from .operators.windows import sequence_check
     from .sources.readers import read_request_jsonl, read_response_jsonl
@@ -235,22 +233,21 @@ def cmd_analyze_batch(
     if resp.isEmpty():
         print(f"[ERROR] {custom_id} not found in {responses_jsonl}")
         return 1
-    effective = F.coalesce(
-        F.when(is_truncated(F.col("content")), repair_json_udf(F.col("content"))),
-        F.col("content"),
+    parsed = (
+        parse_responses(resp)
+        .select(
+            F.col("batch_id").alias("custom_id"),
+            # Each response's rows leave the map in parse order.
+            F.monotonically_increasing_id().alias("pos"),
+            "description_id",
+            "translation",
+        )
+        .persist()
     )
-    parsed = resp.select(
-        "custom_id",
-        F.length("content").alias("content_chars"),
-        F.posexplode(parse_translations(effective)).alias(
-            "pos", "description_id", "translation"
-        ),
-    ).persist()
     n_received = parsed.count()
-    chars = parsed.select("content_chars").first()
+    chars = resp.select(F.length("content")).first()[0] or 0
     print(f"Expected ids:    {n_expected}")
-    print(f"Received ids:    {n_received} "
-          f"(content {chars['content_chars'] if chars else 0} chars)")
+    print(f"Received ids:    {n_received} (content {chars} chars)")
 
     missing = expected.join(
         parsed.select("description_id"), "description_id", "left_anti"

@@ -1,11 +1,5 @@
-from .cleaning import (  # noqa: F401
-    clean_md_aggressive,
-    clean_md_basic,
-    clean_md_multiline,
-    clean_unicode_escapes,
-    strip_numbering,
-)
-from .parsing import fallback_line_parse, parse_translations  # noqa: F401
+from .cleaning import strip_numbering  # noqa: F401
+from .parsing import parse_responses, parse_translations  # noqa: F401
 from .predicates import is_suspicious, is_truncated  # noqa: F401
 from .repair import repair_json_udf  # noqa: F401
 from .text import (  # noqa: F401

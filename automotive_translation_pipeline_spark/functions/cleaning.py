@@ -1,11 +1,9 @@
-"""Markdown/JSON cleanup functions (SURVEY §2.9: F-3..F-6, F-19).
+"""Text cleanup column functions (SURVEY §2.9: F-19) and the Java
+whitespace trims the native predicates share.
 
-All pure column expressions — they stay inside whole-stage codegen, so the
-cleanup cascade runs JVM-side over 100 TB without a Python round trip.
-
-Semantics match the reference's cleanup stack
-(``auto_translate.py:410-487``): four progressively more aggressive
-strategies tried in order by the parse cascade in ``parsing.py``.
+All pure column expressions — they stay inside whole-stage codegen.
+The F-3..F-6 markdown/JSON cleanup ladder is part of the Python parse
+core (``parsing.py``), which runs it once per response.
 """
 
 from __future__ import annotations
@@ -15,88 +13,16 @@ from pyspark.sql import functions as F
 
 
 def ws_trim(c: Column) -> Column:
-    """Python ``str.strip()`` equivalent: trims ALL whitespace (Spark's
-    ``trim`` only strips spaces, which silently diverges from the
-    reference on newline-padded blobs)."""
+    r"""Trim Java ``\s`` whitespace (``[ \t\n\x0b\f\r]``) at both ends.
+    Spark's ``trim`` only strips spaces, which diverges from the
+    reference on newline-padded blobs; unlike ``str.strip()``, NBSP and
+    other Unicode spaces stay (``parsing._ws_trim`` is the Python twin)."""
     return F.regexp_replace(c, r"^\s+|\s+$", "")
 
 
 def ws_rtrim(c: Column) -> Column:
-    """Python ``str.rstrip()`` equivalent."""
+    """Trailing half of :func:`ws_trim`."""
     return F.regexp_replace(c, r"\s+$", "")
-
-
-def clean_md_basic(c: Column) -> Column:
-    """F-3: strip a single leading ```` ```json ````/```` ``` ```` and a
-    trailing fence. Reference: ``auto_translate.py:410-423``."""
-    t = ws_trim(c)
-    t = F.when(t.startswith("```json"), F.substring(t, 8, 2**30)).otherwise(
-        F.when(t.startswith("```"), F.substring(t, 4, 2**30)).otherwise(t)
-    )
-    t = ws_trim(t)
-    t = F.when(t.endswith("```"), t.substr(F.lit(1), F.length(t) - 3)).otherwise(t)
-    return ws_trim(t)
-
-
-def clean_md_aggressive(c: Column) -> Column:
-    """F-4: regex-remove all fences incl. language tags.
-    Reference: ``auto_translate.py:426-440``."""
-    t = F.regexp_replace(ws_trim(c), r"(?m)^```(?:json|javascript|text)?\s*\n?", "")
-    t = F.regexp_replace(t, r"(?m)\n?```\s*$", "")
-    t = F.regexp_replace(t, r"```", "")
-    return ws_trim(t)
-
-
-def clean_md_multiline(c: Column) -> Column:
-    """F-5: keep only non-blank lines *inside* fences; if no fenced lines
-    exist, fall back to F-3. Reference: ``auto_translate.py:443-466``.
-
-    The reference walks lines with an ``in_code_block`` toggle. Here the
-    same state machine is a single linear ``aggregate`` fold over the
-    split lines — (in_block, kept_lines) as the accumulator. (A
-    prefix-count-of-fences formulation with per-line ``slice`` is
-    quadratic in line count and ballooned whole-stage codegen time.)
-    """
-    lines = F.split(c, "\n")
-    kept = F.aggregate(
-        lines,
-        F.struct(
-            F.lit(False).alias("in_block"),
-            F.array().cast("array<string>").alias("acc"),
-        ),
-        lambda st, raw: F.struct(
-            F.when(ws_trim(raw).startswith("```"), ~st["in_block"])
-            .otherwise(st["in_block"])
-            .alias("in_block"),
-            F.when(
-                ~ws_trim(raw).startswith("```")
-                & st["in_block"]
-                & (ws_trim(raw) != ""),
-                F.concat(st["acc"], F.array(ws_trim(raw))),
-            )
-            .otherwise(st["acc"])
-            .alias("acc"),
-        ),
-        lambda st: st["acc"],
-    )
-    return F.when(F.size(kept) > 0, F.array_join(kept, "\n")).otherwise(
-        clean_md_basic(c)
-    )
-
-
-def clean_unicode_escapes(c: Column) -> Column:
-    """F-6: strip stray leading/trailing quotes; heuristically complete
-    braces. Reference: ``auto_translate.py:469-487``."""
-    t = clean_md_basic(c)
-    t = F.regexp_replace(t, r"^\s*['\"]*", "")
-    t = F.regexp_replace(t, r"['\"]*\s*$", "")
-    t = F.when(
-        (~t.startswith("{")) & t.contains(":"), F.concat(F.lit("{"), t)
-    ).otherwise(t)
-    t = F.when(
-        t.startswith("{") & ~t.endswith("}"), F.concat(t, F.lit("}"))
-    ).otherwise(t)
-    return ws_trim(t)
 
 
 def strip_numbering(c: Column) -> Column:

@@ -1,124 +1,14 @@
-"""The parse cascade as a real Python UDTF (SURVEY §2.12).
-
-The native expression cascade (``parsing.parse_translations``) is the
-hot path — it stays in codegen and scales to 100 TB. This module is the
-*extensibility seam*: the same reference semantics
-(``auto_translate.py:490-646``: JSON cascade → line fallback, suspicious
-values dropped, duplicate ids last-wins) expressed as a Spark 4 Python
-UDTF, so one malformed-content row fans out to (id, translation,
-strategy) rows via a LATERAL join. Use it where parse logic needs
-imperative freedom (new salvage strategies, per-call state) that the
-expression tree can't express; Arrow batches the transfer either way.
-
-Parity with the native cascade on the reference's three response
-families is pytest-asserted (tests/test_parsing.py fixtures).
+"""The parse cascade as a Spark 4 Python UDTF (SURVEY §2.12): one blob
+fans out to (description_id, translation, strategy) rows through a
+LATERAL join. Its body is ``parsing.parse_content``, the core that
+``parsing.parse_responses`` runs, so the SQL and DataFrame paths agree.
 """
 
 from __future__ import annotations
 
-import json
-import re
-
 from pyspark.sql.functions import udtf
 
-from .predicates import SUSPICIOUS_TOKENS
-
-_P_JSONISH = re.compile(r'^"?(\d+)"?\s*:\s*"(.+?)",?$')
-_P_TUPLE = re.compile(r"^(\d+)\.\s*\('(\d+)',\s*'(.+?)'\)$")
-_P_NUMBERED = re.compile(r"^(?:desc_)?(\d+)\.\s*(.*)$")
-_P_GENERIC = re.compile(r"^([^.]+)\.\s*(.*)$")
-_FENCE_OPEN = re.compile(r"^```[a-zA-Z]*\s*\n?")
-_FENCE_ANY = re.compile(r"```[a-zA-Z]*")
-
-
-def _suspicious(v: str | None) -> bool:
-    """Python twin of predicates.is_suspicious (auto_translate.py:649-672)."""
-    if v is None:
-        return True
-    t = v.strip()
-    return (
-        t.lower() in SUSPICIOUS_TOKENS
-        or t.startswith(("```", "<", "{", "["))
-        or len(t) < 3
-        or t.isdigit()
-    )
-
-
-def _try_json(s: str) -> dict[str, str] | None:
-    try:
-        obj = json.loads(s)
-    except (json.JSONDecodeError, ValueError):
-        return None
-    if isinstance(obj, dict) and obj:
-        return {str(k): str(v) for k, v in obj.items()}
-    return None
-
-
-def _json_strategies(content: str):
-    """F-3/F-4/F-5/F-6 cleanup ladder, cheapest first."""
-    basic = _FENCE_OPEN.sub("", content.strip())
-    basic = re.sub(r"\n?```\s*$", "", basic).strip()
-    yield "json_basic", basic
-    yield "json_aggressive", _FENCE_ANY.sub("", content).strip()
-    inside, keep = [], False
-    for line in content.splitlines():
-        if line.strip().startswith("```"):
-            keep = not keep
-            continue
-        if keep:
-            inside.append(line)
-    if inside:
-        yield "json_multiline", "\n".join(inside).strip()
-    norm = basic.strip().strip('"').strip()
-    if norm and not norm.startswith("{"):
-        norm = "{" + norm
-    if norm and not norm.endswith("}"):
-        norm = norm + "}"
-    yield "json_normalized", norm
-
-
-def parse_content(content: str | None):
-    """Reference parse semantics → list of (id, translation, strategy).
-
-    Duplicate ids collapse last-wins (dict overwrite, like the
-    reference); suspicious values are dropped.
-    """
-    if content is None or not content.strip():
-        return []
-    for strategy, candidate in _json_strategies(content):
-        parsed = _try_json(candidate)
-        if parsed:
-            kept = {
-                k: v for k, v in parsed.items() if v.strip() and not _suspicious(v)
-            }
-            if kept:
-                return [(k, v, strategy) for k, v in kept.items()]
-    out: dict[str, tuple[str, str]] = {}
-    for line in content.splitlines():
-        line = line.strip()
-        if not line:
-            continue
-        m = _P_JSONISH.match(line)
-        if m:
-            out[m.group(1)] = (m.group(2), "line_fallback")
-            continue
-        m = _P_TUPLE.match(line)
-        if m:
-            out[m.group(2)] = (m.group(3), "line_fallback")
-            continue
-        m = _P_NUMBERED.match(line)
-        if m:
-            out[m.group(1)] = (m.group(2).strip().strip('"').strip("'"), "line_fallback")
-            continue
-        m = _P_GENERIC.match(line)
-        if m:
-            out[m.group(1).strip()] = (
-                m.group(2).strip().strip('"').strip("'"),
-                "line_fallback",
-            )
-    return [
-        (k, v, s) for k, (v, s) in out.items() if v.strip() and not _suspicious(v)
-    ]
+from .parsing import parse_content
 
 
 @udtf(returnType="description_id string, translation string, strategy string")

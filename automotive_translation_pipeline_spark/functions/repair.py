@@ -1,6 +1,5 @@
 """Truncation repair (SURVEY §2.9: F-9..F-13) — the one genuinely
-iterative, parse-validated piece of the stack, implemented as an
-Arrow-vectorized Pandas UDF.
+iterative, parse-validated piece of the stack.
 
 The reference repairs truncated LLM responses by re-fencing, balancing
 braces, and cutting back to the last complete ``"k": "v"`` line, each
@@ -8,8 +7,12 @@ attempt validated with ``json.loads`` (``fix_truncated_content``,
 ``fix_incomplete_json``, ``extract_json_from_markdown``,
 ``attempt_auto_repair``, ``repair_failed_batch`` —
 ``auto_translate.py:700-901``). That try/parse/retry loop is not
-expressible as a Catalyst expression, so it rides the Arrow batch path:
-one Python invocation per ~10k rows, not per row.
+expressible as a Catalyst expression. :func:`repair_content` is the
+first step of the Python parse kernel (``parsing.parse_content``), so the
+flagship repairs and parses each response in one Arrow-batched pass;
+:func:`repair_json_udf` exposes it as a column for the analyze-mode
+classifications. Whatever it rewrites, the native ``is_truncated``
+flags (``tests/test_repair.py``), so it needs no gate in front of it.
 """
 
 from __future__ import annotations
@@ -79,10 +82,11 @@ def repair_content(content: str | None) -> str | None:
 
 @F.pandas_udf(T.StringType())
 def repair_json_udf(content: pd.Series) -> pd.Series:
-    """F-12/F-13 entry point: repaired content string, or None.
+    """F-12/F-13 as a column: the repaired content string, or None.
 
-    Callers compose it as
-    ``coalesce(parse_translations(repair_json_udf(c)), parse_translations(c))``
-    mirroring the reference's repair-first-then-fallback orchestration.
+    The analyze-mode classifications compare
+    ``parse_translations(c)`` with
+    ``parse_translations(coalesce(repair_json_udf(c), c))``; the flagship
+    uses ``parsing.parse_responses``, which does both in one pass.
     """
     return content.map(repair_content)

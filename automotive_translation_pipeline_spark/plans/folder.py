@@ -16,9 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.parsing import parse_translations
-from ..functions.predicates import is_suspicious, is_truncated
-from ..functions.repair import repair_json_udf
+from ..functions.parsing import parse_responses
+from ..functions.predicates import is_suspicious
 from ..operators.joins import rejoin_results
 from ..operators.packing import (
     assign_batches_cumsum,
@@ -67,21 +66,7 @@ def folder_pipeline(
     )
     requests = materialize_requests(assigned)
     responses = translate_fn(requests)
-    repaired = responses.select(
-        F.col("custom_id").alias("batch_id"),
-        F.when(
-            is_truncated(F.col("content")),
-            F.coalesce(repair_json_udf(F.col("content")), F.col("content")),
-        )
-        .otherwise(F.col("content"))
-        .alias("repaired_content"),
-    )
-    parsed = repaired.select(
-        "batch_id",
-        F.explode(parse_translations(F.col("repaired_content"))).alias(
-            "description_id", "translation"
-        ),
-    )
+    parsed = parse_responses(responses).drop("strategy")
     expected = assigned.select(
         "batch_id", "description_id", "english_sentence", "source_stem", "seq"
     )

@@ -7,8 +7,9 @@
 This is the reference's whole ``run_translation_pipeline``
 (``auto_translate.py:1761-1857``) as ONE declarative DataFrame plan:
 Catalyst fuses the scan/filter/projection, the pack is a per-shard
-window, the translate step is the only Python barrier, and everything
-after it is joins/windows/aggregates that AQE sizes at runtime.
+window, translate and the repair+parse kernel are the only Python
+stages (row-local, one Arrow pass each), and everything after them is
+joins/windows/aggregates that AQE sizes at runtime.
 
 Scale shape: shuffles are (1) the pack window on (shard), (2) the
 groupBy(batch_id) materialization, (3) the re-join on
@@ -20,9 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.parsing import parse_translations
-from ..functions.predicates import is_suspicious, is_truncated
-from ..functions.repair import repair_json_udf
+from ..functions.parsing import parse_responses
+from ..functions.predicates import is_suspicious
 from ..operators.aggregates import run_summary
 from ..operators.dedup import anti_join_dedup
 from ..operators.joins import rejoin_results
@@ -45,32 +45,9 @@ def _pack(todo: DataFrame, limit: int) -> DataFrame:
 
 
 def _parse_responses(responses: DataFrame) -> DataFrame:
-    """F-13 → F-7/F-8: repair-then-parse cascade, exploded to rows.
-
-    The repair UDF is materialized in its own projection: Spark's
-    ExtractPythonUDFs then runs it as one Arrow stage, and the native
-    parse cascade (which uses higher-order lambdas) reads its output
-    as a plain attribute — a UDF nested inside a lambda is unsupported.
-    The native is_truncated gate keeps Python off the healthy rows:
-    repair_content() only acts on blobs is_truncated() covers, so
-    gating is exactly semantics-preserving and at scale the Arrow
-    stage sees only the (rare) damaged batches.
-    """
-    repaired = responses.select(
-        F.col("custom_id").alias("batch_id"),
-        F.when(
-            is_truncated(F.col("content")),
-            F.coalesce(repair_json_udf(F.col("content")), F.col("content")),
-        )
-        .otherwise(F.col("content"))
-        .alias("repaired_content"),
-    )
-    return repaired.select(
-        "batch_id",
-        F.explode(parse_translations(F.col("repaired_content"))).alias(
-            "description_id", "translation"
-        ),
-    )
+    """F-13 → F-7/F-8: repair-then-parse in one Arrow-batched Python
+    pass, one (batch_id, description_id, translation) row per parsed id."""
+    return parse_responses(responses).drop("strategy")
 
 
 def _rejoin_and_flag(expected: DataFrame, parsed: DataFrame) -> DataFrame:
@@ -114,10 +91,10 @@ def _translate_docs_held(
     requests = materialize_requests(assigned)
 
     # X-5: the grouped translate map (mock in the harness). persist():
-    # a codegen barrier — without it the parse-cascade trees fuse into
-    # one whole-stage unit with the pack+translate plan and janino
-    # compilation dominates (measured 11x on the sf0.1 flagship; one
-    # row per batch, so the cache is tiny).
+    # the responses are the one paid, per-batch LLM call; every further
+    # action on the result (a count, then a write) re-reads them instead
+    # of calling the translator again. One row per batch, so the cache
+    # is small.
     responses = translate_requests(requests).persist()
     parsed = _parse_responses(responses)
 

@@ -41,7 +41,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # Duplicate ids in one payload collapse last-wins, matching the
+        # Duplicate keys in a map built in SQL collapse last-wins, the
         # reference's dict-overwrite contract (SURVEY R-25).
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -497,25 +497,9 @@ def repair_pass(responses: DataFrame) -> DataFrame:
     """The analyze-mode repair re-run (``auto_translate.py:1339-1396``)
     as a batch transform suitable for ``foreachBatch``: take stored
     responses, re-parse with repair, emit recovered rows."""
-    from ..functions.parsing import parse_translations
-    from ..functions.predicates import is_truncated
-    from ..functions.repair import repair_json_udf
+    from ..functions.parsing import parse_responses
 
-    repaired = responses.select(
-        "custom_id",
-        F.when(
-            is_truncated(F.col("content")),
-            F.coalesce(repair_json_udf(F.col("content")), F.col("content")),
-        )
-        .otherwise(F.col("content"))
-        .alias("repaired"),
-    )
-    return repaired.select(
-        F.col("custom_id").alias("batch_id"),
-        F.explode(parse_translations(F.col("repaired"))).alias(
-            "description_id", "translation"
-        ),
-    )
+    return parse_responses(responses).drop("strategy")
 
 
 def enrich_with_dimension(

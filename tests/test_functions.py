@@ -6,10 +6,12 @@ import pyspark.sql.functions as F
 import pytest
 
 from automotive_translation_pipeline_spark.functions.cleaning import (
-    clean_md_aggressive,
-    clean_md_basic,
-    clean_md_multiline,
     strip_numbering,
+)
+from automotive_translation_pipeline_spark.functions.parsing import (
+    md_aggressive,
+    md_basic,
+    md_multiline,
 )
 from automotive_translation_pipeline_spark.functions.predicates import (
     is_suspicious,
@@ -29,20 +31,23 @@ def _one(spark, expr_fn, value):
     return df.select(expr_fn(F.col("v")).alias("out")).first()["out"]
 
 
-def test_clean_md_basic(spark):
-    assert _one(spark, clean_md_basic, '```json\n{"a": "b"}\n```') == '{"a": "b"}'
-    assert _one(spark, clean_md_basic, '```\nxyz\n```') == "xyz"
-    assert _one(spark, clean_md_basic, "no fences") == "no fences"
+# The F-3..F-5 cleanup rungs live in the Python parse core.
 
 
-def test_clean_md_aggressive(spark):
+def test_clean_md_basic():
+    assert md_basic('```json\n{"a": "b"}\n```') == '{"a": "b"}'
+    assert md_basic('```\nxyz\n```') == "xyz"
+    assert md_basic("no fences") == "no fences"
+
+
+def test_clean_md_aggressive():
     blob = "```javascript\ncode here\n```"
-    assert _one(spark, clean_md_aggressive, blob) == "code here"
+    assert md_aggressive(blob) == "code here"
 
 
-def test_clean_md_multiline(spark):
+def test_clean_md_multiline():
     blob = 'prefix noise\n```\n{"a": "b"}\n{"c": "d"}\n```\nsuffix'
-    assert _one(spark, clean_md_multiline, blob) == '{"a": "b"}\n{"c": "d"}'
+    assert md_multiline(blob) == '{"a": "b"}\n{"c": "d"}'
 
 
 def test_strip_numbering(spark):

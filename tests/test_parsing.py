@@ -1,15 +1,37 @@
 """Parse-cascade tests over the reference's three response format
 families (testing/test_parsing.py:104-136) plus the cleanup strategies.
+
+``fixtures/parse_golden.jsonl`` pins the cascade's semantics: one line
+per blob (``family``, ``blob``, ``map`` as ordered [id, translation]
+pairs, ``strategy``), written by the engine's earlier native cascade
+(Spark ``from_json`` ladders and Java-regex line parsing). Families:
+``mock:<format>`` (the mock's four formats, ``:repaired`` where repair
+applies), ``div:<case>`` (where that cascade and plain ``json.loads``
+semantics part ways), ``edge`` and seeded ``fuzz`` mutations.
 """
 
 from __future__ import annotations
 
+import json
+from pathlib import Path
+
 import pyspark.sql.functions as F
 
 from automotive_translation_pipeline_spark.functions.parsing import (
+    STRATEGIES,
+    parse_content,
+    parse_map,
+    parse_responses,
     parse_strategy,
     parse_translations,
 )
+
+GOLDEN = Path(__file__).parent / "fixtures" / "parse_golden.jsonl"
+
+
+def _golden() -> list[dict]:
+    with GOLDEN.open(encoding="utf-8") as fh:
+        return [json.loads(line) for line in fh]
 
 # The three reference formats (testing/test_parsing.py) with Telugu-like
 # payloads, plus edge cases.
@@ -93,9 +115,9 @@ def test_fence_skip_lines(spark):
 
 
 def test_udtf_parity_with_native_cascade(spark):
-    """The Python UDTF and the native expression cascade agree on every
-    reference response family (the UDTF is the extensibility seam; the
-    cascade is the hot path — they must not drift)."""
+    """The SQL UDTF and the column function agree on every reference
+    response family (both wrap the one Python core; they must not
+    drift)."""
     from automotive_translation_pipeline_spark.functions.parse_udtf import (
         register_parse_udtf,
     )
@@ -130,3 +152,100 @@ def test_udtf_empty_and_garbage_yield_no_rows(spark):
     assert parse_content("{broken json") == []
     # suspicious-only payload: values all blocklisted/short
     assert parse_content('{"1": "ok", "2": "null"}') == []
+
+
+def test_golden_corpus_covers_families_and_strategies():
+    rows = _golden()
+    families = {r["family"] for r in rows}
+    for fmt in ("clean_json", "fenced_json", "truncated_json", "numbered_lines"):
+        assert f"mock:{fmt}" in families
+    assert "mock:truncated_json:repaired" in families
+    for case in ("single_quoted_keys", "trailing_text", "true",
+                 "trailing_comma_lines", "python_fence",
+                 "suspicious_then_line", "nbsp"):
+        assert f"div:{case}" in families
+    assert {r["strategy"] for r in rows} == set(STRATEGIES)
+
+
+def test_core_matches_golden_corpus():
+    bad = [
+        (r["family"], r["blob"])
+        for r in _golden()
+        if parse_map(r["blob"]) != (r["strategy"], [tuple(e) for e in r["map"]])
+    ]
+    assert bad == []
+
+
+def test_column_udfs_match_golden_corpus(spark):
+    rows = _golden()
+    df = spark.createDataFrame(
+        [(i, r["blob"]) for i, r in enumerate(rows)], "i int, content string"
+    )
+    got = df.select(
+        "i",
+        F.map_entries(parse_translations(F.col("content"))).alias("m"),
+        parse_strategy(F.col("content")).alias("s"),
+    ).collect()
+    bad = [
+        g["i"]
+        for g in got
+        if ([[k, v] for k, v in g["m"]], g["s"])
+        != (rows[g["i"]]["map"], rows[g["i"]]["strategy"])
+    ]
+    assert len(got) == len(rows) and bad == []
+
+
+def test_parse_responses_matches_gated_composition(spark):
+    """The one-pass operator equals what it replaced: gate on the native
+    is_truncated, repair, then explode the parse, with the strategy of
+    the content actually parsed."""
+    from automotive_translation_pipeline_spark.functions.predicates import (
+        is_truncated,
+    )
+    from automotive_translation_pipeline_spark.functions.repair import (
+        repair_json_udf,
+    )
+
+    rows = _golden()
+    df = spark.createDataFrame(
+        [(f"b{i}", r["blob"]) for i, r in enumerate(rows)],
+        "custom_id string, content string",
+    )
+    c = F.col("content")
+    gated = df.select(
+        "custom_id",
+        F.when(is_truncated(c), F.coalesce(repair_json_udf(c), c))
+        .otherwise(c)
+        .alias("c"),
+    )
+    old = gated.select(
+        "custom_id",
+        parse_strategy(F.col("c")).alias("s"),
+        F.explode(parse_translations(F.col("c"))).alias("k", "v"),
+    ).collect()
+    new = parse_responses(df).collect()
+    assert sorted(tuple(r) for r in new) == sorted(
+        (r["custom_id"], r["k"], r["v"], r["s"]) for r in old
+    )
+    assert len(new) == sum(len(parse_content(r["blob"])) for r in rows) > 1000
+
+
+# Kept different from the native cascade, on purpose. Neither shape can
+# come out of the mock's four response formats (string values, depth 2).
+
+
+def test_kept_different_subnormal_float():
+    """Java 17's ``Double.toString`` prints the smallest subnormal as
+    ``4.9E-324``; the core prints the shortest round-trip digits."""
+    assert parse_map('{"21": 5e-324}') == ("json_basic", [("21", "5.0E-324")])
+
+
+def test_kept_different_nesting_past_512_levels():
+    """Jackson parses up to 1000 nesting levels. Python's stack does not
+    reliably reach that far, so past 512 the core calls it malformed."""
+    deep = '{"21": ' + "[" * 600 + "]" * 600 + ', "22": "deep value"}'
+    assert parse_map(deep) == ("unparseable", [])
+    shallow = deep.replace("[" * 600, "[" * 500).replace("]" * 600, "]" * 500)
+    assert parse_map(shallow) == ("json_basic", [("22", "deep value")])
+    mock = [r["blob"] for r in _golden() if r["family"].startswith("mock")]
+    assert not any("e-3" in b.lower() or b.count("[") > 512 for b in mock)

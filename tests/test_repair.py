@@ -66,3 +66,57 @@ def test_truncation_predicate(spark):
     # failure, so the false positive is harmless there — and we
     # replicate it exactly.
     assert got == [True, True, False, True]
+
+
+def _gate_corpus() -> list[str]:
+    """Mock responses in every format (with and without planted extras),
+    seeded mutations of them, and the parse golden corpus's mock and
+    fuzz blobs."""
+    import random
+    from pathlib import Path
+
+    from automotive_translation_pipeline_spark.translate import (
+        render_mock_content,
+        render_mock_content_with_extras,
+    )
+
+    rnd = random.Random(606)
+    words = ["engine", "brake", "coolant", "it's", 'the "main"', "2.5 mm",
+             "మోటారు", "తనిఖీ", "{x}", "a\\b", "ok."]
+    mocks = []
+    for i in range(200):
+        payload = {
+            str(rnd.randrange(10**6)): " ".join(rnd.choices(words, k=rnd.randrange(1, 6)))
+            for _ in range(rnd.randrange(1, 12))
+        }
+        render = render_mock_content if i % 2 else render_mock_content_with_extras
+        mocks.append(render(payload, f"batch-{i:04d}"))
+    noise = ['{', '}', '"', ',', "```", "```json", "\n", " ", " ", "'", "]"]
+    fuzz = []
+    for _ in range(600):
+        b = rnd.choice(mocks)
+        for _ in range(rnd.randrange(1, 4)):
+            p = rnd.randrange(len(b) + 1)
+            b = rnd.choice([b[:p], b[:p] + rnd.choice(noise) + b[p:], b[:p] + b[p + 3:]])
+        fuzz.append(b)
+    golden = Path(__file__).parent / "fixtures" / "parse_golden.jsonl"
+    with golden.open(encoding="utf-8") as fh:
+        rows = [json.loads(line) for line in fh]
+    kept = [r["blob"] for r in rows if r["family"].startswith(("mock", "fuzz"))]
+    return mocks + fuzz + kept
+
+
+def test_repair_implies_truncated_gate(spark):
+    """Whatever repair_content rewrites, the native is_truncated flags:
+    so running repair on every response (the parse kernel does) gives
+    the same content as gating it on is_truncated (the composition it
+    replaced)."""
+    blobs = _gate_corpus()
+    df = spark.createDataFrame(list(enumerate(blobs)), "i int, content string")
+    flagged = {
+        r["i"]: r["t"]
+        for r in df.select("i", is_truncated(F.col("content")).alias("t")).collect()
+    }
+    repaired = [i for i, b in enumerate(blobs) if repair_content(b) is not None]
+    assert len(repaired) >= 100  # the property is not vacuous
+    assert [i for i in repaired if not flagged[i]] == []
