@@ -290,6 +290,7 @@ def cmd_batch(
     spark: SparkSession, input_dir: str, language: str, output_dir: str
 ) -> None:
     """§3.3 folder orchestrator: one job, per-stem outputs + summary."""
+    from .operators.joins import FAILED_SENTINEL
     from .plans.folder import folder_pipeline
 
     print(f"Processing folder {input_dir} -> {language} -> {output_dir}")
@@ -305,7 +306,7 @@ def cmd_batch(
     # job-per-file loop.
     out.withColumn(
         "translated_sentence",
-        F.coalesce(F.col("translated_sentence"), F.lit("[TRANSLATION_FAILED]")),
+        F.coalesce(F.col("translated_sentence"), F.lit(FAILED_SENTINEL)),
     ).write.mode("overwrite").option("header", True).partitionBy(
         "source_stem"
     ).csv(output_dir)

@@ -150,18 +150,9 @@ def equidepth_histogram(
     from .indexing import with_global_index
 
     order = [value_col, *tiebreak_cols]
-    # Round 10 MEASURED NEGATIVE RESULT: with_global_index(
-    # materialize=True) — an eager localCheckpoint of the numbered
-    # stream so the offsets/total/binning consumers stop duplicating
-    # the range-exchange subtree — LOST to this lazy form in warmed
-    # same-session alternation at sf0.1 (min 1.49 vs 1.30 s, new
-    # slower every round). The initial plan's four range exchanges
-    # are canonically identical, so AQE stage reuse already collapses
-    # them to ONE shuffle write + four reads at runtime; the blocking
-    # checkpoint replaces cheap shuffle re-reads with a
-    # materialization. Kept lazy; the materialize option remains on
-    # with_global_index (parity-tested) for callers whose upstream is
-    # NOT a reusable exchange.
+    # Kept lazy: the offsets, total and binning consumers each re-read
+    # the range exchange, but the four copies are canonically
+    # identical, so AQE stage reuse runs ONE shuffle write + four reads.
     indexed = with_global_index(
         df.select(*order), order, index_col="__idx", start=0
     )

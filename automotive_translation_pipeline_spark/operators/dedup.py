@@ -48,25 +48,6 @@ def exact_dedup(
     )
 
 
-def minhash_signature(text: Column, num_hashes: int = 16, k: int = 3) -> Column:
-    """MinHash signature as an array of per-seed minima over k-word
-    shingles. Uses lexicographic min of md5(seed||shingle) — a valid
-    min-wise hash family that both Spark and the DuckDB oracle compute
-    identically (portable, unlike xxhash64)."""
-    shingles = word_shingles(text, k)
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    shingles,
-                    lambda s: F.md5(F.concat(F.lit(f"{i}:"), s).cast("binary")),  # noqa: B023
-                )
-            )
-            for i in range(num_hashes)
-        ]
-    )
-
-
 _MERSENNE31 = 2_147_483_647  # 2^31 - 1, the affine family's modulus
 
 
@@ -93,7 +74,6 @@ def lsh_banded_table(
     num_hashes: int = 16,
     bands: int = 4,
     k: int = 3,
-    hash_width: str = "affine",
 ) -> DataFrame:
     """(id, band, bucket) LSH banding table — the shared index shape
     behind ``minhash_lsh_candidates`` (self-join) and
@@ -101,34 +81,17 @@ def lsh_banded_table(
     this IS the persistable dedup index: write it partitioned by band
     and new batches probe it without re-hashing the corpus.
 
-    ``hash_width`` picks the min-wise hash family — all three are
-    valid and engine-portable, but they yield DIFFERENT (equally
-    valid) candidates, so an oracle must replay the matching form:
-
-    * ``"hex"``: lexicographic min of the full md5 hex per seed —
-      the round-1..6 family (oracles now replay affine). Its
-      STRING min aggregates fall to SortAggregate (no fixed-width
-      buffer), which sorts the whole num_hashes-wide exploded stream:
-      ~1 KB/shingle instance at 32 hashes (~80 GB at sf30, exhausted
-      local disk). Fine at <= 16 hashes, wrong beyond.
-    * ``"i60"``: numeric min of the first 60 md5 bits as BIGINT —
-      fixed-width HashAggregate, ~260 B/instance, no sort. Costs one
-      conv() per seed per instance (measured ~1.5x the hex CPU at
-      sf10 — the sort it avoids is cheaper than 32 convs until the
-      sort spills).
-    * ``"affine"``: ONE md5+conv per shingle instance, then
-      h_i = (a_i * base + b_i) mod 2^31-1 derives every seed in
-      codegen-cheap integer ops (Carter-Wegman universal hashing —
-      the standard practical MinHash construction; constants from
-      ``affine_minhash_constants`` so the oracle embeds identical
-      literals). HashAggregate AND ~1/num_hashes of the digest cost —
-      the default: measured sf10/sf30 the hex-16 sort-agg banding ran
-      14.4 s / ~105 s (sort spill super-scales) vs affine near-linear.
+    Min-wise hash family: ONE md5+conv per shingle instance, then
+    h_i = (a_i * base + b_i) mod 2^31-1 derives every seed in
+    codegen-cheap integer ops (Carter-Wegman universal hashing — the
+    standard practical MinHash construction; constants from
+    ``affine_minhash_constants`` so the oracle embeds identical
+    literals). The per-seed minima are fixed-width BIGINTs, so the
+    signature is a HashAggregate, never a sort of the
+    num_hashes-wide exploded stream.
 
     Formulated as explode → per-row hashes → groupBy-min: each shingle
-    is materialized and hashed exactly once. (The array-valued
-    ``minhash_signature`` form re-inlines the whole shingle expression
-    once per seed under projection collapse — measured 10x slower.)
+    is materialized and hashed exactly once.
     Docs shorter than k words produce no shingles and drop out naturally.
     """
     rows_per_band = num_hashes // bands
@@ -159,45 +122,32 @@ def lsh_banded_table(
             F.array_distinct(word_shingles_of(F.col("__wrds"), k))
         ).alias("__sh"),
     )
-    if hash_width == "affine":
-        # One digest per instance; the per-seed values are cheap
-        # integer ops over the staged __b column (a real column, so
-        # the md5+conv run once — CollapseProject keeps non-cheap
-        # aliases referenced many times staged).
-        a_c, b_c = affine_minhash_constants(num_hashes)
-        based = shingled.select(
-            F.col(id_col),
+    # One digest per instance; the per-seed values are cheap integer ops
+    # over the staged __b column (a real column, so the md5+conv run
+    # once — CollapseProject keeps non-cheap aliases referenced many
+    # times staged).
+    a_c, b_c = affine_minhash_constants(num_hashes)
+    based = shingled.select(
+        F.col(id_col),
+        (
+            F.conv(
+                F.substring(F.md5(F.col("__sh").cast("binary")), 1, 15),
+                16,
+                10,
+            ).cast("bigint")
+            % F.lit(_MERSENNE31)
+        ).alias("__b"),
+    )
+    hashed = based.select(
+        id_col,
+        *[
             (
-                F.conv(
-                    F.substring(F.md5(F.col("__sh").cast("binary")), 1, 15),
-                    16,
-                    10,
-                ).cast("bigint")
+                (F.lit(a_c[i]) * F.col("__b") + F.lit(b_c[i]))
                 % F.lit(_MERSENNE31)
-            ).alias("__b"),
-        )
-        hashed = based.select(
-            id_col,
-            *[
-                (
-                    (F.lit(a_c[i]) * F.col("__b") + F.lit(b_c[i]))
-                    % F.lit(_MERSENNE31)
-                ).alias(f"h{i}")
-                for i in range(num_hashes)
-            ],
-        )
-    else:
-
-        def _h(i: int):
-            h = F.md5(F.concat(F.lit(f"{i}:"), F.col("__sh")).cast("binary"))
-            if hash_width == "i60":
-                return F.conv(F.substring(h, 1, 15), 16, 10).cast("bigint")
-            return h
-
-        hashed = shingled.select(
-            id_col,
-            *[_h(i).alias(f"h{i}") for i in range(num_hashes)],
-        )
+            ).alias(f"h{i}")
+            for i in range(num_hashes)
+        ],
+    )
     sig = hashed.groupBy(id_col).agg(
         *[F.min(f"h{i}").alias(f"h{i}") for i in range(num_hashes)]
     )
@@ -255,7 +205,6 @@ def minhash_lsh_candidates(
     bands: int = 4,
     k: int = 3,
     max_bucket: int | None = None,
-    hash_width: str = "affine",
 ) -> DataFrame:
     """MinHash + LSH banding: docs sharing any band bucket become
     candidate pairs (id_a < id_b). The self-join is on the band bucket —
@@ -281,9 +230,7 @@ def minhash_lsh_candidates(
     if {"band", "bucket", id_col} <= set(df.columns):
         banded = df
     else:
-        banded = lsh_banded_table(
-            df, text_col, id_col, num_hashes, bands, k, hash_width
-        )
+        banded = lsh_banded_table(df, text_col, id_col, num_hashes, bands, k)
     # Eager checkpoint before the self-join: banded is TINY (bands
     # rows per doc) but sits on top of the whole scan→shingle→md5→min
     # chain, and the self-join's two sides otherwise each recompute it
@@ -319,9 +266,7 @@ def minhash_lsh_probe(
     num_hashes: int = 16,
     bands: int = 4,
     k: int = 3,
-    broadcast_batch: bool = True,
     max_bucket: int | None = None,
-    hash_width: str = "affine",
 ) -> DataFrame:
     """Incremental dedup probe: near-dup candidates between a NEW batch
     and an already-indexed corpus — the daily-increment shape of a
@@ -332,7 +277,7 @@ def minhash_lsh_probe(
     this is a persisted artifact, written once, partitioned by band —
     pass it pre-computed via ``index_df`` having columns (id, band,
     bucket) and it is used as-is). The batch side is banded fresh and,
-    being increment-sized, broadcast by default — the corpus-side
+    being increment-sized, broadcast — the corpus-side
     table is then probed WITHOUT a shuffle: the only corpus-sized work
     is the banded-table scan. Output: (new_id, index_id) distinct
     candidate pairs, verify with exact Jaccard downstream exactly like
@@ -345,9 +290,7 @@ def minhash_lsh_probe(
     if {"band", "bucket", id_col} <= cols:
         idx = index_df  # pre-built index, used as-is
     else:
-        idx = lsh_banded_table(
-            index_df, text_col, id_col, num_hashes, bands, k, hash_width
-        )
+        idx = lsh_banded_table(index_df, text_col, id_col, num_hashes, bands, k)
         if max_bucket is not None:
             # The cap consumes its input twice (over-cap aggregate +
             # anti-join probe): checkpoint the freshly-built banding so
@@ -360,13 +303,9 @@ def minhash_lsh_probe(
     if {"band", "bucket", id_col} <= set(batch_df.columns):
         probe = batch_df  # already banded (e.g. shared with a self-join)
     else:
-        probe = lsh_banded_table(
-            batch_df, text_col, id_col, num_hashes, bands, k, hash_width
-        )
-    if broadcast_batch:
-        probe = F.broadcast(probe)
+        probe = lsh_banded_table(batch_df, text_col, id_col, num_hashes, bands, k)
     return (
-        probe.alias("n")
+        F.broadcast(probe).alias("n")
         .join(
             idx.alias("i"),
             (F.col("n.band") == F.col("i.band"))
@@ -463,23 +402,22 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     k: int = 3,
     threshold: float = 0.8,
-    exhaustive: bool = False,
     num_hashes: int = 32,
     bands: int = 8,
     max_bucket: int = 1000,
-    hash_width: str = "affine",
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs >= threshold, LSH-blocked.
 
-    Default (scale-safe) form: generate candidate pairs with
-    ``minhash_lsh_candidates`` (banded buckets — cost scales with
-    bucket occupancy, never n², and the banded table is checkpointed
-    once), then compute the EXACT distinct-shingle Jaccard only on
-    candidate pairs and keep those >= threshold. The verification join
-    is two hash joins keyed on id over the candidate stream, so total
-    cost is LSH-bounded — this is the composition the 100 TB mandate
-    requires (the sf3 sweep measured the exhaustive shingle-join at
-    4.8x cost for 3x data; this form rides the linear LSH path).
+    Generate candidate pairs with ``minhash_lsh_candidates`` (banded
+    buckets — cost scales with bucket occupancy, never n², and the
+    banded table is checkpointed once), then compute the EXACT
+    distinct-shingle Jaccard only on candidate pairs and keep those
+    >= threshold. The verification join is two hash joins keyed on id
+    over the candidate stream, so total cost is LSH-bounded — this is
+    the composition the 100 TB mandate requires (an exhaustive
+    shingle self-join grows with the sum of squared shingle
+    frequencies: the sf3 sweep measured it at 4.8x cost for 3x data;
+    this form rides the linear LSH path).
 
     Banding operating point — 32 hashes, 8 bands x 4 rows. Recall is
     the banding curve, not 1.0: a true pair at similarity s is missed
@@ -497,188 +435,59 @@ def ngram_jaccard_pairs(
     short bands. ``max_bucket`` (the stop-bucket cap, see
     ``minhash_lsh_candidates``) stays as the backstop that bounds any
     residual hot bucket at O(max_bucket²).
-    Pass ``exhaustive=True`` for the guaranteed-complete shingle-join
-    form below (corpus-geometry-bound; see its docstring).
     """
-    if not exhaustive:
-        # Checkpoint the candidate pairs: they feed the id prune AND
-        # the verification join, and they are tiny (LSH-bounded) next
-        # to the chain that produced them.
-        cand = minhash_lsh_candidates(
-            df, text_col=text_col, id_col=id_col,
-            num_hashes=num_hashes, bands=bands, k=k,
-            max_bucket=max_bucket, hash_width=hash_width,
-        ).localCheckpoint()
-        ids = (
-            cand.select(F.col("id_a").alias(id_col))
-            .union(cand.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        # Build shingle ARRAYS only for docs that appear in a candidate
-        # pair (semi-join prune BEFORE the shingle projection): the
-        # arrays are the expensive payload of the verify join, and
-        # without the prune every document's array is computed and
-        # shuffled — measured 20 s vs ~8 s warm at sf1.
-        sets = (
-            df.join(ids, id_col, "left_semi")
-            .select(
-                F.col(id_col),
-                F.split(normalized_text(F.col(text_col)), " ").alias(
-                    "__wrds"
-                ),
-            )
-            .select(
-                F.col(id_col),
-                F.array_distinct(
-                    word_shingles_of(F.col("__wrds"), k)
-                ).alias("__sh"),
-            )
-            .filter(F.size("__sh") > 0)
-        )
-        joined = (
-            cand.join(
-                sets.select(
-                    F.col(id_col).alias("id_a"), F.col("__sh").alias("__sa")
-                ),
-                "id_a",
-            )
-            .join(
-                sets.select(
-                    F.col(id_col).alias("id_b"), F.col("__sh").alias("__sb")
-                ),
-                "id_b",
-            )
-        )
-        inter = F.size(F.array_intersect("__sa", "__sb"))
-        # Filter the RAW value, round only the reported column — same
-        # boundary discipline as the exhaustive form / embedding_near_dup.
-        jac_raw = inter.cast("double") / (
-            F.size("__sa") + F.size("__sb") - inter
-        )
-        return (
-            joined.filter(jac_raw >= threshold)
-            .select("id_a", "id_b", F.round(jac_raw, 4).alias("jaccard"))
-        )
-    return ngram_jaccard_pairs_exhaustive(
-        df, text_col=text_col, id_col=id_col, k=k, threshold=threshold
+    # Checkpoint the candidate pairs: they feed the id prune AND the
+    # verification join, and they are tiny (LSH-bounded) next to the
+    # chain that produced them.
+    cand = minhash_lsh_candidates(
+        df, text_col=text_col, id_col=id_col,
+        num_hashes=num_hashes, bands=bands, k=k,
+        max_bucket=max_bucket,
+    ).localCheckpoint()
+    ids = (
+        cand.select(F.col("id_a").alias(id_col))
+        .union(cand.select(F.col("id_b").alias(id_col)))
+        .distinct()
     )
-
-
-def ngram_jaccard_pairs_exhaustive(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """n-gram Jaccard near-dup: explode shingles, join on shingle,
-    |intersection| per pair, Jaccard = inter / (|A|+|B|-inter).
-
-    COMPLETE (up to the hot-shingle guard) but corpus-geometry-bound:
-    the pair stream grows as the sum of squared shingle frequencies —
-    super-linear on fixed-vocabulary corpora (measured 4.8x cost for
-    3x data at sf3). Prefer the default LSH-blocked
-    ``ngram_jaccard_pairs`` at scale; use this form when the banding
-    miss probability is unacceptable.
-
-    The shingle join only pairs docs that share at least one shingle;
-    two lossless prunes keep the pair stream linear-ish on top of the
-    hot-shingle guard:
-
-    * SIZE-RATIO bound inside the join condition: J(A,B) >= t forces
-      min(|A|,|B|) >= t * max(|A|,|B|) (inter <= min and
-      inter >= t*(union)), so shingle matches between size-mismatched
-      docs are dropped at pair GENERATION, before the shuffle — on the
-      sf1 corpus this cuts the pair stream ~3x.
-    * the (n_a, n_b) sizes ride the instance rows into the groupBy
-      keys (they are functions of the ids), so the old two extra
-      size joins after aggregation are gone.
-
-    A PPJoin-style prefix-filter candidate pass was measured WORSE
-    here: with a small vocabulary the rarest-prefix buckets still
-    collide massively (36M candidate rows at sf1 for 87 true pairs,
-    ~100 s wall vs ~15 s for this form), and per-candidate array
-    verification churns GBs of string arrays. Counting join rows with
-    early size pruning is the shape that survives this corpus
-    geometry; measured sf1: 117M raw pair rows -> 42.5M bounded ->
-    37.6M distinct sharing pairs, 21.7 s -> ~15 s wall. The residual
-    cost IS the distinct-pair exchange — corpus-geometry-bound
-    (sum of squared shingle frequencies); on a realistic large-
-    vocabulary corpus frequencies collapse and with them the stream,
-    and the hot-shingle cap bounds the worst case at any scale.
-    """
-    # Same scan-split decoupling as minhash_lsh_candidates: spread the
-    # shingle explode across the cluster, co-partitioned with the
-    # per-doc size aggregation below. persist(): the instance table
-    # feeds sizes, the frequency table, and BOTH join sides —
-    # unpersisted, every consumer re-runs the scan->normalize->shingle
-    # chain.
-    shingled = df.select(F.col(id_col), F.col(text_col)).repartition(
-        F.col(id_col)
-    ).select(
-        F.col(id_col),
-        F.split(normalized_text(F.col(text_col)), " ").alias("__wrds"),
-    ).select(
-        F.col(id_col),
-        F.explode(
-            F.array_distinct(word_shingles_of(F.col("__wrds"), k))
-        ).alias("sh"),
-    ).persist()
-    sizes = shingled.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    # Hot-shingle guard: a shingle shared by a large fraction of docs
-    # creates quadratic pair blowup while carrying no dedup signal.
-    # The cap max(50, 5% of docs) is computed INSIDE the plan (broadcast
-    # scalar) — a driver-side count() here would be a blocking full scan
-    # at plan-build time.
-    doc_count = df.agg(F.count("*").alias("__n_docs"))
-    shingle_freq = shingled.groupBy("sh").agg(F.count("*").alias("df_sh"))
-    rare_shingles = (
-        shingle_freq.crossJoin(F.broadcast(doc_count))
-        .filter(
-            F.col("df_sh")
-            <= F.greatest(F.lit(50), (F.col("__n_docs") * 0.05).cast("long"))
+    # Build shingle ARRAYS only for docs that appear in a candidate
+    # pair (semi-join prune BEFORE the shingle projection): the arrays
+    # are the expensive payload of the verify join, and without the
+    # prune every document's array is computed and shuffled — measured
+    # 20 s vs ~8 s warm at sf1.
+    sets = (
+        df.join(ids, id_col, "left_semi")
+        .select(
+            F.col(id_col),
+            F.split(normalized_text(F.col(text_col)), " ").alias("__wrds"),
         )
-        .select("sh")
-    )
-    # Join ORDER is a plan contract: sizes first (on id — satisfied by
-    # the repartition(id) above, no exchange), THEN the rare filter on
-    # sh — that exchange hash-partitions the instances by sh, which is
-    # exactly the distribution the self-join below needs, so the big
-    # table is shuffled on sh ONCE per side.
-    rare = (
-        shingled.join(sizes, id_col)
-        .join(rare_shingles, "sh")
-        .select(id_col, "sh", "n_sh")
-    )
-    a, b = rare.alias("a"), rare.alias("b")
-    # 1e-9 slack: t * n in floats can land an ulp above the exact
-    # product; the slack only ever admits extra pairs for the exact
-    # filter below to discard.
-    inter = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-            & (
-                F.least(F.col("a.n_sh"), F.col("b.n_sh"))
-                >= F.lit(threshold)
-                * F.greatest(F.col("a.n_sh"), F.col("b.n_sh"))
-                - F.lit(1e-9)
+        .select(
+            F.col(id_col),
+            F.array_distinct(word_shingles_of(F.col("__wrds"), k)).alias(
+                "__sh"
             ),
         )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.n_sh").alias("n_a"),
-            F.col("b.n_sh").alias("n_b"),
-        )
-        .agg(F.count("*").alias("inter"))
+        .filter(F.size("__sh") > 0)
     )
+    joined = (
+        cand.join(
+            sets.select(
+                F.col(id_col).alias("id_a"), F.col("__sh").alias("__sa")
+            ),
+            "id_a",
+        )
+        .join(
+            sets.select(
+                F.col(id_col).alias("id_b"), F.col("__sh").alias("__sb")
+            ),
+            "id_b",
+        )
+    )
+    inter = F.size(F.array_intersect("__sa", "__sb"))
     # Filter the RAW value (the oracle's WHERE is raw), round only the
     # reported column — same boundary discipline as embedding_near_dup.
-    jac_raw = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
+    jac_raw = inter.cast("double") / (F.size("__sa") + F.size("__sb") - inter)
     return (
-        inter.filter(jac_raw >= threshold)
+        joined.filter(jac_raw >= threshold)
         .select("id_a", "id_b", F.round(jac_raw, 4).alias("jaccard"))
     )
 
@@ -875,7 +684,6 @@ def decontaminate(
     id_col: str = "doc_id",
     k: int = 3,
     min_overlap: int = 1,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: flag training documents that share at
     least ``min_overlap`` distinct k-word shingles with ANY eval
@@ -886,9 +694,7 @@ def decontaminate(
     not billions) collapses to a DISTINCT shingle set and broadcasts, so
     the train side is scan → explode → broadcast-hash semi join →
     partial-agg count per doc: the 100 TB corpus never shuffles on
-    shingles. For an eval set too big to broadcast, pass
-    ``broadcast_eval=False`` and the identical plan runs as a shuffle
-    join.
+    shingles.
 
     Returns (id_col, n_shared_shingles) for contaminated train docs.
     """
@@ -903,8 +709,6 @@ def decontaminate(
         )
         .distinct()
     )
-    if broadcast_eval:
-        ev = F.broadcast(ev)
     tr = train.select(
         id_col,
         F.split(normalized_text(F.col(text_col)), " ").alias("__wrds"),
@@ -915,7 +719,7 @@ def decontaminate(
         ).alias("__s"),
     )
     hits = (
-        tr.join(ev, "__s")
+        tr.join(F.broadcast(ev), "__s")
         .groupBy(id_col)
         .agg(F.count("*").cast("long").alias("n_shared_shingles"))
     )

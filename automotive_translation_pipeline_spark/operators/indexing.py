@@ -33,27 +33,9 @@ def with_global_index(
     index_col: str = "global_index",
     start: int = 1,
     num_partitions: int | None = None,
-    materialize: bool = False,
 ) -> DataFrame:
     """Add a dense global row number following ``order_by`` (which must
-    be a total order for a deterministic result).
-
-    ``materialize`` (round 10, guide §2.4): the offsets branch consumes
-    the ranged+numbered stream a SECOND time, and because
-    ``spark_partition_id()`` is non-deterministic the planner cannot
-    reuse the range exchange between the two consumers — each one
-    re-scans and re-range-shuffles the corpus (a caller that also
-    aggregates over the result pays a third/fourth full pass; the
-    equidepth-histogram before plan carried FOUR range exchanges of
-    lineitem). With ``materialize=True`` the numbered stream is
-    localCheckpoint-ed once — every consumer then reads the
-    materialized narrow rows. Costs one corpus-sized (projected
-    columns only) materialization; wins whenever the stream has >= 2
-    consumers, which the offsets join guarantees. Default False keeps
-    the fully-lazy plan for single-downstream callers that prefer
-    pipeline fusion (and for the plan-contract test that asserts the
-    range partitioning is visible in the final plan).
-    """
+    be a total order for a deterministic result)."""
     cols = [F.col(c) for c in order_by]
     ranged = (
         df.repartitionByRange(num_partitions, *cols)
@@ -64,8 +46,6 @@ def with_global_index(
 
     w_local = Window.partitionBy("__pid").orderBy(*cols)
     local = ranged.withColumn("__local_rn", F.row_number().over(w_local))
-    if materialize:
-        local = local.localCheckpoint()
 
     # P-row offset table: rows before each partition. The window runs
     # over P rows total — negligible — and the result broadcasts.

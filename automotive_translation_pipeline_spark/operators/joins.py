@@ -30,25 +30,18 @@ def rejoin_results(
     expected: DataFrame,
     parsed: DataFrame,
     keys: tuple[str, ...] = ("batch_id", "description_id"),
-    translation_col: str = "translation",
-    materialize_sentinel: bool = False,
 ) -> DataFrame:
     """R-13 + R-14: left-join parsed translations back onto the expected
-    rows; missing → NULL (or the reference's in-band sentinel when
-    ``materialize_sentinel``; reference ``auto_translate.py:971-999``).
+    rows; missing → NULL (reference ``auto_translate.py:971-999``). The
+    reference's in-band ``FAILED_SENTINEL`` is applied at the sinks,
+    never inside the engine.
 
     R-14's first-match contract (the reference's ``next(...)`` linear
     scan returns the first hit) is preserved by deduplicating the build
     side on the join keys before joining.
     """
     build = parsed.dropDuplicates(list(keys))
-    out = expected.join(build, list(keys), "left_outer")
-    if materialize_sentinel:
-        out = out.withColumn(
-            translation_col,
-            F.coalesce(F.col(translation_col), F.lit(FAILED_SENTINEL)),
-        )
-    return out
+    return expected.join(build, list(keys), "left_outer")
 
 
 def detect_extras(

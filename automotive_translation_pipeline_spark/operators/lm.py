@@ -36,21 +36,15 @@ from ..sources import local_frame
 # distinct words), so real corpora sit under it at any scale this
 # engine will ever see; the fallback keeps the fp-keyed shuffle-hash
 # join for pathological vocabularies.
-UNIGRAM_BROADCAST_MAX_VOCAB = int(
-    os.environ.get("SPARK_GRAFT_UNIGRAM_BCAST_MAX", str(16_000_000))
-)
+UNIGRAM_BROADCAST_MAX_VOCAB = 16_000_000
 # Byte gate beside the row gate (ADVICE r9): unlike the bigram table's
 # fixed 16-byte (bigint,bigint) rows, the wc build side carries
 # variable-length word STRINGS — a noisy web corpus near the row gate
 # could broadcast 1 GB+ per executor. Estimated bytes = rows ×
 # (2 × avg word chars + ~48 B row overhead), both read off the
-# already-checkpointed wc in one aggregate; default 512 MB keeps the
+# already-checkpointed wc in one aggregate; 512 MB keeps the
 # relation comfortably inside executor memory.
-UNIGRAM_BROADCAST_MAX_BYTES = int(
-    os.environ.get(
-        "SPARK_GRAFT_UNIGRAM_BCAST_MAX_BYTES", str(512 * 1024 * 1024)
-    )
-)
+UNIGRAM_BROADCAST_MAX_BYTES = 512 * 1024 * 1024
 
 
 def unigram_surprisal(
@@ -239,9 +233,7 @@ def split_word_drift(
 # a long time (sf100 = 270M-word corpus = 8.0M distinct bigrams); a
 # true 100 TB vocabulary (~10^10) blows the gate and falls back to the
 # fingerprint-keyed shuffle-hash join, which stays skew-free.
-BIGRAM_BROADCAST_MAX_VOCAB = int(
-    os.environ.get("SPARK_GRAFT_BIGRAM_BCAST_MAX", str(16_000_000))
-)
+BIGRAM_BROADCAST_MAX_VOCAB = 16_000_000
 
 
 def _bigram_fp_check_enabled() -> bool:

@@ -172,7 +172,6 @@ def grouped_quantiles_disc(
     group_cols: list[str],
     value_col: str,
     qs: list[float],
-    tiebreak_cols: list[str] | None = None,
 ) -> DataFrame:
     """EXACT discrete quantiles per group: for each q the element at
     rank ceil(q * n) of the sorted values — an actual data value, no
@@ -192,23 +191,10 @@ def grouped_quantiles_disc(
     it: 3 qs = 3 full sorts). All qs now resolve in ONE pass via an
     array filter; a row can satisfy several qs (tiny groups) and
     yields one output row per matching q, exactly like the old
-    per-q selects. ``tiebreak_cols`` is DEPRECATED and ignored (a
-    DeprecationWarning is raised when passed): tie order among equal
-    values can never change the value at a rank, and only values are
-    returned — it existed for the pre-round-10 row_number form.
+    per-q selects. Tie order among equal values can never change the
+    value at a rank, so no tiebreak key is needed.
     Returns group_cols + (q, value).
     """
-    if tiebreak_cols is not None:
-        import warnings
-
-        warnings.warn(
-            "grouped_quantiles_disc(tiebreak_cols=...) is deprecated and "
-            "ignored: rank selection over the value histogram returns "
-            "values only, so tie order cannot affect the result",
-            DeprecationWarning,
-            stacklevel=2,
-        )
-    del tiebreak_cols
     hist = df.groupBy(
         *group_cols, F.col(value_col).alias("__v")
     ).agg(F.count(F.lit(1)).alias("__c"))

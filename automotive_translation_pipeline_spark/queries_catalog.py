@@ -108,6 +108,8 @@ _CHANGED_THIS_ROUND = frozenset({
     "analyze_error_taxonomy",  # codegen-barrier persist dropped
     "analyze_full_taxonomy",  # codegen-barrier persist dropped
     "parse_udtf_lateral",  # docstring names the real test module
+    # one path per operator (option-selected forks deleted):
+    "dedup_ngram_jaccard",  # docstring + oracle comment drop the exhaustive twin
 })
 
 
@@ -1108,8 +1110,8 @@ _DUCK_SHINGLE_CTE = f"""
 """
 
 
-# Affine min-wise family for every LSH oracle (matches
-# hash_width='affine' in lsh_banded_table): one md5 per shingle
+# Affine min-wise family for every LSH oracle (the one family
+# lsh_banded_table computes): one md5 per shingle
 # reduced to 60 bits, then h_i = (a_i*x + b_i) mod 2^31-1 per seed.
 # Constants inlined as SQL list literals so both engines compute
 # identical buckets.
@@ -1351,7 +1353,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     _DUCK_SHINGLE_CTE
     + f"""
     , base AS (
-        -- affine min-wise family (matches hash_width='affine'):
+        -- affine min-wise family (the one lsh_banded_table computes):
         -- one md5 per shingle, per-seed h_i = (a_i*x + b_i) mod 2^31-1
         SELECT doc_id,
                list_transform(shingles, s ->
@@ -1402,8 +1404,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     for 3x data on the Zipf corpus — see ngram_jaccard_pairs) through
     the max_bucket=1000 stop-bucket backstop, then exact
     distinct-shingle Jaccard verifies each candidate — the scale-safe
-    composition (the exhaustive shingle-join twin is
-    ``ngram_jaccard_pairs(exhaustive=True)``). The oracle replays the
+    composition (an exhaustive shingle self-join grows with the sum of
+    squared shingle frequencies). The oracle replays the
     identical md5 banding INCLUDING the cap (QUALIFY), so parity is
     hash-exact."""
     from .operators.dedup import ngram_jaccard_pairs

@@ -15,6 +15,8 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.joins import FAILED_SENTINEL
+
 
 def write_output_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
     """R-6: final 3-col output CSV.
@@ -25,7 +27,7 @@ def write_output_csv(df: DataFrame, path: str, single_file: bool = False) -> Non
     """
     out = df.withColumn(
         "translated_sentence",
-        F.coalesce(F.col("translated_sentence"), F.lit("[TRANSLATION_FAILED]")),
+        F.coalesce(F.col("translated_sentence"), F.lit(FAILED_SENTINEL)),
     )
     if not single_file:
         out.write.mode("overwrite").option("header", True).csv(path)

@@ -80,15 +80,9 @@ def mock_translate_udf(payload_json: pd.Series, custom_id: pd.Series) -> pd.Seri
 EXTRAS_MOD = 3  # bucket 0 of md5("extras|" + batch_id) gets an extra
 
 
-def extras_bucket(custom_id: Column | str, mod: int = EXTRAS_MOD) -> Column:
-    """Deterministic per-batch extras bucket (Column form). DuckDB twin:
-    ``CAST('0x' || substr(md5('extras|' || id), 1, 8) AS BIGINT) % mod``."""
-    col = F.col(custom_id) if isinstance(custom_id, str) else custom_id
-    hashed = F.md5(F.concat(F.lit("extras|"), col))
-    return F.conv(F.substring(hashed, 1, 8), 16, 10).cast("long") % mod
-
-
 def _extras_bucket_py(custom_id: str, mod: int = EXTRAS_MOD) -> int:
+    """Deterministic per-batch extras bucket. DuckDB twin:
+    ``CAST('0x' || substr(md5('extras|' || id), 1, 8) AS BIGINT) % mod``."""
     return int(
         hashlib.md5(f"extras|{custom_id}".encode()).hexdigest()[:8], 16
     ) % mod

@@ -75,28 +75,80 @@ def test_local_frame_matches_create_dataframe(spark, shape):
     assert _is_single_local_scan(got)
 
 
+def _package_trees():
+    """(path, parsed module) for every ``.py`` file in the package."""
+    for dirpath, _, files in os.walk(os.path.dirname(pkg.__file__)):
+        for name in files:
+            if name.endswith(".py"):
+                path = os.path.join(dirpath, name)
+                with open(path, encoding="utf-8") as fh:
+                    yield path, ast.parse(fh.read())
+
+
 def test_package_builds_local_tables_only_through_local_frame():
     """No package module calls ``createDataFrame`` except the helper
     itself: a list-built DataFrame is a ``PythonRDD`` scan that starts
     Python-worker tasks on every execution."""
     offenders = []
-    for dirpath, _, files in os.walk(os.path.dirname(pkg.__file__)):
-        for name in files:
-            if not name.endswith(".py"):
-                continue
-            path = os.path.join(dirpath, name)
-            with open(path, encoding="utf-8") as fh:
-                tree = ast.parse(fh.read())
-            helper = set()
-            if path.endswith(os.path.join("sources", "readers.py")):
-                for node in ast.walk(tree):
-                    if isinstance(node, ast.FunctionDef) and node.name == "local_frame":
-                        helper = {id(n) for n in ast.walk(node)}
+    for path, tree in _package_trees():
+        helper = set()
+        if path.endswith(os.path.join("sources", "readers.py")):
             for node in ast.walk(tree):
-                if (
-                    isinstance(node, ast.Attribute)
-                    and node.attr == "createDataFrame"
-                    and id(node) not in helper
-                ):
-                    offenders.append(f"{path}:{node.lineno}")
+                if isinstance(node, ast.FunctionDef) and node.name == "local_frame":
+                    helper = {id(n) for n in ast.walk(node)}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "createDataFrame"
+                and id(node) not in helper
+            ):
+                offenders.append(f"{path}:{node.lineno}")
     assert offenders == []
+
+
+# The whole environment surface of the package: the live-transport key,
+# two deployment settings and one opt-in safety check. Operator tuning
+# values are module constants (tests monkeypatch those), not env reads.
+ENV_READS = {
+    "OPENAI_API_KEY",
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_DRIVER_MEM",
+    "SPARK_GRAFT_BIGRAM_FP_CHECK",
+}
+
+
+def _env_key(node):
+    """The key expression of an ``os.environ`` / ``os.getenv`` read at
+    ``node`` (``.get``/``[...]``/``in``), else None."""
+    def is_os(n):
+        return isinstance(n, ast.Name) and n.id == "os"
+
+    def is_environ(n):
+        return isinstance(n, ast.Attribute) and n.attr == "environ" and is_os(n.value)
+
+    if isinstance(node, ast.Call) and node.args and isinstance(node.func, ast.Attribute):
+        f = node.func
+        if is_environ(f.value) or (f.attr == "getenv" and is_os(f.value)):
+            return node.args[0]
+    if isinstance(node, ast.Subscript) and is_environ(node.value):
+        return node.slice
+    if isinstance(node, ast.Compare) and is_environ(node.comparators[-1]):
+        return node.left
+    return None
+
+
+def test_package_reads_only_the_known_env_vars():
+    """Every environment read in the package names a literal key from
+    ``ENV_READS``: no operator grows a hidden knob."""
+    read, offenders = set(), []
+    for path, tree in _package_trees():
+        for node in ast.walk(tree):
+            key = _env_key(node)
+            if key is None:
+                continue
+            if isinstance(key, ast.Constant) and isinstance(key.value, str):
+                read.add(key.value)
+            else:
+                offenders.append(f"{path}:{node.lineno}")
+    assert offenders == []
+    assert read <= ENV_READS, sorted(read - ENV_READS)

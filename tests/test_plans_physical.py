@@ -374,9 +374,8 @@ def test_equidepth_no_global_window(spark, sf_dir):
     the operator exists to avoid. (The plan's only SinglePartition
     exchanges are tiny by construction: the P-row offset table and the
     1-row total-count aggregate. The duplicated range exchanges are
-    canonically identical, so AQE stage reuse runs ONE shuffle write —
-    the round-10 materialize=True variant measured slower; see
-    equidepth_histogram.)"""
+    canonically identical, so AQE stage reuse runs ONE shuffle write;
+    see equidepth_histogram.)"""
     plan = _physical(spark, "profile_equidepth_histogram", sf_dir)
     assert "rangepartitioning" in plan.lower()
     assert plan.lower().count("singlepartition") <= 2

@@ -229,23 +229,3 @@ def test_bpe_loop_counted_parity(spark):
     assert merges_raw == merges_counted
     assert len(merges_raw) == 3
 
-
-def test_global_index_materialize_parity(spark, sf_dir):
-    """materialize=True must number identically to the lazy form."""
-    from automotive_translation_pipeline_spark.operators.indexing import (
-        with_global_index,
-    )
-    from automotive_translation_pipeline_spark.sources import load_testdata
-
-    docs = load_testdata(spark, sf_dir)["documents"].select("doc_id")
-    lazy = {
-        (r.doc_id, r.global_index)
-        for r in with_global_index(docs, order_by=["doc_id"]).collect()
-    }
-    mat = {
-        (r.doc_id, r.global_index)
-        for r in with_global_index(
-            docs, order_by=["doc_id"], materialize=True
-        ).collect()
-    }
-    assert lazy == mat

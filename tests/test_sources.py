@@ -253,15 +253,19 @@ def test_avro_gate_is_loud(spark):
 
     from automotive_translation_pipeline_spark.sources.formats import (
         avro_available,
+        read_avro,
         write_avro,
     )
 
     df = spark.range(3)
     if avro_available(spark):
         write_avro(df, "/tmp/atp-avro-probe")  # real path where jar exists
+        assert read_avro(spark, "/tmp/atp-avro-probe").count() == 3
     else:
         with _pytest.raises(RuntimeError, match="spark-avro"):
             write_avro(df, "/tmp/atp-avro-probe")
+        with _pytest.raises(RuntimeError, match="spark-avro"):
+            read_avro(spark, "/tmp/atp-avro-probe")
 
 
 def test_parquet_schema_evolution_merge(spark, tmp_path):

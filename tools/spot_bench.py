@@ -43,11 +43,12 @@ identical brackets). With an EMPTY override string the legs are
 identical and the instrument degenerates to a stability
 certification: adjacent same-plan runs agreeing within ~10% certify
 that neither was storm-inflated — reproduction, not brackets, is the
-evidence for a multi-minute committed number.
+evidence for a multi-minute committed number. A bare ``--paired``
+runs that form:
 
     python tools/spot_bench.py --sf .testdata/sf100 \
         --only text_bigram_surprisal \
-        --paired SPARK_GRAFT_BIGRAM_BCAST_MAX=0 --rounds 3
+        --paired --rounds 3
 """
 
 from __future__ import annotations
