@@ -52,9 +52,10 @@ _FINAL_TERM = re.compile(r"(?:\r\n|[\n\r\x85\u2028\u2029])\Z")
 
 def _rstrip(s: str, chars: str) -> str:
     """Remove ``[chars]+$``: Java's ``$`` also matches before one final
-    line terminator, so a run ending there goes and the terminator stays."""
+    line terminator, so a run ending there goes and the terminator stays.
+    A terminator is at most two characters, so only the tail is searched."""
     t = s.rstrip(chars)
-    if t != s or not (m := _FINAL_TERM.search(s)):
+    if t != s or not (m := _FINAL_TERM.search(s, max(0, len(s) - 2))):
         return t
     return s[: m.start()].rstrip(chars) + m.group()
 

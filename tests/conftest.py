@@ -6,8 +6,15 @@ from automotive_translation_pipeline_spark.session import get_spark
 
 
 @pytest.fixture(scope="session")
-def spark():
-    s = get_spark(app_name="atp_spark_tests", cpus=8)
+def spark(tmp_path_factory):
+    """The shared session. Its warehouse is a pytest temp directory, so the
+    managed tables tests write leave nothing in the working directory."""
+    warehouse = tmp_path_factory.mktemp("warehouse")
+    s = get_spark(
+        app_name="atp_spark_tests",
+        cpus=8,
+        extra_conf={"spark.sql.warehouse.dir": str(warehouse)},
+    )
     yield s
     s.stop()
 

@@ -249,3 +249,37 @@ def test_kept_different_nesting_past_512_levels():
     assert parse_map(shallow) == ("json_basic", [("22", "deep value")])
     mock = [r["blob"] for r in _golden() if r["family"].startswith("mock")]
     assert not any("e-3" in b.lower() or b.count("[") > 512 for b in mock)
+
+
+def test_rstrip_tail_search_matches_whole_string_search():
+    """``_rstrip`` looks for the final line terminator in the last two
+    characters only; on every short string ending in a Java line
+    terminator it agrees with a search over the whole string."""
+    import itertools
+    import re
+
+    from automotive_translation_pipeline_spark.functions.parsing import (
+        _WS,
+        _rstrip,
+    )
+
+    final = re.compile(r"(?:\r\n|[\n\r\x85\u2028\u2029])\Z")
+
+    def whole_string(s: str, chars: str) -> str:
+        t = s.rstrip(chars)
+        if t != s or not (m := final.search(s)):
+            return t
+        return s[: m.start()].rstrip(chars) + m.group()
+
+    terms = ("\r\n", "\n", "\r", "\x85", "\u2028", "\u2029")
+    alphabet = ("a", " ", "\t", '"', "'", "\r", "\n", "\x85", "\u2028", "\u2029")
+    strings = {""} | {
+        "".join(head) + term
+        for term in terms
+        for k in range(4 - len(term))
+        for head in itertools.product(alphabet, repeat=k)
+    }
+    assert {len(s) for s in strings} == {0, 1, 2, 3}
+    for chars in (_WS, "\"'"):
+        bad = [s for s in strings if _rstrip(s, chars) != whole_string(s, chars)]
+        assert bad == []

@@ -10,7 +10,10 @@ Usage: python tools/check_correctness.py [--sf DIR] [--only name1,name2]
 from __future__ import annotations
 
 import argparse
+import atexit
+import shutil
 import sys
+import tempfile
 import time
 import traceback
 
@@ -87,7 +90,13 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from automotive_translation_pipeline_spark.session import get_spark
 
-    spark = get_spark(cpus=args.cpus)
+    # Managed tables (staging, the ANN index) go to a temporary warehouse
+    # that is removed at exit, so no run leaves state for the next one.
+    warehouse = tempfile.mkdtemp(prefix="check_correctness_warehouse_")
+    atexit.register(shutil.rmtree, warehouse, ignore_errors=True)
+    spark = get_spark(
+        cpus=args.cpus, extra_conf={"spark.sql.warehouse.dir": warehouse}
+    )
     con = duck_conn(args.sf)
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()

@@ -53,7 +53,8 @@ def main() -> None:
 
     spark = get_spark(app_name="atp_pin_baseline", cpus=args.cpus)
     qs = entrymod.queries()
-    # bench.py's exact warm-up: codegen + Python workers compile once.
+    # bench.py's exact warm-up: generated classes compiled into the
+    # session's codegen cache, the JIT warmed, the Python workers started.
     qs["r23_group_by_language"](spark, args.sf).write.format("noop").mode(
         "overwrite"
     ).save()
