@@ -10,7 +10,7 @@ near-dup blocks by LSH bucket before the pairwise check.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import (
@@ -349,9 +349,9 @@ def connected_components(
     neighbor mins) is gone. Convergence detection no longer joins new
     vs old labels either: the self-loop row carries the node's OLD
     label into the same aggregate (min over rows where nbr == node),
-    so "changed" is a plain filter+count over the round's checkpoint —
-    a local scan replaces a shuffle join + count per round, and the
-    detector stays type-generic (ids may be strings).
+    so "changed" is a count observed on the round's checkpoint pass
+    (an ``Observation``) — no join and no job of its own per round,
+    and the detector stays type-generic (ids may be strings).
     min-over-{self ∪ neighbors} of exact values is the identical
     recurrence, so labels (and round count) are bit-identical to the
     two-join form.
@@ -373,6 +373,7 @@ def connected_components(
     labels = labels.localCheckpoint()
     looped = sym.union(labels.select("node", F.col("node").alias("nbr")))
     for _ in range(max_iter):
+        changed = Observation("cc_changed")
         labels = (
             looped.join(
                 labels.select(
@@ -387,10 +388,13 @@ def connected_components(
                     F.when(F.col("nbr") == F.col("node"), F.col("nbr_label"))
                 ).alias("__old"),
             )
+            .observe(
+                changed,
+                F.count(F.when(F.col("label") != F.col("__old"), 1)).alias("n"),
+            )
             .localCheckpoint()
         )
-        changed = labels.filter(F.col("label") != F.col("__old")).count()
-        if changed == 0:
+        if changed.get["n"] == 0:
             break
     sym.unpersist()
     return labels.select("node", F.col("label").alias("component"))

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import normalized_text
@@ -41,9 +41,9 @@ UNIGRAM_BROADCAST_MAX_VOCAB = 16_000_000
 # fixed 16-byte (bigint,bigint) rows, the wc build side carries
 # variable-length word STRINGS — a noisy web corpus near the row gate
 # could broadcast 1 GB+ per executor. Estimated bytes = rows ×
-# (2 × avg word chars + ~48 B row overhead), both read off the
-# already-checkpointed wc in one aggregate; 512 MB keeps the
-# relation comfortably inside executor memory.
+# (2 × avg word chars + ~48 B row overhead), both observed on the
+# pass that checkpoints wc; 512 MB keeps the relation comfortably
+# inside executor memory.
 UNIGRAM_BROADCAST_MAX_BYTES = 512 * 1024 * 1024
 
 
@@ -66,7 +66,9 @@ def unigram_surprisal(
     SIDE EFFECT — eager, frozen counts (round 9): CONSTRUCTING this
     DataFrame runs the corpus word-count aggregate (``localCheckpoint``
     at build time, vocabulary-sized result) so the join strategy can
-    be picked from the known vocabulary size; the counts are FROZEN —
+    be picked from the known vocabulary size. The gate's row and
+    character counts are an ``Observation`` on that same pass, so the
+    build runs no other job. The counts are FROZEN —
     rebuild the DataFrame to re-count (same contract as
     :func:`bigram_surprisal` and DSIR). The freeze is stronger than
     stale probabilities: the pairs side re-reads the LIVE source at
@@ -108,18 +110,24 @@ def unigram_surprisal(
     # Zipf-hot key — and then exchanged again for the doc rollup.
     # Above the gate it falls back to that shuffle-hash join, which is
     # the scale-safe shape for a pathological vocabulary.
-    wc = base.select(exploded).groupBy("word").agg(
-        F.count(F.lit(1)).alias("__wc")
-    ).localCheckpoint()
-    # Both gate legs in ONE aggregate over the checkpointed wc (the
-    # checkpoint makes this bucket-table-cheap): the row gate bounds
+    # Both gate legs are observed on the checkpoint's own pass over wc,
+    # so they cost no job of their own: the row gate bounds
     # driver/executor hash-table entries, the byte gate bounds the
     # actual relation size for variable-length words (ADVICE r9 — a
     # 16M-row vocabulary of long tokens is not 16M × 16 B).
-    stats = wc.agg(
-        F.count(F.lit(1)).alias("__rows"),
-        F.coalesce(F.sum(F.length("word")), F.lit(0)).alias("__chars"),
-    ).first()
+    gate = Observation("unigram_gate")
+    wc = (
+        base.select(exploded)
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("__wc"))
+        .observe(
+            gate,
+            F.count(F.lit(1)).alias("__rows"),
+            F.coalesce(F.sum(F.length("word")), F.lit(0)).alias("__chars"),
+        )
+        .localCheckpoint()
+    )
+    stats = gate.get
     est_bytes = stats["__chars"] * 2 + stats["__rows"] * 48
     if (
         stats["__rows"] <= broadcast_max_vocab
@@ -322,7 +330,8 @@ def bigram_surprisal(
 
     SIDE EFFECT — eager, frozen counts: CONSTRUCTING this DataFrame
     runs the full c12 corpus aggregate (``localCheckpoint`` at
-    build time), unlike the module's lazy operators, and the
+    build time; the gate's vocabulary size is an ``Observation`` on
+    that pass), unlike the module's lazy operators, and the
     checkpointed bigram counts are FROZEN — a plan built once and
     executed later against changed source data keeps the counts from
     construction time. Rebuild the DataFrame to re-count.
@@ -341,13 +350,18 @@ def bigram_surprisal(
     fp = F.xxhash64(F.col("bg.w1"), F.col("bg.w2")).alias("__fp")
     stream = base.select(id_col, bg_cols).select(id_col, fp)
     h1 = F.xxhash64(F.col("bg.w1")).alias("__h1")
+    # The vocabulary size is observed on the checkpoint's own pass, so
+    # the broadcast gate below costs no job of its own.
+    vocab = Observation("bigram_vocab")
     c12 = (
         base.select(bg_cols)
         .select(h1, fp)
         .groupBy("__h1", "__fp")
         .agg(F.count(F.lit(1)).alias("__c12"))
+        .observe(vocab, F.count(F.lit(1)).alias("__rows"))
         .localCheckpoint()
     )
+    n_bigrams = vocab.get["__rows"]
     if _bigram_fp_check_enabled():
         # One extra corpus pass: exact distinct (w1,w2) and w1 counts
         # must equal the hashed table's — an __fp collision merges two
@@ -357,13 +371,12 @@ def bigram_surprisal(
             F.countDistinct("bg.w1", "bg.w2").alias("__nbg"),
             F.countDistinct("bg.w1").alias("__nw1"),
         ).first()
-        got_bg = c12.count()
         got_w1 = c12.select("__h1").distinct().count()
-        if got_bg != exact["__nbg"] or got_w1 != exact["__nw1"]:
+        if n_bigrams != exact["__nbg"] or got_w1 != exact["__nw1"]:
             raise ValueError(
                 "bigram_surprisal: xxhash64 collision on this corpus "
                 f"(distinct bigrams exact={exact['__nbg']} "
-                f"hashed={got_bg}; heads exact={exact['__nw1']} "
+                f"hashed={n_bigrams}; heads exact={exact['__nw1']} "
                 f"hashed={got_w1}) — counts would silently merge; "
                 "use a wider key for this corpus"
             )
@@ -379,9 +392,7 @@ def bigram_surprisal(
             ).alias("__lnp"),
         )
     )
-    # c12 is already materialized (checkpoint above), so the vocab
-    # size is known for free — pick the join strategy on it.
-    if c12.count() <= broadcast_max_vocab:
+    if n_bigrams <= broadcast_max_vocab:
         joined = stream.join(F.broadcast(lnp), "__fp")
     else:
         joined = stream.join(lnp.hint("shuffle_hash"), "__fp")

@@ -117,6 +117,43 @@ def local_frame(
     return spark.createDataFrame(table, struct)
 
 
+# Session confs that change the schema Spark infers from a parquet footer.
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+# (real path, size, mtime ns, *conf values) -> the schema Spark inferred.
+_INFERRED: dict[tuple, StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring each file's schema once.
+
+    Inference is a Spark job (it reads the footer on an executor). The
+    first read of a file runs it and keeps Spark's own ``StructType``;
+    later reads of the same file pass that schema and run no job. The
+    key is the file's identity (real path, size, mtime) and the confs
+    in ``_INFER_CONFS``, so a rewritten file or a changed conf infers
+    afresh. Anything that is not a local regular file (a directory, a
+    remote URI) is inferred on every read. Each call builds a fresh
+    plan.
+    """
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    st = os.stat(path)
+    key = (os.path.realpath(path), st.st_size, st.st_mtime_ns) + tuple(
+        spark.conf.get(k) for k in _INFER_CONFS
+    )
+    schema = _INFERRED.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _INFERRED[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
+
+
 # Columns that may be written as parquet TIMESTAMP(NANOS), which Spark 4.1
 # rejects (PARQUET_TYPE_ILLEGAL) unless the nanosAsLong escape hatch maps
 # them to bigint; `_rebuild_nanos_ts` turns them back into timestamps. The
@@ -188,7 +225,7 @@ def scan_ts_pruned(
     ``>= > <= <``.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{table}.parquet")
     dtypes = dict(df.dtypes)
     for col, op, literal in preds:
         if op not in _RANGE_OPS:
@@ -205,10 +242,12 @@ def scan_ts_pruned(
 class _LazyTables(Mapping):
     """Read-only ``name -> DataFrame`` view of one scale-factor dir.
 
-    Listing the present tables runs no Spark job; a table is read
-    (parquet schema inference: one job), NANOS-rebuilt and registered as
-    a temp view on first access, then memoized, so repeated access
-    within one query returns the same DataFrame. Nothing is shared
+    Listing the present tables runs no Spark job; a table is read,
+    NANOS-rebuilt and registered as a temp view on first access, then
+    memoized, so repeated access within one query returns the same
+    DataFrame. The read infers the file's schema (one job) only the
+    first time the process reads that file (``_read_parquet``); later
+    ``load_testdata`` calls reuse it and run no job. No plan is shared
     across ``load_testdata`` calls: each call builds fresh plans.
     """
 
@@ -228,7 +267,7 @@ class _LazyTables(Mapping):
         if name not in self._resolved:
             if name not in self._names:
                 raise KeyError(name)
-            df = self._spark.read.parquet(f"{self._dir}/{name}.parquet")
+            df = _read_parquet(self._spark, f"{self._dir}/{name}.parquet")
             df = _rebuild_nanos_ts(df, name)
             df.createOrReplaceTempView(name)
             self._resolved[name] = df
@@ -246,7 +285,8 @@ class _LazyTables(Mapping):
 
 def load_testdata(spark: SparkSession, sf_dir: str) -> Mapping[str, DataFrame]:
     """The driver's parquet tables, each read and registered as a temp
-    view on first access (see ``_LazyTables``)."""
+    view on first access (see ``_LazyTables``). Schema inference runs
+    once per file per process, not once per call."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # Engine contract (safe to set on any session the driver hands us):
     spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")

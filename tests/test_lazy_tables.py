@@ -1,6 +1,8 @@
 """``load_testdata`` is a lazy table accessor: creating it lists the
 tables and runs no Spark job; a table is read, NANOS-rebuilt and
-registered as a temp view on first access only."""
+registered as a temp view on first access only. A parquet file's schema
+is inferred once per process and reused while the file and the
+inference confs are unchanged."""
 
 from __future__ import annotations
 
@@ -12,11 +14,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from automotive_translation_pipeline_spark import queries_catalog as qc
+from automotive_translation_pipeline_spark.schemas import TESTDATA_TABLES
 from automotive_translation_pipeline_spark.sources import (
     load_testdata,
     scan_ts_pruned,
     ts_nanos,
 )
+from automotive_translation_pipeline_spark.sources.readers import _read_parquet
 
 
 def _jobs(spark, group, fn):
@@ -97,3 +101,72 @@ def test_nanos_events_range_pushes_raw_nanos_bound(spark, nanos_dir):
     assert f"GreaterThanOrEqual(ts,{ts_nanos(lo)})" in scan
     assert f"LessThan(ts,{ts_nanos(hi)})" in scan
     assert [r.event_id for r in df.collect()] == [2]
+
+
+# --- schema inference runs once per file ------------------------------------
+
+def test_second_load_runs_no_job(spark, sf_dir):
+    load_testdata(spark, sf_dir)["documents"]
+    docs, n = _jobs(spark, "lazy-second", lambda: load_testdata(spark, sf_dir)["documents"])
+    assert n == 0
+    assert docs.count() > 0
+
+
+def _assert_memo_matches_fresh(spark, path):
+    _read_parquet(spark, path)
+    memo, n = _jobs(spark, f"memo-{path}", lambda: _read_parquet(spark, path).schema)
+    assert n == 0
+    assert memo == spark.read.parquet(path).schema
+
+
+@pytest.mark.parametrize("table", TESTDATA_TABLES)
+def test_memoized_schema_equals_inferred(spark, sf_dir, table):
+    load_testdata(spark, sf_dir)  # sets the session confs the package reads with
+    _assert_memo_matches_fresh(spark, f"{sf_dir}/{table}.parquet")
+
+
+def test_memoized_nanos_schema_equals_inferred(spark, nanos_dir):
+    load_testdata(spark, nanos_dir)
+    path = f"{nanos_dir}/events.parquet"
+    _assert_memo_matches_fresh(spark, path)
+    assert dict(_read_parquet(spark, path).dtypes)["ts"] == "bigint"
+    # The memoized read still goes through the NANOS rebuild.
+    assert dict(load_testdata(spark, nanos_dir)["events"].dtypes)["ts"] == "timestamp"
+
+
+def test_rewritten_file_is_inferred_afresh(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": pa.array([1], pa.int64())}), path)
+    assert _read_parquet(spark, path).columns == ["a"]
+    pq.write_table(
+        pa.table({"a": pa.array([1], pa.int64()), "b": pa.array(["x"])}), path
+    )
+    df = _read_parquet(spark, path)
+    assert df.columns == ["a", "b"]
+    assert df.collect()[0].b == "x"
+
+
+def test_infer_conf_change_is_inferred_afresh(spark, tmp_path):
+    # A TIMESTAMP(isAdjustedToUTC=false) column reads as timestamp_ntz
+    # only while inferTimestampNTZ is on.
+    path = str(tmp_path / "ntz.parquet")
+    pq.write_table(pa.table({"ts": pa.array([1_700_000_000_000_000], pa.timestamp("us"))}), path)
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    before = spark.conf.get(key)
+    try:
+        got = {}
+        for flag in ("true", "false", "true"):
+            spark.conf.set(key, flag)
+            _read_parquet(spark, path)  # the memoized read for this conf
+            got[flag] = dict(_read_parquet(spark, path).dtypes)["ts"]
+            assert got[flag] == dict(spark.read.parquet(path).dtypes)["ts"]
+        assert got == {"true": "timestamp_ntz", "false": "timestamp"}
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_second_call_job_budget_tpch_q3(spark, sf_dir):
+    q = qc.queries()["tpch_q3_shipping_priority"]
+    q(spark, sf_dir).toPandas()
+    _, n = _jobs(spark, "budget-q3", lambda: q(spark, sf_dir).toPandas())
+    assert n <= 4

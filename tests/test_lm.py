@@ -3,8 +3,18 @@
 from __future__ import annotations
 
 import math
+import os
 
-from automotive_translation_pipeline_spark.operators.lm import unigram_surprisal
+from pyspark.sql import functions as F
+
+from automotive_translation_pipeline_spark import queries_catalog as qc
+from automotive_translation_pipeline_spark.functions.text import normalized_text
+from automotive_translation_pipeline_spark.operators import lm
+from automotive_translation_pipeline_spark.operators.lm import (
+    bigram_surprisal,
+    unigram_surprisal,
+)
+from automotive_translation_pipeline_spark.sources import load_testdata
 
 
 def _docs(spark, rows):
@@ -64,6 +74,64 @@ def test_deterministic_across_runs(spark):
     a = sorted(unigram_surprisal(df).collect())
     b = sorted(unigram_surprisal(df).collect())
     assert a == b
+
+
+def _recorded_observations(monkeypatch):
+    """Every ``Observation`` the lm module creates, in creation order."""
+    seen = []
+
+    class Recording(lm.Observation):
+        def __init__(self, *a, **k):
+            super().__init__(*a, **k)
+            seen.append(self)
+
+    monkeypatch.setattr(lm, "Observation", Recording)
+    return seen
+
+
+def test_gate_stats_observed_on_the_checkpoint(spark, sf_dir, monkeypatch):
+    # The broadcast gate's (rows, chars) come from an Observation on the
+    # wc checkpoint; they must equal the aggregate the gate used to run.
+    seen = _recorded_observations(monkeypatch)
+    sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    docs = load_testdata(spark, sf001)["documents"]
+    unigram_surprisal(docs)
+    assert len(seen) == 1
+    wc = docs.select(
+        F.explode(F.split(normalized_text(F.col("text")), " ")).alias("word")
+    ).groupBy("word").count()
+    old = wc.agg(
+        F.count(F.lit(1)).alias("__rows"),
+        F.coalesce(F.sum(F.length("word")), F.lit(0)).alias("__chars"),
+    ).first()
+    assert seen[0].get == old.asDict()
+    assert old["__rows"] > 0 and old["__chars"] > 0
+
+
+def test_empty_corpus_gate_observes_zero(spark, monkeypatch):
+    seen = _recorded_observations(monkeypatch)
+    assert unigram_surprisal(_docs(spark, [])).collect() == []
+    assert seen[0].get == {"__rows": 0, "__chars": 0}
+
+
+def test_bigram_gate_observes_vocab_size(spark, monkeypatch):
+    seen = _recorded_observations(monkeypatch)
+    df = _docs(spark, [(1, "a b a b"), (2, "b a c")])
+    out = {r.doc_id: r.n_bigrams for r in bigram_surprisal(df).collect()}
+    assert out == {1: 3, 2: 2}
+    assert seen[0].get == {"__rows": 3}  # (a,b) (b,a) (a,c)
+
+
+def test_second_call_job_budget_unigram(spark, sf_dir):
+    q = qc.queries()["text_unigram_surprisal"]
+    q(spark, sf_dir).toPandas()
+    sc = spark.sparkContext
+    sc.setJobGroup("budget-unigram", "budget-unigram")
+    try:
+        q(spark, sf_dir).toPandas()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("budget-unigram")) <= 9
 
 
 # --- split_word_drift ------------------------------------------------------

@@ -3,6 +3,8 @@
 Runs every __spark_entry__.queries() entry at --sf (default sf0.01),
 runs the matching oracle_sql() in DuckDB over the same parquet files,
 and compares row count, column names, and order-insensitive values.
+Each line ends with the entry's time and the number of Spark jobs the
+entry itself ran (build and collect, not its accuracy hook).
 
 Usage: python tools/check_correctness.py [--sf DIR] [--only name1,name2]
 """
@@ -103,17 +105,29 @@ def main() -> int:
     only = set(args.only.split(",")) if args.only else None
     skip = set(args.skip.split(",")) if args.skip else set()
 
+    sc = spark.sparkContext
     n_pass = n_fail = n_rowsonly = 0
     for name, fn in qs.items():
         if (only and name not in only) or name in skip:
             continue
         t0 = time.time()
+        # The entry's own jobs (build and collect) run under one job
+        # group; the accuracy hook's jobs are not counted.
+        group = f"check_correctness.{name}"
+        sc.setJobGroup(group, name)
         try:
             spark_pdf = fn(spark, args.sf).toPandas()
         except Exception:
             print(f"FAIL  {name}: SPARK ERROR\n{traceback.format_exc()}")
             n_fail += 1
             continue
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+
+        def took() -> str:
+            return f"[{time.time() - t0:.1f}s, {jobs} jobs]"
+
         if name not in oracles:
             # Rows-only by nature — run its bounded accuracy contract
             # (recall / sketch-error / rank-bound) instead of an oracle.
@@ -124,7 +138,7 @@ def main() -> int:
             hook = ACCURACY_CHECKS.get(name)
             if hook is None:
                 print(f"rows  {name}: {len(spark_pdf)} rows (no oracle, "
-                      f"NO ACCURACY HOOK) [{time.time()-t0:.1f}s]")
+                      f"NO ACCURACY HOOK) {took()}")
                 n_rowsonly += 1
                 continue
             try:
@@ -136,7 +150,7 @@ def main() -> int:
                 continue
             verdict = "accuracy PASS" if ok else "ACCURACY FAIL"
             print(f"rows  {name}: {len(spark_pdf)} rows ({verdict}: "
-                  f"{detail}) [{time.time()-t0:.1f}s]")
+                  f"{detail}) {took()}")
             if ok:
                 n_rowsonly += 1
             else:
@@ -150,10 +164,10 @@ def main() -> int:
             continue
         err = compare(spark_pdf, oracle_pdf)
         if err:
-            print(f"FAIL  {name}: {err} [{time.time()-t0:.1f}s]")
+            print(f"FAIL  {name}: {err} {took()}")
             n_fail += 1
         else:
-            print(f"pass  {name}: {len(spark_pdf)} rows [{time.time()-t0:.1f}s]")
+            print(f"pass  {name}: {len(spark_pdf)} rows {took()}")
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail, {n_rowsonly} rows-only")
     spark.stop()
