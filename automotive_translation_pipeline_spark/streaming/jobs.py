@@ -365,6 +365,13 @@ def ledger_state_stream(ledger_events: DataFrame) -> DataFrame:
     and RocksDB is the right provider at scale regardless. Sink must be
     a real sink (file/kafka/foreachBatch) — the memory sink hits the
     same planner bug.
+
+    Every key holds a 24 h processing-time timeout, so under
+    ``trigger(availableNow=True)`` the query does not end when the input
+    is drained: it keeps running empty "cleaning up state" micro-batches
+    until the last timeout fires. ``processAllAvailable()`` does not
+    return either, because each cleanup batch is a new batch. Callers
+    stop the query once its progress shows their input processed.
     """
     spark = ledger_events.sparkSession
     spark.conf.set(

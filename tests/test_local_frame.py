@@ -76,13 +76,15 @@ def test_local_frame_matches_create_dataframe(spark, shape):
 
 
 def _package_trees():
-    """(path, parsed module) for every ``.py`` file in the package."""
-    for dirpath, _, files in os.walk(os.path.dirname(pkg.__file__)):
-        for name in files:
-            if name.endswith(".py"):
-                path = os.path.join(dirpath, name)
-                with open(path, encoding="utf-8") as fh:
-                    yield path, ast.parse(fh.read())
+    """(path, parsed module) for every ``.py`` file in the package, and for
+    the top-level Python-worker module the session runs its workers with."""
+    pkg_dir = os.path.dirname(pkg.__file__)
+    paths = [os.path.join(os.path.dirname(pkg_dir), "pyspark_atp_worker.py")]
+    for dirpath, _, files in os.walk(pkg_dir):
+        paths += [os.path.join(dirpath, n) for n in files if n.endswith(".py")]
+    for path in paths:
+        with open(path, encoding="utf-8") as fh:
+            yield path, ast.parse(fh.read())
 
 
 def test_package_builds_local_tables_only_through_local_frame():

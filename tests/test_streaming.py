@@ -106,7 +106,17 @@ def test_ledger_state_stream(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    # Under availableNow the query keeps running empty state-cleanup
+    # micro-batches until the last 24 h timeout, and processAllAvailable()
+    # waits for them too: stop it once the events are processed.
+    deadline = time.monotonic() + 120
+    try:
+        while sum(p["numInputRows"] for p in q.recentProgress) < len(events):
+            assert q.isActive and time.monotonic() < deadline, q.exception()
+            time.sleep(0.2)
+    finally:
+        q.stop()
+    assert not q.isActive
     rows = spark.read.parquet(out).collect()
     got = {
         (r["prev_status"], r["status"]) for r in rows if r["job_id"] == "batch_a"
