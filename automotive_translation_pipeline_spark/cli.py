@@ -46,14 +46,12 @@ def _todo_from_csv(spark: SparkSession, input_csv: str) -> DataFrame:
     """Scan + R-7 filter/trim, shaped for the pipeline core. One shard:
     a single input file packs sequentially like the reference; the
     folder path shards per file."""
+    from .plans.pipeline import nonempty_trimmed
     from .sources import read_descriptions_csv
 
-    docs = read_descriptions_csv(spark, input_csv)
-    return (
-        docs.filter(F.length(F.trim("english_sentence")) > 0)
-        .withColumn("english_sentence", F.trim("english_sentence"))
-        .withColumn("shard", F.lit("batch"))
-        .withColumn("seq", F.col("description_id").cast("long"))
+    docs = nonempty_trimmed(read_descriptions_csv(spark, input_csv))
+    return docs.withColumn("shard", F.lit("batch")).withColumn(
+        "seq", F.col("description_id").cast("long")
     )
 
 
@@ -62,24 +60,23 @@ def cmd_translate(
 ) -> None:
     """§3.1 main pipeline over one CSV, mock translator (offline)."""
     from .operators.aggregates import observed_run_counters
-    from .plans.pipeline import _translate_docs_held
+    from .plans.pipeline import translating
     from .sources.writers import write_output_csv
 
     print(f"Translating {input_csv} -> {language} -> {output_csv}")
     print("(offline run: deterministic mock translator — plug "
           "OpenAIBatchTransport for the live Batch API)")
-    rows, held = _translate_docs_held(_todo_from_csv(spark, input_csv), limit=4000)
-    out = rows.select(
-        F.col("description_id"),
-        F.col("english_sentence"),
-        F.col("translation").alias("translated_sentence"),
-        "is_failed",
-        "is_suspicious",
-        "shift_suspect",
-    )
-    # R-20 counters ride the sink write (zero extra passes).
-    observed, obs = observed_run_counters(out)
-    try:
+    with translating(_todo_from_csv(spark, input_csv), limit=4000) as rows:
+        out = rows.select(
+            F.col("description_id"),
+            F.col("english_sentence"),
+            F.col("translation").alias("translated_sentence"),
+            "is_failed",
+            "is_suspicious",
+            "shift_suspect",
+        )
+        # R-20 counters ride the sink write (zero extra passes).
+        observed, obs = observed_run_counters(out)
         write_output_csv(
             observed.select(
                 "description_id", "english_sentence", "translated_sentence"
@@ -87,9 +84,6 @@ def cmd_translate(
             output_csv,
             single_file=True,
         )
-    finally:
-        for df in held:
-            df.unpersist()
     m = obs.get
     total, failed = m["total_rows"], m["failed"]
     print(f"\nTotal rows:      {total}")
@@ -291,53 +285,37 @@ def cmd_batch(
 ) -> None:
     """§3.3 folder orchestrator: one job, per-stem outputs + summary."""
     from .operators.joins import FAILED_SENTINEL
-    from .plans.folder import folder_pipeline
+    from .plans.folder import folder_todo, summarize_files
+    from .plans.pipeline import translating
 
     print(f"Processing folder {input_dir} -> {language} -> {output_dir}")
     print("(offline run: deterministic mock translator)")
-    rows = folder_pipeline(spark, input_dir).persist()
-    out = rows.select(
-        "source_stem",
-        "description_id",
-        "english_sentence",
-        F.col("translation").alias("translated_sentence"),
-    )
-    # One partitioned write — per-stem subdirectories, not a
-    # job-per-file loop.
-    out.withColumn(
-        "translated_sentence",
-        F.coalesce(F.col("translated_sentence"), F.lit(FAILED_SENTINEL)),
-    ).write.mode("overwrite").option("header", True).partitionBy(
-        "source_stem"
-    ).csv(output_dir)
-
-    total = F.count("*")
-    failed = F.count(F.when(F.col("is_failed"), 1))
-    summary = (
-        rows.groupBy("source_stem")
-        .agg(
-            total.alias("total_rows"),
-            (total - failed).alias("successful"),
-            failed.alias("failed"),
-            F.round((total - failed) * 100.0 / total, 2).alias("success_pct"),
-            F.countDistinct("batch_id").alias("n_batches"),
-        )
-        .orderBy("source_stem")
-        .collect()
-    )
+    with translating(folder_todo(spark, input_dir)) as rows:
+        # One partitioned write — per-stem subdirectories, not a
+        # job-per-file loop.
+        rows.select(
+            "source_stem",
+            "description_id",
+            "english_sentence",
+            F.coalesce(F.col("translation"), F.lit(FAILED_SENTINEL)).alias(
+                "translated_sentence"
+            ),
+        ).write.mode("overwrite").option("header", True).partitionBy(
+            "source_stem"
+        ).csv(output_dir)
+        summary = summarize_files(rows).orderBy("source_stem").collect()
     print(f"\n{'file':<24} {'rows':>6} {'ok':>6} {'failed':>6} "
           f"{'ok%':>7} {'batches':>8}")
     for r in summary:
         print(
             f"{r['source_stem']:<24} {r['total_rows']:>6} "
             f"{r['successful']:>6} {r['failed']:>6} "
-            f"{r['success_pct']:>7} {r['n_batches']:>8}"
+            f"{r['success_rate_pct']:>7} {r['n_batches']:>8}"
         )
     n_files = len(summary)
     n_failed_rows = sum(r["failed"] for r in summary)
     print(f"\nProcessed {n_files} file(s); {n_failed_rows} failed row(s).")
     print(f"Outputs under {output_dir}/source_stem=<file>/")
-    rows.unpersist()
 
 
 def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> int:

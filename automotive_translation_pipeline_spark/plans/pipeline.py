@@ -11,12 +11,19 @@ window, translate and the repair+parse kernel are the only Python
 stages (row-local, one Arrow pass each), and everything after them is
 joins/windows/aggregates that AQE sizes at runtime.
 
+:func:`_translate` composes that chain once: ``cli translate``, ``cli
+batch`` and the streaming ``foreachBatch`` run it through the
+:func:`translating` scope, the catalog through :func:`translate_docs`.
+
 Scale shape: shuffles are (1) the pack window on (shard), (2) the
 groupBy(batch_id) materialization, (3) the re-join on
 (batch_id, description_id). All key-partitioned; nothing global.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,6 +43,14 @@ from ..sources import load_testdata
 from ..translate import translate_requests
 
 
+def nonempty_trimmed(docs: DataFrame) -> DataFrame:
+    """R-7: drop rows whose ``english_sentence`` is empty after trimming,
+    and trim the rest (reference ``auto_translate.py:267-275``)."""
+    return docs.filter(F.length(F.trim(F.col("english_sentence"))) > 0).withColumn(
+        "english_sentence", F.trim(F.col("english_sentence"))
+    )
+
+
 def _pack(todo: DataFrame, limit: int) -> DataFrame:
     """R-17: token-cost pack (per-shard window)."""
     costed = with_cost(todo, "english_sentence")
@@ -50,9 +65,13 @@ def _parse_responses(responses: DataFrame) -> DataFrame:
     return parse_responses(responses).drop("strategy")
 
 
-def _rejoin_and_flag(expected: DataFrame, parsed: DataFrame) -> DataFrame:
-    """R-13/R-14 + R-10 + R-26/R-27: join back onto expected rows
-    (NULL marks failure) and attach the quality flags."""
+def _rejoin_and_flag(
+    assigned: DataFrame, columns: list[str], parsed: DataFrame
+) -> DataFrame:
+    """R-13/R-14 + R-10 + R-26/R-27: join back onto the expected rows
+    (``batch_id`` plus ``columns`` of ``assigned``; NULL marks failure)
+    and attach the quality flags."""
+    expected = assigned.select("batch_id", *columns)
     joined = rejoin_results(expected, parsed)
     flagged = joined.withColumn(
         "is_failed", F.col("translation").isNull()
@@ -60,26 +79,13 @@ def _rejoin_and_flag(expected: DataFrame, parsed: DataFrame) -> DataFrame:
     return shift_flags(flagged, batch_col="batch_id", order_col="seq")
 
 
-def translate_docs(todo: DataFrame, limit: int = 4000) -> DataFrame:
-    """The reusable pipeline core: pack → translate → parse/repair →
-    re-join → quality flags.
-
-    ``todo`` must carry (description_id, english_sentence, shard, seq)
-    — already filtered and deduplicated. Both the batch flagship and
-    the streaming flagship (streaming/flagship.py, per micro-batch) run
-    exactly this fragment. Callers that own a sink write and must
-    release the persisted intermediates afterwards use
-    :func:`_translate_docs_held`.
-    """
-    return _translate_docs_held(todo, limit)[0]
-
-
-def _translate_docs_held(
-    todo: DataFrame, limit: int = 4000
-) -> tuple[DataFrame, list[DataFrame]]:
-    """:func:`translate_docs` plus the frames it persists. The caller
-    unpersists them once the result has been written; until then the
-    result's plan reads them."""
+def _translate(
+    todo: DataFrame, limit: int, translate_fn
+) -> tuple[DataFrame, tuple[DataFrame, DataFrame]]:
+    """The one composition of the chain; returns the flagged rows and
+    the two frames their plan reads from cache. ``translate_fn`` is the
+    X-5 seam: ``translate_requests`` (mock or live), or a fault-injecting
+    map passed through ``folder_pipeline``."""
     # The batch assignment feeds BOTH the request materialization and
     # the expected-rows join side; unpersisted, Spark recomputes the
     # scan→filter→anti-join→window chain per consumer (4 source scans
@@ -88,20 +94,38 @@ def _translate_docs_held(
     # (auto_translate.py:340,932-935); on a cluster it's a
     # MEMORY_AND_DISK cache or an intermediate table write.
     assigned = _pack(todo, limit).persist()
-    requests = materialize_requests(assigned)
 
     # X-5: the grouped translate map (mock in the harness). persist():
     # the responses are the one paid, per-batch LLM call; every further
     # action on the result (a count, then a write) re-reads them instead
     # of calling the translator again. One row per batch, so the cache
     # is small.
-    responses = translate_requests(requests).persist()
-    parsed = _parse_responses(responses)
+    responses = translate_fn(materialize_requests(assigned)).persist()
+    rows = _rejoin_and_flag(assigned, todo.columns, _parse_responses(responses))
+    return rows, (assigned, responses)
 
-    expected = assigned.select(
-        "batch_id", "description_id", "english_sentence", "seq"
-    )
-    return _rejoin_and_flag(expected, parsed), [assigned, responses]
+
+@contextmanager
+def translating(todo: DataFrame, limit: int = 4000) -> Iterator[DataFrame]:
+    """The pipeline core as a scope: pack → translate → parse/repair →
+    re-join → quality flags. ``todo`` carries (description_id,
+    english_sentence, shard, seq), already filtered and deduplicated;
+    its columns ride through, and batch ids are ``{shard}-N``.
+    The two cached frames are released on exit, also on error, so run
+    every action on the rows inside the ``with``."""
+    rows, held = _translate(todo, limit, translate_requests)
+    try:
+        yield rows
+    finally:
+        for df in held:
+            df.unpersist()
+
+
+def translate_docs(todo: DataFrame, limit: int = 4000) -> DataFrame:
+    """:func:`translating` as a plain lazy DataFrame, for callers that
+    only plan (the catalog, the benchmark): the two cached frames stay
+    in the session's cache until it is cleared."""
+    return _translate(todo, limit, translate_requests)[0]
 
 
 def _stage_table(
@@ -164,11 +188,7 @@ def translate_docs_staged(
     responses = translate_requests(materialize_requests(staged_expected))
     parsed = _parse_responses(responses)
     staged_parsed = _stage_table(spark, parsed, f"{prefix}_parsed", buckets)
-
-    expected = staged_expected.select(
-        "batch_id", "description_id", "english_sentence", "seq"
-    )
-    return _rejoin_and_flag(expected, staged_parsed)
+    return _rejoin_and_flag(staged_expected, todo.columns, staged_parsed)
 
 
 def translation_pipeline(
@@ -197,10 +217,7 @@ def _flagship_todo(spark: SparkSession, sf_dir: str, done_mod: int) -> DataFrame
         F.col("lang").alias("shard"),
         F.col("doc_id").alias("seq"),
     )
-    # R-7: non-empty filter + trim.
-    docs = docs.filter(F.length(F.trim(F.col("english_sentence"))) > 0).withColumn(
-        "english_sentence", F.trim(F.col("english_sentence"))
-    )
+    docs = nonempty_trimmed(docs)
     # R-12: anti-join against the already-done set.
     done = docs.filter(F.col("seq") % done_mod == 0).select("description_id")
     return anti_join_dedup(docs, done)

@@ -11,6 +11,7 @@ Conventions (driver contract):
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -151,16 +152,25 @@ def _driver_history() -> tuple[set[str], set[str], dict[str, int]]:
     return seen, green, last_round
 
 
-def _drifted_names() -> set[str]:
-    """Entries whose (implementation source + oracle SQL) fingerprint
-    differs from the committed round-end snapshot — i.e. versions no
-    CORRECTNESS artifact has verified yet. Same hash recipe as
-    tools/catalog_fingerprints.py (kept in lockstep by
-    tests/test_catalog_fingerprints.py, which diffs through BOTH
-    paths). Missing snapshot -> treat every declared entry as drifted
-    so priority degrades safely."""
+def fingerprints() -> dict[str, str]:
+    """Per-entry hash of (implementation source + oracle SQL): the one
+    recipe behind the committed snapshot (tools/catalog_fingerprints.py
+    writes it) and the drift check below."""
     import hashlib
     import inspect
+
+    out: dict[str, str] = {}
+    for name, (fn, sql) in _REGISTRY.items():
+        blob = inspect.getsource(fn) + "\n----\n" + (sql or "<rows-only>")
+        out[name] = hashlib.sha256(blob.encode()).hexdigest()[:16]
+    return out
+
+
+def _drifted_names() -> set[str]:
+    """Entries whose :func:`fingerprints` differs from the committed
+    round-end snapshot — i.e. versions no CORRECTNESS artifact has
+    verified yet. Missing snapshot -> treat every declared entry as
+    drifted so priority degrades safely."""
     import json
     from pathlib import Path
 
@@ -173,16 +183,13 @@ def _drifted_names() -> set[str]:
         old = json.loads(snap.read_text())
     except (OSError, ValueError):
         return set(_CHANGED_THIS_ROUND)
-    drifted: set[str] = set()
-    for name, (fn, sql) in _REGISTRY.items():
-        blob = inspect.getsource(fn) + "\n----\n" + (sql or "<rows-only>")
-        fp = hashlib.sha256(blob.encode()).hexdigest()[:16]
-        if name in old and old[name] != fp:
-            drifted.add(name)
-    return drifted
+    return {n for n, fp in fingerprints().items() if n in old and old[n] != fp}
 
 
-def _ordered_names() -> list[str]:
+@functools.cache
+def _ordered_names() -> tuple[str, ...]:
+    """The catalog in sampling-priority order, ranked once per process
+    (its inputs are fixed while the package is loaded)."""
     seen, green, last_round = _driver_history()
     drifted = _drifted_names()
 
@@ -203,7 +210,7 @@ def _ordered_names() -> list[str]:
         return (3, last_round.get(name, 0))
 
     # sorted() is stable: registration order is preserved within a rank.
-    return sorted(_REGISTRY, key=rank)
+    return tuple(sorted(_REGISTRY, key=rank))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -2,14 +2,20 @@
 
 CSV files land in a watched folder (the reference's operational reality:
 ``batch_auto_translate`` pointed at a directory); each micro-batch runs
-the SAME ``translate_docs`` fragment as the batch flagship via
-``foreachBatch``, appends row-level results to a parquet sink, and
+the SAME ``plans.pipeline.translating`` fragment as ``cli translate``
+via ``foreachBatch``, appends row-level results to a parquet sink, and
 records per-micro-batch job status in the ledger — submitted on entry,
 completed/failed on exit, exactly the reference's §1.6 state machine.
 
 foreachBatch (not a pure streaming plan) is the right tool here: the
 pack window and the grouped translate UDF need full-micro-batch
-semantics, and results must commit atomically with ledger updates.
+semantics.
+
+Delivery is at-least-once: ``foreachBatch`` replays an uncommitted
+micro-batch, and neither the sink append (not keyed by micro-batch id)
+nor the ledger update commits with the other. A run that dies after a
+micro-batch's write, before its ledger ``completed``, appends the same
+rows again on restart (48 rows for 24 ids in one such test).
 """
 
 from __future__ import annotations
@@ -21,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..ledger import Ledger
-from ..plans.pipeline import _translate_docs_held
+from ..plans.pipeline import nonempty_trimmed, translating
 from ..schemas import DESCRIPTIONS
 
 
@@ -115,11 +121,10 @@ def run_streaming_translation(
                 ]
             )
         try:
-            docs = (
-                batch_df.filter(F.length(F.trim("english_sentence")) > 0)
-                .withColumn("english_sentence", F.trim("english_sentence"))
-                # Shard per micro-batch: batch ids stay unique across
-                # triggers without global coordination.
+            # Shard per micro-batch: batch ids stay unique across
+            # triggers without global coordination.
+            todo = (
+                nonempty_trimmed(batch_df)
                 .withColumn("shard", F.lit(f"mb{micro_batch_id}"))
                 .withColumn(
                     "seq",
@@ -128,8 +133,7 @@ def run_streaming_translation(
                     ),
                 )
             )
-            result, held = _translate_docs_held(docs, limit=limit)
-            try:
+            with translating(todo, limit=limit) as result:
                 result.select(
                     "batch_id",
                     "description_id",
@@ -139,11 +143,6 @@ def run_streaming_translation(
                     "is_suspicious",
                     "shift_suspect",
                 ).write.mode("append").parquet(output_path)
-            finally:
-                # Per micro-batch intermediates: without this every
-                # trigger leaves two cached frames behind.
-                for df in held:
-                    df.unpersist()
             if ledger is not None:
                 ledger.update_status(job_id, "completed", output_file=output_path)
         except Exception:

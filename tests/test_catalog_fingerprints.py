@@ -40,3 +40,17 @@ def test_changed_this_round_names_exist():
     assert _CHANGED_THIS_ROUND <= set(_REGISTRY), (
         "_CHANGED_THIS_ROUND names a query that is not in the catalog"
     )
+
+
+def test_catalog_order_is_ranked_once_and_matches_a_fresh_ranking():
+    """queries()/oracle_sql() reuse one ranking per process; it must be
+    the order a fresh, unmemoized ranking gives."""
+    from automotive_translation_pipeline_spark import queries_catalog as qc
+
+    fresh = qc._ordered_names.__wrapped__()
+    assert qc._ordered_names() == fresh
+    assert qc._ordered_names() is qc._ordered_names()
+    assert tuple(qc.queries()) == fresh
+    assert tuple(qc.oracle_sql()) == tuple(
+        n for n in fresh if qc._REGISTRY[n][1] is not None
+    )

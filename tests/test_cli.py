@@ -7,6 +7,8 @@ from __future__ import annotations
 import csv
 import json
 
+import pytest
+
 from automotive_translation_pipeline_spark import cli
 from automotive_translation_pipeline_spark.translate import (
     mock_translation,
@@ -53,17 +55,53 @@ def test_cli_translate_end_to_end(spark, tmp_path, capsys):
     assert "9" not in by_id
 
 
-def test_cli_translate_releases_persisted_frames(spark, tmp_path):
-    """A translate job leaves no persisted RDD behind: the pipeline's
-    two cached intermediates are released after the sink write, so a
-    long-lived session running many jobs does not accumulate them."""
+def _run_translate(spark, tmp_path):
     src = tmp_path / "in.csv"
     _write_csv(
         src, [(str(i), f"brake pad kit {i} with sensor") for i in range(1, 13)]
     )
+    cli.cmd_translate(spark, str(src), "German", str(tmp_path / "out.csv"))
+
+
+def _run_batch(spark, tmp_path):
+    ind = tmp_path / "csvs"
+    ind.mkdir()
+    _write_csv(ind / "alpha.csv", [(str(i), f"alpha pad {i}") for i in range(1, 7)])
+    _write_csv(ind / "beta.csv", [(str(i), f"beta pad {i}") for i in range(1, 5)])
+    cli.cmd_batch(spark, str(ind), "German", str(tmp_path / "out"))
+
+
+def _run_stream(spark, tmp_path):
+    """One micro-batch of the streaming flagship, run to completion."""
+    from automotive_translation_pipeline_spark.streaming.flagship import (
+        run_streaming_translation,
+    )
+
+    src = tmp_path / "landing"
+    src.mkdir()
+    _write_csv(src / "in.csv", [(f"S{i}", f"stream pad {i}") for i in range(8)])
+    q = run_streaming_translation(
+        spark, str(src), str(tmp_path / "out"), str(tmp_path / "ck")
+    )
+    q.awaitTermination(180)
+    assert q.exception() is None
+    assert [p["batchId"] for p in q.recentProgress if p["numInputRows"]] == [0]
+    assert spark.read.parquet(str(tmp_path / "out")).count() == 8
+
+
+@pytest.mark.parametrize(
+    "run",
+    [_run_translate, _run_batch, _run_stream],
+    ids=["translate", "batch", "stream"],
+)
+def test_cli_translate_releases_persisted_frames(spark, tmp_path, run):
+    """A translate job, a folder job and a streaming micro-batch each
+    leave no persisted RDD behind: the pipeline's two cached
+    intermediates are released after the sink write, so a long-lived
+    session running many jobs does not accumulate them."""
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet().toArray())
-    cli.cmd_translate(spark, str(src), "German", str(tmp_path / "out.csv"))
+    run(spark, tmp_path)
     after = set(jsc.getPersistentRDDs().keySet().toArray())
     assert after - before == set()
 

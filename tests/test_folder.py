@@ -44,6 +44,34 @@ def test_folder_pipeline_lineage(spark, tmp_path):
         .filter(F.col("n_files") > 1)
     )
     assert cross.count() == 0
+    # Batch ids are {stem}-N, each within its own file.
+    assert rows.filter(
+        ~F.col("batch_id").startswith(F.concat("source_stem", F.lit("-")))
+    ).isEmpty()
+    # Shift detection runs per file, like the reference's per-file
+    # pipeline: the flag is on every row and never NULL.
+    assert rows.columns == [
+        "batch_id", "description_id", "english_sentence", "source_stem",
+        "seq", "translation", "is_failed", "is_suspicious", "shift_suspect",
+    ]
+    assert rows.filter(F.col("shift_suspect").isNull()).isEmpty()
+
+    # `cli batch` writes the same rows: per-stem CSVs of 3 columns, with
+    # the stem as the partition directory (4 columns read back).
+    from automotive_translation_pipeline_spark import cli
+
+    out = tmp_path / "out"
+    cli.cmd_batch(spark, d, "German", str(out))
+    back = spark.read.option("header", True).csv(str(out))
+    assert back.columns == [
+        "description_id", "english_sentence", "translated_sentence", "source_stem",
+    ]
+    got = {(r["source_stem"], r["description_id"]) for r in back.collect()}
+    want = {
+        (r["source_stem"], r["description_id"])
+        for r in rows.select("source_stem", "description_id").collect()
+    }
+    assert got == want
 
 
 def test_folder_pipeline_fault_taxonomy(spark, tmp_path):

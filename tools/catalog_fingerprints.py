@@ -2,8 +2,9 @@
 ``queries_catalog._CHANGED_THIS_ROUND``.
 
 Each catalog entry's fingerprint is a hash of its implementation source
-(``inspect.getsource``) plus its oracle SQL. A snapshot of all
-fingerprints is committed at the end of every round
+(``inspect.getsource``) plus its oracle SQL, computed by
+``queries_catalog.fingerprints``, which the catalog's ranking also uses. A
+snapshot of all fingerprints is committed at the end of every round
 (``tools/catalog_fingerprints.json``); during the next round,
 ``tests/test_catalog_fingerprints.py`` diffs the live catalog against
 the snapshot and fails if any drifted query is missing from
@@ -16,8 +17,6 @@ can't go stale silently.
 
 from __future__ import annotations
 
-import hashlib
-import inspect
 import json
 import sys
 from pathlib import Path
@@ -26,14 +25,11 @@ SNAPSHOT = Path(__file__).with_name("catalog_fingerprints.json")
 
 
 def current_fingerprints() -> dict[str, str]:
+    """The live catalog's fingerprints (``queries_catalog.fingerprints``)."""
     sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-    from automotive_translation_pipeline_spark.queries_catalog import _REGISTRY
+    from automotive_translation_pipeline_spark.queries_catalog import fingerprints
 
-    out: dict[str, str] = {}
-    for name, (fn, sql) in _REGISTRY.items():
-        blob = inspect.getsource(fn) + "\n----\n" + (sql or "<rows-only>")
-        out[name] = hashlib.sha256(blob.encode()).hexdigest()[:16]
-    return out
+    return fingerprints()
 
 
 def drift() -> tuple[set[str], set[str]]:

@@ -10,7 +10,7 @@ plus the per-micro-batch cadence from the query's own progress events.
 Two jobs:
 
 - ``flagship``: documents → CSV landing folder → file stream →
-  foreachBatch(translate_docs) → parquet sink + ledger transitions —
+  foreachBatch(pipeline.translating) → parquet sink + ledger transitions —
   the full reference lifecycle (SURVEY §3.1) under streaming delivery.
 - ``incr_dedup``: documents → rate-limited file stream →
   foreachBatch MinHash-band + probe-persisted-LSH-index + append —
