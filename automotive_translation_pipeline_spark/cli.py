@@ -46,13 +46,10 @@ def _todo_from_csv(spark: SparkSession, input_csv: str) -> DataFrame:
     """Scan + R-7 filter/trim, shaped for the pipeline core. One shard:
     a single input file packs sequentially like the reference; the
     folder path shards per file."""
-    from .plans.pipeline import nonempty_trimmed
+    from .plans.pipeline import file_todo
     from .sources import read_descriptions_csv
 
-    docs = nonempty_trimmed(read_descriptions_csv(spark, input_csv))
-    return docs.withColumn("shard", F.lit("batch")).withColumn(
-        "seq", F.col("description_id").cast("long")
-    )
+    return file_todo(read_descriptions_csv(spark, input_csv), F.lit("batch"))
 
 
 def cmd_translate(
@@ -217,67 +214,72 @@ def cmd_analyze_batch(
             "exp_pos", "description_id", "english_sentence"
         )
     ).persist()
-    n_expected = expected.count()
-    if n_expected == 0:
-        print(f"[ERROR] {custom_id} not found in {requests_jsonl}")
-        return 1
-    resp = read_response_jsonl(spark, responses_jsonl).filter(
-        F.col("custom_id") == custom_id
-    )
-    if resp.isEmpty():
-        print(f"[ERROR] {custom_id} not found in {responses_jsonl}")
-        return 1
-    parsed = (
-        parse_responses(resp)
-        .select(
-            F.col("batch_id").alias("custom_id"),
-            # Each response's rows leave the map in parse order.
-            F.monotonically_increasing_id().alias("pos"),
-            "description_id",
-            "translation",
+    parsed = None
+    try:
+        n_expected = expected.count()
+        if n_expected == 0:
+            print(f"[ERROR] {custom_id} not found in {requests_jsonl}")
+            return 1
+        resp = read_response_jsonl(spark, responses_jsonl).filter(
+            F.col("custom_id") == custom_id
         )
-        .persist()
-    )
-    n_received = parsed.count()
-    chars = resp.select(F.length("content")).first()[0] or 0
-    print(f"Expected ids:    {n_expected}")
-    print(f"Received ids:    {n_received} (content {chars} chars)")
+        if resp.isEmpty():
+            print(f"[ERROR] {custom_id} not found in {responses_jsonl}")
+            return 1
+        parsed = (
+            parse_responses(resp)
+            .select(
+                F.col("batch_id").alias("custom_id"),
+                # Each response's rows leave the map in parse order.
+                F.monotonically_increasing_id().alias("pos"),
+                "description_id",
+                "translation",
+            )
+            .persist()
+        )
+        n_received = parsed.count()
+        chars = resp.select(F.length("content")).first()[0] or 0
+        print(f"Expected ids:    {n_expected}")
+        print(f"Received ids:    {n_received} (content {chars} chars)")
 
-    missing = expected.join(
-        parsed.select("description_id"), "description_id", "left_anti"
-    ).orderBy("exp_pos")
-    print(f"\nMissing translations for {custom_id}:")
-    for r in missing.collect():
-        print(f"  - {r['description_id']}: {r['english_sentence']}")
+        missing = expected.join(
+            parsed.select("description_id"), "description_id", "left_anti"
+        ).orderBy("exp_pos")
+        print(f"\nMissing translations for {custom_id}:")
+        for r in missing.collect():
+            print(f"  - {r['description_id']}: {r['english_sentence']}")
 
-    extras = detect_extras(
-        parsed.select("custom_id", "description_id"),
-        expected.withColumn("custom_id", F.lit(custom_id)),
-        keys=("custom_id", "description_id"),
-    )
-    print(f"\nExtra translations for {custom_id}:")
-    for r in extras.collect():
-        print(f"  - {r['description_id']}")
+        extras = detect_extras(
+            parsed.select("custom_id", "description_id"),
+            expected.withColumn("custom_id", F.lit(custom_id)),
+            keys=("custom_id", "description_id"),
+        )
+        print(f"\nExtra translations for {custom_id}:")
+        for r in extras.collect():
+            print(f"  - {r['description_id']}")
 
-    seq = sequence_check(
-        parsed.join(
-            expected.select(
-                "description_id", (F.col("exp_pos") + 1).alias("num")
+        seq = sequence_check(
+            parsed.join(
+                expected.select(
+                    "description_id", (F.col("exp_pos") + 1).alias("num")
+                ),
+                "description_id",
             ),
-            "description_id",
-        ),
-        "custom_id",
-        "pos",
-        "num",
-    )
-    viol = seq.collect()
-    print(f"\nOrder violations: {len(viol)}")
-    for r in viol:
-        print(f"  - {r['description_id']}: requested at {r['num']}, "
-              f"received at {r['expected_number']}")
-    expected.unpersist()
-    parsed.unpersist()
-    return 0
+            "custom_id",
+            "pos",
+            "num",
+        )
+        viol = seq.collect()
+        print(f"\nOrder violations: {len(viol)}")
+        for r in viol:
+            print(f"  - {r['description_id']}: requested at {r['num']}, "
+                  f"received at {r['expected_number']}")
+        return 0
+    finally:
+        # Both error returns and any failure release the cached frames.
+        expected.unpersist()
+        if parsed is not None:
+            parsed.unpersist()
 
 
 def cmd_batch(

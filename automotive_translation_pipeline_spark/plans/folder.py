@@ -13,26 +13,25 @@ executor/task slots, not hand-rolled thread pools.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import read_descriptions_dir
 from ..translate import translate_requests
-from .pipeline import _translate, nonempty_trimmed
+from .pipeline import _translate, file_todo
 
 
 def folder_todo(spark: SparkSession, input_dir: str) -> DataFrame:
     """R-5 + R-7 + F-16: every CSV in the folder with its file stem
     (``source_stem``), which is also the shard, so batches never span
     files (v1 contract: {stem}-batch-NNNN,
-    old_functionalities/jsonl_convertor.py:76-79)."""
-    docs = nonempty_trimmed(read_descriptions_dir(spark, input_dir))
+    old_functionalities/jsonl_convertor.py:76-79) and each file packs
+    in its own row order, as ``cli translate`` packs it."""
+    docs = read_descriptions_dir(spark, input_dir)
     stem = F.regexp_extract(F.col("source_file"), r"([^/]+?)(?:\.[^./]+)?$", 1)
-    return docs.select(
-        "description_id", "english_sentence", stem.alias("source_stem")
-    ).withColumn("shard", F.col("source_stem")).withColumn(
-        "seq",
-        F.row_number().over(Window.partitionBy("shard").orderBy("description_id")),
+    return file_todo(
+        docs.select("description_id", "english_sentence", stem.alias("source_stem")),
+        F.col("source_stem"),
     )
 
 

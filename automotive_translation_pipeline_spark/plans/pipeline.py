@@ -25,7 +25,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.parsing import parse_responses
@@ -48,6 +48,18 @@ def nonempty_trimmed(docs: DataFrame) -> DataFrame:
     and trim the rest (reference ``auto_translate.py:267-275``)."""
     return docs.filter(F.length(F.trim(F.col("english_sentence"))) > 0).withColumn(
         "english_sentence", F.trim(F.col("english_sentence"))
+    )
+
+
+def file_todo(docs: DataFrame, shard: Column) -> DataFrame:
+    """The todo for rows read from CSV files: R-7 trim, ``shard`` as
+    given, and ``seq`` in input-file order (the reference's
+    ``csv.reader`` order). ``monotonically_increasing_id()`` grows along
+    each scan partition, and Spark orders one file's splits by offset,
+    so it follows each file; it is an order key for the pack and the
+    shift flags, not a row number."""
+    return nonempty_trimmed(docs).withColumn("shard", shard).withColumn(
+        "seq", F.monotonically_increasing_id()
     )
 
 

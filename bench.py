@@ -2,24 +2,53 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line:
 
-    {"metric": "...", "value": <total_sec>, "unit": "sec",
-     "queries": {"q": sec, ...}, "sf": ...}
+    {"queries_cpu": {"q": cpu_sec, ...}, "queries_median": {...},
+     "queries": {"q": sec, ...}, ..., "metric": "headline_suite_wall_time",
+     "value": <sum of queries>}
 
-Each query executes fully through the noop sink (no collect-to-driver
-bottleneck, no count()-style column pruning that would skip the work).
+One protocol measures every run (:func:`measure`): clear the cache, build
+the query and run it through the noop sink (nothing collected into this
+process, no count()-style column pruning that would skip the work),
+timing wall clock and the CPU of this process, the JVM and the Python
+workers, JIT compiler threads left out. After one shared warm-up
+(:func:`warm_up`) each query runs a fixed N_RUNS times, N_RUNS_HEAVY for
+the heavy set. ``queries`` is each query's min wall, ``queries_median``
+its median wall and ``queries_cpu`` its median CPU.
+
+CPU is the regression signal: on a shared host wall time follows the
+hypervisor's steal, CPU time does not (perfbench's ``op_cpu_s`` held a
+quartile spread of 0.09-0.13 of its median where wall time's was 0.42).
+A query whose median CPU is more than GUARD times its row in the committed
+baseline lands in ``regressions_vs_baseline``.
+
+The per-run detail (every wall and CPU reading in run order, the accuracy
+verdicts' detail) goes to the sidecar ``BENCH_detail_sf<sf>.json``,
+rewritten atomically after every query, so a run killed mid-suite leaves
+one that parses and lists the queries it finished.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
+
+from perfbench.harness import atomic_write_json, tree_cpu_seconds  # noqa: E402
+from perfbench.run import JIT_THREADS  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+N_RUNS = 3
+N_RUNS_HEAVY = 5
+# A query is flagged when its median CPU exceeds this multiple of its
+# baseline CPU row.
+GUARD = 1.5
 
 # Headline workload: the flagship pipeline + classic join/agg shapes +
 # the extension operators that dominate cost at scale.
@@ -132,158 +161,106 @@ def sf_tag(sf_dir: str) -> str:
     return sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
 
-def cpu_probe() -> float:
-    """Single-shot quarter-scale box-speed probe (~0.17 s on a calm
-    host) used to BRACKET every measured run: round 7 proved the
-    shared host's hypervisor steal spikes 2-8x for minutes at a time
-    (a 0.906-calibration window read one query at 116 s where a
-    0.563 window read 16.8 s), so a min-of-N without per-run speed
-    evidence is meaningless. Quarter scale keeps the per-run overhead
-    ~0.17 s instead of cpu_calibration's ~1.5 s best-of-3; the two
-    are NOT in the same units — gate probe readings against
-    PROBE_GATE, never against calib_cpu_s."""
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    a = rng.standard_normal((1024, 1024))
-    t0 = time.time()
-    s = 0
-    for i in range(2_000_000):
-        s += i * i
-    b = a
-    for _ in range(2):
-        b = b @ a
-        b /= np.abs(b).max()
-    return round(time.time() - t0, 4)
+def measure(spark, query, sf_dir: str) -> tuple[float, float]:
+    """Clear the cache, build ``query(spark, sf_dir)`` and run it through
+    the noop sink. Returns ``(wall_s, cpu_s)``: ``cpu_s`` is the CPU of
+    this process and all its descendants (the JVM and its Python workers)
+    over the run, without the JVM's JIT compiler threads, whose share
+    depends on how far the JIT has got rather than on the query."""
+    me = os.getpid()
+    spark.catalog.clearCache()
+    cpu0, jit0 = tree_cpu_seconds(me, skip_threads=JIT_THREADS)
+    t0 = time.perf_counter()
+    query(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    wall = time.perf_counter() - t0
+    cpu1, jit1 = tree_cpu_seconds(me, skip_threads=JIT_THREADS)
+    # A compiler thread the JVM retires mid-run takes its whole life's
+    # ticks out of the skipped share but not out of the process total
+    # (seen: 12.3 CPU-s in a 0.67 s run on 4 vCPUs). When the skipped
+    # share shrinks, keep this run's JIT time in instead.
+    return round(wall, 3), round(cpu1 - cpu0 - max(jit1 - jit0, 0.0), 3)
 
 
-# A fixed ~1 MB parquet file for the I/O probe's decode leg — SF-
-# independent so the probe cost never scales with the bench SF.
-_IO_PROBE_PARQUET = "/root/testdata/sf0.01/lineitem.parquet"
-# Pid-suffixed: bench / pin_baseline / spot_bench run concurrently
-# during a campaign, and a shared scratch path let one process delete
-# another's probe file mid-fsync (ADVICE r9).
-_IO_PROBE_SCRATCH = f"/tmp/atp_bench_ioprobe.{os.getpid()}.bin"
-_io_probe_warned = False
+def warm_up(spark, qs, sf_dir: str) -> None:
+    """Run once before measuring so per-query numbers measure the plan,
+    not one-time costs: a run of ``r23_group_by_language`` and a
+    tiny-SF run of the flagship compile their generated classes (kept by
+    the session's codegen cache for every later query that shares them),
+    warm the JVM, and start the Python workers the parse kernel and the
+    translate UDF run in."""
+    measure(spark, qs["r23_group_by_language"], sf_dir)
+    measure(spark, qs["pipeline_rows"], "/root/testdata/sf0.001")
 
 
-def io_probe() -> float:
-    """Best-of-3 disk probe bracketing every run alongside cpu_probe:
-    write + fsync 4 MB to the shuffle/spill disk (/tmp — Spark's
-    local dir) and decode a fixed ~1 MB parquet file. Round 8's calm
-    gate was CPU-only and BLIND to I/O contention — the driver's
-    12.06 s tpch_q20 reading passed both CPU probes while a disk
-    storm inflated the query's shuffle spill, laundering weather into
-    a 'calm' regression flag (VERDICT r8 #2a). fsync is what shuffle
-    spill pays, so it senses write-side contention directly; the
-    decode leg senses read-side stalls. Best-of-3 because single
-    shots spike ~10x even on a calm box (measured: median 0.017 s,
-    lone spikes to 0.27 s — fsync latency jitter, not contention); a
-    real storm slows ALL three attempts. Calm best-of-3 on this box:
-    ~0.022 s; gate at IO_GATE (default 0.15 s, ~6x headroom)."""
-    import pyarrow.parquet as pq
-
-    global _io_probe_warned
-    have_decode_leg = os.path.exists(_IO_PROBE_PARQUET)
-    if not have_decode_leg and not _io_probe_warned:
-        # Silent leg-drop weakened the calm gate with no signal
-        # (ADVICE r9): say it once so the artifact reader knows the
-        # io numbers are write-only.
-        _io_probe_warned = True
-        print(
-            f"  io_probe: decode fixture {_IO_PROBE_PARQUET} missing — "
-            "probe is write+fsync only",
-            file=sys.stderr,
-        )
-    buf = b"\x5a" * (4 << 20)
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.time()
-        with open(_IO_PROBE_SCRATCH, "wb") as fh:
-            fh.write(buf)
-            fh.flush()
-            os.fsync(fh.fileno())
-        if have_decode_leg:
-            pq.read_table(_IO_PROBE_PARQUET)
-        best = min(best, time.time() - t0)
-    try:
-        os.remove(_IO_PROBE_SCRATCH)
-    except OSError:
-        pass
-    return round(best, 4)
+def summarize(runs: list[tuple[float, float]]) -> tuple[float, float, float]:
+    """``(min wall, median wall, median cpu)`` of :func:`measure` readings:
+    the ``queries``, ``queries_median`` and ``queries_cpu`` rows."""
+    walls = [w for w, _ in runs]
+    return (
+        min(walls),
+        round(statistics.median(walls), 3),
+        round(statistics.median(c for _, c in runs), 3),
+    )
 
 
-def probe() -> tuple[float, float]:
-    """(cpu_s, io_s) bracket reading — a run is CALM only if BOTH legs
-    of BOTH its brackets pass their gates."""
-    return cpu_probe(), io_probe()
-
-
-# A run counts as CALM iff both probes bracketing it read at or under
-# this (~1.5x the calm-host 0.165 s reading — the strict end of
-# spot_bench's gate, scaled to the quarter probe). Runs keep retrying
-# (up to MAX_EXTRA_RUNS extras) until each query has a calm run.
-PROBE_GATE = float(os.environ.get("SPARK_GRAFT_PROBE_GATE", "0.25"))
-# The I/O leg's gate (io_probe best-of-3; calm floor ~0.022 s on this
-# box, storms read 0.5 s+). Both legs of both brackets must pass for a
-# run to count as calm.
-IO_GATE = float(os.environ.get("SPARK_GRAFT_IO_GATE", "0.15"))
-MAX_EXTRA_RUNS = int(os.environ.get("SPARK_GRAFT_MAX_EXTRA_RUNS", "4"))
-# Soft deadline for the whole suite: once elapsed wall passes this,
-# calm-hunting retries stop (every query still gets its base N runs).
-SUITE_RETRY_DEADLINE_S = float(
-    os.environ.get("SPARK_GRAFT_BENCH_DEADLINE_S", "2400")
-)
-# A deadline hit used to ship verdict-less rows (35/99 in BENCH_r08 —
-# VERDICT r8 #2b): after the main loop, a SECOND calm-hunting pass
-# sweeps whatever is still uncalm, bounded by its own budget, so a
-# mid-suite storm costs retries, not a third of the artifact.
-RESCUE_DEADLINE_S = float(
-    os.environ.get("SPARK_GRAFT_BENCH_RESCUE_S", "1500")
-)
-
-
-def cpu_calibration() -> float:
-    """Seconds for a fixed single-thread CPU workload — the box-speed
-    probe that travels with every artifact. Round 7 found the host
-    ~1.8x slower than on the day the baseline was recorded (hypervisor
-    steal invisible to loadavg; a round-6-code control run reproduced
-    the 'regressions' exactly, proving environment, not code). The
-    regression guard scales its threshold by calib_now / calib_base
-    when the box is SLOWER (never when faster — a fast box must not
-    mask a real slowdown)."""
-    import numpy as np
-
-    best = float("inf")
-    rng = np.random.default_rng(7)
-    a = rng.standard_normal((1024, 1024))
-    for _ in range(3):
-        t0 = time.time()
-        s = 0
-        for i in range(8_000_000):
-            s += i * i
-        b = a
-        for _ in range(6):
-            b = b @ a
-            b /= np.abs(b).max()
-        best = min(best, time.time() - t0)
-    return round(best, 4)
-
-
-def _committed_baseline(sf: str) -> dict | None:
-    """The committed per-query reference for this SF, used for the
-    regression guard: BENCH_BASELINE_sf<sf>.json if present (tighter
-    round-6 protocol), else the committed BENCH_sf<sf>.json scale runs."""
-    here = os.path.dirname(os.path.abspath(__file__))
+def committed_baseline(sf: str) -> dict:
+    """The committed per-query reference for this SF:
+    BENCH_BASELINE_sf<sf>.json if present, else the committed
+    BENCH_sf<sf>.json scale run; {} when neither parses."""
     for fname in (f"BENCH_BASELINE_sf{sf}.json", f"BENCH_sf{sf}.json"):
-        path = os.path.join(here, fname)
+        path = os.path.join(HERE, fname)
         if os.path.exists(path):
             try:
                 with open(path) as fh:
                     return json.load(fh)
             except (OSError, ValueError):
-                return None
-    return None
+                return {}
+    return {}
+
+
+def cpu_regressions(
+    queries_cpu: dict[str, float], base_cpu: dict[str, float]
+) -> dict[str, list[float]]:
+    """``name -> [median cpu_s, baseline cpu_s]`` for every query whose
+    median CPU is more than GUARD times its baseline CPU row."""
+    return {
+        name: [cpu, base_cpu[name]]
+        for name, cpu in queries_cpu.items()
+        if name in base_cpu and cpu > GUARD * base_cpu[name]
+    }
+
+
+def write_detail(path: str, detail: dict) -> str:
+    """Rewrite the sidecar atomically; if ``path`` cannot be written (a
+    read-only checkout), write it under the temp dir instead. Returns
+    the path written."""
+    try:
+        atomic_write_json(path, detail)
+    except OSError:
+        path = os.path.join(tempfile.gettempdir(), os.path.basename(path))
+        atomic_write_json(path, detail)
+    return path
+
+
+def run_suite(
+    spark, qs, names, sf_dir: str, heavy: set[str], detail: dict,
+    detail_path: str,
+) -> str:
+    """Measure each query in ``names`` N_RUNS times (N_RUNS_HEAVY if it
+    is in ``heavy``), recording its readings and summaries in ``detail``,
+    and rewrite the sidecar after every query. Returns the sidecar path."""
+    rows = ("queries", "queries_median", "queries_cpu")
+    for key in ("queries_times", "queries_cpu_times") + rows:
+        detail.setdefault(key, {})
+    for name in names:
+        n = N_RUNS_HEAVY if name in heavy else N_RUNS
+        runs = [measure(spark, qs[name], sf_dir) for _ in range(n)]
+        detail["queries_times"][name] = [w for w, _ in runs]
+        detail["queries_cpu_times"][name] = [c for _, c in runs]
+        for row, value in zip(rows, summarize(runs)):
+            detail[row][name] = value
+        detail_path = write_detail(detail_path, detail)
+    return detail_path
 
 
 def run_accuracy_hooks(spark, sf_dir: str) -> dict[str, dict]:
@@ -309,293 +286,59 @@ def main() -> None:
 
     spark = get_spark(app_name="atp_spark_bench", cpus=CPUS)
     qs = entrymod.queries()
+    warm_up(spark, qs, SF_DIR)
 
-    # Warm up once so per-query numbers measure the plan, not one-time
-    # costs: a tiny-SF run of the flagship compiles its generated classes
-    # (kept by the session's codegen cache for every later query that
-    # shares them), lets the JVM's JIT reach the hot paths, and starts
-    # the Python workers the parse kernel and the translate UDF run in.
-    qs["r23_group_by_language"](spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    qs["pipeline_rows"](spark, "/root/testdata/sf0.001").write.format(
-        "noop"
-    ).mode("overwrite").save()
-
-    # 3 runs per query, report min AND median: the container's CPU
-    # availability is noisy (co-tenant bursts showed 5x swings on
-    # identical plans) — the CALM min is the plan's cost (see the
-    # calm-window protocol below), min≈median means the number is
-    # trustworthy, min≪median flags a noisy neighborhood so the
-    # artifact is self-diagnosing. clearCache() between runs drops
-    # persist()'d intermediates so no query pays for (or benefits
-    # from) another query's cached state.
-    #
-    # VARIANCE protocol (round 6): same-day HEAD re-runs of the sf1
-    # flagship spanned ±30% (SCALE.md "ambient variance") — a band that
-    # can swallow a real regression at N=3. The heaviest queries (by
-    # the committed baseline for this SF) and the flagship get N=5 and
-    # an IQR, and every query's calm min is checked against the
-    # committed baseline: min > 1.5x baseline lands in "regressions"
-    # so the artifact flags its own slowdowns instead of leaving the
-    # diff to the reader.
-    N_RUNS = 3
-    N_RUNS_HEAVY = 5
-    baseline = _committed_baseline(sf_tag(SF_DIR))
-    base_q = (baseline or {}).get("queries", {})
-    calib = cpu_calibration()
-    base_calib = (baseline or {}).get("calib_cpu_s")
-    # Scale the regression threshold when the box is measurably slower
-    # than it was at baseline time; cap at 3x so a broken probe can't
-    # waive the guard entirely.
-    calib_scale = (
-        min(3.0, max(1.0, calib / base_calib)) if base_calib else 1.0
-    )
-    heavy = set(
-        sorted(base_q, key=lambda k: -base_q[k])[:10]
-    ) | {"pipeline_rows"}
-    per_query: dict[str, float] = {}
-    per_query_probe: dict[str, float] = {}
-    per_query_ioprobe: dict[str, float] = {}
-    per_query_median: dict[str, float] = {}
-    per_query_iqr: dict[str, float] = {}
-    per_query_times: dict[str, list[float]] = {}
-    regressions: dict[str, list[float]] = {}
-    suspects: dict[str, list[float]] = {}
-    uncalm: list[str] = []
-
-    # CALM-WINDOW protocol (round 8, VERDICT r7 item 1; I/O leg added
-    # round 9, VERDICT r8 #2a): every run is bracketed by probe()
-    # readings — a CPU leg gated at PROBE_GATE and a disk leg gated at
-    # IO_GATE (the trailing probe of run i doubles as the leading probe
-    # of run i+1); a run counts as calm only if BOTH legs of BOTH its
-    # brackets pass, and each query retries (up to MAX_EXTRA_RUNS
-    # extras) hunting a calm window. Each run is stored as
-    # (sec, cpu_bracket_max, io_bracket_max) so the rescue pass can
-    # extend any query's chain later without index bookkeeping.
-    def is_calm(rec: tuple[float, float, float]) -> bool:
-        return rec[1] <= PROBE_GATE and rec[2] <= IO_GATE
-
-    def measure_chain(
-        name: str, n_target: int, past_deadline
-    ) -> list[tuple[float, float, float]]:
-        recs: list[tuple[float, float, float]] = []
-        p_prev = probe()
-        while len(recs) < n_target + MAX_EXTRA_RUNS:
-            spark.catalog.clearCache()
-            t0 = time.time()
-            qs[name](spark, SF_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            sec = round(time.time() - t0, 3)
-            p_next = probe()
-            recs.append(
-                (
-                    sec,
-                    round(max(p_prev[0], p_next[0]), 4),
-                    round(max(p_prev[1], p_next[1]), 4),
-                )
-            )
-            p_prev = p_next
-            if len(recs) >= n_target and (
-                any(is_calm(r) for r in recs) or past_deadline()
-            ):
-                break
-        return recs
-
-    runs: dict[str, list[tuple[float, float, float]]] = {}
-    suite_t0 = time.time()
-    for name in HEADLINE:
-        runs[name] = measure_chain(
-            name,
-            N_RUNS_HEAVY if name in heavy else N_RUNS,
-            lambda: time.time() - suite_t0 > SUITE_RETRY_DEADLINE_S,
-        )
-
-    # RESCUE pass (VERDICT r8 #2b): the suite deadline used to ship
-    # every post-deadline query verdict-less (35/99 rows in BENCH_r08
-    # were weather). Sweep the still-uncalm set once more under its own
-    # budget — a mid-suite storm now costs rescue retries, not a third
-    # of the artifact.
-    #
-    # Round-9 hardening, from a validation run whose storm spanned the
-    # whole rescue window (37 uncalm rows; the retries all burned
-    # INSIDE the storm): (a) before each rescue chain, WAIT for the
-    # probes to read calm (cheap ~1 s polling, bounded) instead of
-    # spending full measured runs during contention; (b) rescue also
-    # covers queries with exactly ONE calm run whose single reading
-    # would flag as a regression — a 1-sample min==median is not
-    # reproduction, so the flag rule below demands >=2 calm runs and
-    # the rescue pass is what affords them.
-    def rescue_worthy(name: str) -> bool:
-        calm = [r for r in runs[name] if is_calm(r)]
-        if not calm:
-            return True
-        if name in base_q and len(calm) == 1:
-            thr = 1.5 * base_q[name] * calib_scale
-            return calm[0][0] > thr
-        return False
-
-    def wait_for_calm(budget_s: float) -> None:
-        t0 = time.time()
-        while time.time() - t0 < budget_s:
-            c, i = probe()
-            if c <= PROBE_GATE and i <= IO_GATE:
-                return
-            time.sleep(15)
-
-    rescue_t0 = time.time()
-    for name in HEADLINE:
-        if not rescue_worthy(name):
-            continue
-        remaining = RESCUE_DEADLINE_S - (time.time() - rescue_t0)
-        if remaining <= 0:
-            break
-        wait_for_calm(min(180.0, remaining))
-        runs[name] += measure_chain(
-            name, 1, lambda: time.time() - rescue_t0 > RESCUE_DEADLINE_S
-        )
-
-    for name in HEADLINE:
-        recs = runs[name]
-        times = [r[0] for r in recs]
-        # All raw times in RUN ORDER (VERDICT r3 item 7): noise
-        # adjudication needs the full sample, not just min/median.
-        per_query_times[name] = times
-        calm = [r for r in recs if is_calm(r)]
-        best = min(calm or recs, key=lambda r: r[0])
-        per_query[name] = best[0]
-        per_query_probe[name] = best[1]
-        per_query_ioprobe[name] = best[2]
-        if not calm:
-            uncalm.append(name)
-        srt = sorted(times)
-        per_query_median[name] = srt[len(srt) // 2]
-        if name in heavy:
-            per_query_iqr[name] = round(
-                srt[(3 * len(srt)) // 4] - srt[len(srt) // 4], 3
-            )
-        # Regression flags require CALM evidence, and BOTH the calm min
-        # AND the calm median must exceed the threshold (VERDICT r8
-        # #2a: a single lucky-or-unlucky calm run is not a verdict —
-        # the 12 s q20 flag came from one I/O-stormed run the CPU
-        # probes couldn't see; min-and-median agreement means the slow
-        # reading reproduced under calm conditions). Round 9: at least
-        # TWO calm runs — min and median of a 1-element set agree with
-        # themselves, which re-opened the single-reading hole (a
-        # validation run flagged q7 at 6.5 s off one calm-bracketed
-        # run whose siblings read 1.96 s; brackets can't see a burst
-        # that starts after the leading probe and ends before the
-        # trailing one, so reproduction across runs is the evidence).
-        # The rescue pass grants would-flag queries their second calm
-        # run, so a real regression still gets flagged.
-        if name in base_q:
-            cp = sorted(r[0] for r in calm)
-            thr = 1.5 * base_q[name] * calib_scale
-            if len(calm) >= 2:
-                if cp[0] > thr and cp[len(cp) // 2] > thr:
-                    regressions[name] = [cp[0], base_q[name]]
-            elif len(calm) == 1 and cp[0] > thr:
-                # One calm-above-threshold run whose rescue retries ran
-                # out is neither a flag (no reproduction) nor clean —
-                # without this list the artifact read fully green while
-                # a possible real regression hid in raw times
-                # (ADVICE r9).
-                suspects[name] = [cp[0], base_q[name]]
-
-    # Engine-side throughput of the flagship (the BASELINE.md comparable:
-    # rows through pack→translate→parse→rejoin→flags per second, warm).
-    pipeline_warm = float("inf")
-    warm_calm = False
-    attempts = 0
-    while attempts < N_RUNS + MAX_EXTRA_RUNS:
-        attempts += 1
-        p0 = probe()
-        spark.catalog.clearCache()
-        t0 = time.time()
-        n_rows = qs["pipeline_rows"](spark, SF_DIR).count()
-        sec = time.time() - t0
-        p1 = probe()
-        calm = (
-            max(p0[0], p1[0]) <= PROBE_GATE and max(p0[1], p1[1]) <= IO_GATE
-        )
-        # calm runs only, once one exists — a steal-window min would
-        # overstate throughput's denominator (or a lucky fast window
-        # during a storm understate it) either way.
-        if calm and (not warm_calm or sec < pipeline_warm):
-            pipeline_warm = sec
-            warm_calm = True
-        elif not warm_calm:
-            pipeline_warm = min(pipeline_warm, sec)
-        if attempts >= N_RUNS and warm_calm:
-            break
-
-    # Accuracy-hook verdicts at the bench SF (VERDICT r5 item 7):
-    # recorded in the artifact so the rows-only entries' bounded
-    # contracts travel with the perf numbers.
-    accuracy = run_accuracy_hooks(spark, SF_DIR)
-
-    total = round(sum(per_query.values()), 3)
     sf = sf_tag(SF_DIR)
     # The same value, of the same type, in the sidecar and the line.
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # ONE-LINE DIET (round 11, VERDICT r10 #2/next-#3): the driver
-    # captures only the trailing ~2000 chars of this line, and the
-    # round-9 artifact became unparseable because queries_times /
-    # probe maps tripled the line length. The printed line now carries
-    # only the contract keys (queries + headline summary, ~4.5 KB);
-    # the full per-run detail (all raw times in run order, per-query
-    # probe brackets, accuracy detail strings, heavy-query IQRs) is
-    # written to a SIDECAR file next to bench.py so nothing is lost —
-    # it is the same data, relocated. KEY ORDER IS STILL A CONTRACT:
-    # the big queries map goes FIRST and every summary metric LAST, so
-    # a tail truncation keeps the headline numbers.
-    here = os.path.dirname(os.path.abspath(__file__))
-    detail_file = f"BENCH_detail_sf{sf}.json"
-    detail = {
-        "queries_times": per_query_times,
-        "queries_median": per_query_median,
-        "queries_probe_s": per_query_probe,
-        "queries_ioprobe_s": per_query_ioprobe,
-        "accuracy": accuracy,
-        "queries_iqr_heavy": per_query_iqr,
-        "queries": per_query,
-        "sf": sf_val,
-        "cpus": CPUS,
-        "calib_cpu_s": calib,
-    }
-    detail_path = os.path.join(here, detail_file)
-    try:
-        # Write-then-rename in the same dir: a run killed mid-dump leaves
-        # the previous sidecar whole instead of a truncated one.
-        with open(detail_path + ".tmp", "w") as fh:
-            json.dump(detail, fh)
-        os.replace(detail_path + ".tmp", detail_path)
-    except OSError:
-        detail_file = None  # read-only checkout: line stays complete
+    baseline = committed_baseline(sf)
+    base_cpu = baseline.get("queries_cpu", {})
+    # The heavy set: the ten costliest queries by the baseline, and the
+    # flagship; their extra runs steady the median where it matters most.
+    rank = base_cpu or baseline.get("queries", {})
+    heavy = set(sorted(rank, key=lambda k: -rank[k])[:10]) | {"pipeline_rows"}
+    detail = {"sf": sf_val, "cpus": CPUS}
+    detail_path = run_suite(
+        spark, qs, HEADLINE, SF_DIR, heavy, detail,
+        os.path.join(HERE, f"BENCH_detail_sf{sf}.json"),
+    )
+
+    # Engine-side throughput of the flagship (the BASELINE.md comparable:
+    # rows through pack→translate→parse→rejoin→flags per second, warm),
+    # over its fastest noop run above.
+    n_rows = qs["pipeline_rows"](spark, SF_DIR).count()
+    # Accuracy-hook verdicts at the bench SF: the rows-only entries'
+    # bounded contracts travel with the perf numbers.
+    accuracy = run_accuracy_hooks(spark, SF_DIR)
+    detail["accuracy"] = accuracy
+    detail_path = write_detail(detail_path, detail)
+
+    per_query = detail["queries"]
+    # KEY ORDER IS A CONTRACT: a reader that keeps only the line's
+    # trailing ~2000 chars must still get every summary metric, so the big
+    # per-query maps go FIRST and the summary LAST; the per-run readings
+    # live in the sidecar.
     payload = {
-        "queries_median": per_query_median,
+        "queries_cpu": detail["queries_cpu"],
+        "queries_median": detail["queries_median"],
         "queries": per_query,
         "accuracy_verdicts": {
             k: v["verdict"] for k, v in accuracy.items()
         },
-        "detail_file": detail_file,
+        "detail_file": (
+            os.path.basename(detail_path)
+            if os.path.dirname(detail_path) == HERE else detail_path
+        ),
         "runs_per_query": N_RUNS,
         "runs_per_query_heavy": N_RUNS_HEAVY,
-        "max_extra_runs": MAX_EXTRA_RUNS,
         "cpus": CPUS,
-        "calib_cpu_s": calib,
-        "calib_scale_vs_baseline": round(calib_scale, 3),
-        "probe_gate_s": PROBE_GATE,
-        "io_gate_s": IO_GATE,
     }
     # Scale evidence: compact pointers to the committed sf1/sf3 runs
-    # (same suite + harness, data from tools/gen_testdata.py — see
-    # SCALE.md "Measured scale-up"); per-query numbers live in the
-    # committed files themselves.
+    # (same suite, data from tools/gen_testdata.py — see SCALE.md
+    # "Measured scale-up"); per-query numbers live in the files.
     for committed_sf, fname in ((1.0, "BENCH_sf1.json"),
                                 (3.0, "BENCH_sf3.json")):
-        path = os.path.join(here, fname)
+        path = os.path.join(HERE, fname)
         if not os.path.exists(path) or sf_val == committed_sf:
             continue
         try:
@@ -615,31 +358,24 @@ def main() -> None:
             pass
     payload.update(
         {
-            # Regression guard verdict goes in the SUMMARY tail: empty
-            # dict == no query's CALM min worsened >1.5x vs the
-            # committed baseline for this SF ({} when no baseline
-            # exists). `uncalm` names queries that never saw a calm
-            # window even with retries — their numbers are
-            # weather, not plan cost.
-            "uncalm": uncalm,
-            "pipeline_warm_calm": warm_calm,
-            "regressions_vs_baseline": regressions,
-            # Single calm reading above threshold, second calm run
-            # never obtained — needs a manual re-measure, not a
-            # verdict.
-            "suspect_single_calm": suspects,
+            # Regression guard verdict: {} == no query's median CPU
+            # exceeds GUARD x its baseline CPU row ({} when the baseline
+            # has no CPU rows).
+            "regressions_vs_baseline": cpu_regressions(
+                detail["queries_cpu"], base_cpu
+            ),
             "n_accuracy_fail": sum(
                 1 for v in accuracy.values() if v["verdict"] != "PASS"
             ),
             "pipeline_rows": n_rows,
             "pipeline_rows_per_sec_warm": round(
-                n_rows / max(pipeline_warm, 1e-9), 1
+                n_rows / max(per_query["pipeline_rows"], 1e-9), 1
             ),
             "n_queries": len(per_query),
             "sf": sf_val,
             "unit": "sec",
             "metric": "headline_suite_wall_time",
-            "value": total,
+            "value": round(sum(per_query.values()), 3),
         }
     )
     print(json.dumps(payload))

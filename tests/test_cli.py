@@ -6,8 +6,10 @@ from __future__ import annotations
 
 import csv
 import json
+import random
 
 import pytest
+from pyspark.sql import functions as F
 
 from automotive_translation_pipeline_spark import cli
 from automotive_translation_pipeline_spark.translate import (
@@ -53,6 +55,85 @@ def test_cli_translate_end_to_end(spark, tmp_path, capsys):
     ]
     assert len(ok) >= 6
     assert "9" not in by_id
+
+
+def test_cli_translate_reference_style_ids(spark, tmp_path, capsys):
+    """``P0001``-style ids, the reference's own format, translate: the
+    todo orders rows by their place in the file, not by an id cast."""
+    src = tmp_path / "in.csv"
+    _write_csv(src, [(f"P{i:04d}", f"wiper blade {i} with clip") for i in (3, 1, 2)])
+    out = tmp_path / "out.csv"
+    assert cli.main(["translate", str(src), "German", str(out)], spark=spark) == 0
+    assert "Total rows:      3" in capsys.readouterr().out
+    rows = list(csv.DictReader(out.read_bytes().decode("utf-8-sig").splitlines()))
+    assert sorted(r["description_id"] for r in rows) == ["P0001", "P0002", "P0003"]
+
+
+def _ids_in_seq_order(todo):
+    return [r["description_id"] for r in todo.orderBy("seq").collect()]
+
+
+def test_todo_keeps_file_order(spark, tmp_path):
+    """Neither the ids' string order ("100" < "21" < "3" < "8") nor their
+    numeric order decides the packing order: the file's does."""
+    src = tmp_path / "in.csv"
+    ids = ["21", "8", "100", "3"]
+    _write_csv(src, [(i, f"mirror cap {i}") for i in ids])
+    assert _ids_in_seq_order(cli._todo_from_csv(spark, str(src))) == ids
+
+
+def test_translate_and_batch_pack_a_file_alike(spark, tmp_path):
+    """One CSV packed as ``cli translate`` packs it and as ``cli batch``
+    packs it (a folder holding only that file) gives the same rows in
+    the same batches."""
+    from automotive_translation_pipeline_spark.plans.folder import folder_todo
+    from automotive_translation_pipeline_spark.plans.pipeline import _pack
+
+    ind = tmp_path / "csvs"
+    ind.mkdir()
+    ids = [str(i) for i in random.Random(5).sample(range(1, 400), 60)]
+    _write_csv(
+        ind / "one.csv", [(i, "door handle trim " * (1 + int(i) % 4)) for i in ids]
+    )
+
+    def groups(todo):
+        rows = _pack(todo, 60).orderBy("seq").collect()
+        by_batch: dict[str, list[str]] = {}
+        for r in rows:
+            n = r["batch_id"].rsplit("-", 1)[1]
+            by_batch.setdefault(n, []).append(r["description_id"])
+        return by_batch
+
+    single = groups(cli._todo_from_csv(spark, str(ind / "one.csv")))
+    assert len(single) > 1
+    assert groups(folder_todo(spark, str(ind))) == single
+
+
+def test_todo_file_order_survives_split_scans(spark, tmp_path):
+    """With 1 KB scan splits each file is read by several tasks, and
+    ``seq`` still follows each file's row order, in one file and in a
+    folder of files of different sizes."""
+    from automotive_translation_pipeline_spark.plans.folder import folder_todo
+
+    ind = tmp_path / "csvs"
+    ind.mkdir()
+    order = {}
+    for stem, n in (("big", 400), ("small", 150)):
+        ids = [str(i) for i in random.Random(n).sample(range(1, 10_000), n)]
+        _write_csv(ind / f"{stem}.csv", [(i, f"fuel pump relay {i}") for i in ids])
+        order[stem] = ids
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1024")
+    try:
+        single = cli._todo_from_csv(spark, str(ind / "big.csv"))
+        assert single.rdd.getNumPartitions() > 1
+        assert _ids_in_seq_order(single) == order["big"]
+        folder = folder_todo(spark, str(ind))
+        for stem, ids in order.items():
+            rows = folder.filter(F.col("source_stem") == stem)
+            assert _ids_in_seq_order(rows) == ids
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
 
 def _run_translate(spark, tmp_path):
@@ -206,7 +287,11 @@ def test_cli_analyze_batch_drilldown(spark, tmp_path, capsys):
     assert "Extra translations for b-1:\n  - 4" in text  # planted extra
     assert "Order violations: 2" in text       # 2 and 1 swapped
 
-    # unknown custom_id -> error exit, reference-style message
+    # unknown custom_id -> error exit, reference-style message, and no
+    # cached frame left behind: neither for an id the request file lacks
+    # nor for one only the response file lacks.
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
     rc = cli.main(
         ["analyze", str(responses), "--batch", "nope",
          "--requests", str(requests)],
@@ -214,6 +299,20 @@ def test_cli_analyze_batch_drilldown(spark, tmp_path, capsys):
     )
     assert rc == 1
     assert "not found" in capsys.readouterr().out
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) - before == set()
+    empty = tmp_path / "empty_responses.jsonl"
+    empty.write_text(
+        json.dumps({"custom_id": "b-other", "response": None, "error": None})
+        + "\n",
+        encoding="utf-8",
+    )
+    rc = cli.main(
+        ["analyze", str(empty), "--batch", "b-1", "--requests", str(requests)],
+        spark=spark,
+    )
+    assert rc == 1
+    assert f"not found in {empty}" in capsys.readouterr().out
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) - before == set()
 
 
 def test_cli_batch_folder(spark, tmp_path, capsys):

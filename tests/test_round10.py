@@ -1,9 +1,7 @@
 """Round-10 hardening: unigram byte-gate, bigram fp-collision guard,
-bench probe hygiene (ADVICE r9 items)."""
+the frozen PQ codebook (ADVICE r9 items)."""
 
 from __future__ import annotations
-
-import os
 
 from automotive_translation_pipeline_spark.operators import lm
 from automotive_translation_pipeline_spark.operators.lm import (
@@ -65,21 +63,6 @@ def test_bigram_fp_check_flag_parsing(monkeypatch):
         assert lm._bigram_fp_check_enabled() is want
     monkeypatch.delenv("SPARK_GRAFT_BIGRAM_FP_CHECK")
     assert lm._bigram_fp_check_enabled() is False
-
-
-def test_io_probe_scratch_is_pid_suffixed():
-    """Concurrent bench/pin_baseline/spot processes must not share (and
-    delete) each other's probe scratch file (ADVICE r9)."""
-    import bench
-
-    assert str(os.getpid()) in bench._IO_PROBE_SCRATCH
-
-
-def test_io_probe_runs():
-    import bench
-
-    v = bench.io_probe()
-    assert isinstance(v, float) and v >= 0
 
 
 def test_frozen_pq_codebook_shape_and_provenance():

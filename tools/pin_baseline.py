@@ -1,29 +1,19 @@
-"""Re-pin committed-baseline rows as MEDIAN-of-calm-mins across
-sessions.
+"""Re-pin the committed baseline rows (BENCH_BASELINE_sf<sf>.json) from
+SESSIONS fresh-JVM sessions of bench.py's protocol.
 
-Round 8's baseline re-pin merged per-query CALM minima across four
-independent bench sessions — which is min-of-many-sessions
-cherry-picking: each session's calm min is itself a minimum, so taking
-the min again selects the single luckiest window any session ever hit,
-and every future honest calm run reads "slow" against it (VERDICT r8
-#3: tpch_q13 pinned at 0.886 s where every calm re-measurement floors
-at 1.23-1.42 s — a guaranteed perma-flag). The symmetric statistic is
-the MEDIAN of per-session calm mins: bench.py compares a calm min
-against the baseline row, so the row must be a TYPICAL calm min, not
-the best one ever recorded.
+Each session is a fresh Python process, so a fresh JVM: it starts a
+session at the ``cpus`` the baseline file records (32 when there is no
+file), runs ``bench.warm_up``, then ``bench.measure`` ``--n`` times per
+query. Per query and session it keeps the min wall, the median wall and
+the median CPU; each pinned row is the MEDIAN of those across sessions.
+A min of per-session minima would pin the luckiest session ever seen and
+make every later run read slow against it; the median pins a typical one.
 
-This tool measures one session: bench.py's exact protocol (same
-warm-up, noop sink, clearCache between runs, the round-9 two-leg
-CPU+I/O calm gate) for a named subset of queries, and prints one JSON
-line {"queries": {name: calm_min}, "uncalm": [...]}. Run it N times
-(fresh process each — a fresh JVM per session is the point), then pin
-each row as the median of its N calm mins:
+    python tools/pin_baseline.py                  # all bench.HEADLINE rows
+    python tools/pin_baseline.py --only tpch_q13_order_distribution,...
 
-    for i in 1 2 3; do python tools/pin_baseline.py \
-        --only tpch_q13_order_distribution,... >> /tmp/pins.jsonl; done
-
-The committed BENCH_BASELINE_sf0.1.json row then records the median and
-names this protocol in its note.
+Rows of queries not measured keep their committed values. Prints one JSON
+line with each session's rows and writes the baseline file.
 """
 
 from __future__ import annotations
@@ -31,93 +21,89 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import sys
-import time
+from concurrent.futures import ProcessPoolExecutor
+from multiprocessing import get_context
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-import bench  # noqa: E402  (the probe/gates ARE the bench's — shared on purpose)
+import bench  # noqa: E402  (the measurement IS the bench's, shared on purpose)
+
+SESSIONS = 3
+ROWS = ("queries", "queries_median", "queries_cpu")
+
+
+def session(names: list[str], sf_dir: str, cpus: int, n: int) -> dict:
+    """One fresh-JVM session: bench's warm-up, then ``n`` measured runs
+    per query. Returns ``{row: {name: value}}`` for the three ROWS."""
+    os.chdir(ROOT)  # Python workers import the package from the cwd
+    import __spark_entry__ as entrymod
+    from automotive_translation_pipeline_spark.session import get_spark
+
+    spark = get_spark(app_name="atp_pin_baseline", cpus=cpus)
+    qs = entrymod.queries()
+    bench.warm_up(spark, qs, sf_dir)
+    out: dict[str, dict] = {row: {} for row in ROWS}
+    for name in names:
+        runs = [bench.measure(spark, qs[name], sf_dir) for _ in range(n)]
+        for row, value in zip(ROWS, bench.summarize(runs)):
+            out[row][name] = value
+    spark.stop()
+    return out
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--only", required=True, help="comma list of queries")
+    ap.add_argument("--only", default=None,
+                    help="comma list of queries (default: bench.HEADLINE)")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--cpus", type=int, default=32)
-    ap.add_argument("--n", type=int, default=3, help="base runs per query")
-    ap.add_argument("--max-extra", type=int, default=5)
+    ap.add_argument("--n", type=int, default=bench.N_RUNS,
+                    help="measured runs per query per session")
     args = ap.parse_args()
 
-    import __spark_entry__ as entrymod
-    from automotive_translation_pipeline_spark.session import get_spark
+    sf = bench.sf_tag(args.sf)
+    path = os.path.join(ROOT, f"BENCH_BASELINE_sf{sf}.json")
+    old = bench.committed_baseline(sf) if os.path.exists(path) else {}
+    cpus = int(old.get("cpus", 32))
+    names = args.only.split(",") if args.only else list(bench.HEADLINE)
 
-    spark = get_spark(app_name="atp_pin_baseline", cpus=args.cpus)
-    qs = entrymod.queries()
-    # bench.py's exact warm-up: generated classes compiled into the
-    # session's codegen cache, the JIT warmed, the Python workers started.
-    qs["r23_group_by_language"](spark, args.sf).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    qs["pipeline_rows"](spark, "/root/testdata/sf0.001").write.format(
-        "noop"
-    ).mode("overwrite").save()
-
-    out: dict[str, float] = {}
-    times_all: dict[str, list] = {}
-    uncalm: list[str] = []
-    for name in args.only.split(","):
-        recs: list[tuple[float, float, float]] = []
-        p_prev = bench.probe()
-        while len(recs) < args.n + args.max_extra:
-            spark.catalog.clearCache()
-            t0 = time.time()
-            qs[name](spark, args.sf).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            sec = round(time.time() - t0, 3)
-            p_next = bench.probe()
-            recs.append(
-                (
-                    sec,
-                    round(max(p_prev[0], p_next[0]), 4),
-                    round(max(p_prev[1], p_next[1]), 4),
-                )
+    sessions = []
+    for i in range(SESSIONS):
+        # One process per session: a session's JVM exits with it.
+        with ProcessPoolExecutor(1, mp_context=get_context("spawn")) as ex:
+            sessions.append(
+                ex.submit(session, names, args.sf, cpus, args.n).result()
             )
-            p_prev = p_next
-            calm = [
-                r
-                for r in recs
-                if r[1] <= bench.PROBE_GATE and r[2] <= bench.IO_GATE
-            ]
-            # A pin wants a REPRESENTATIVE calm min: require >= 2 calm
-            # runs before stopping (a single calm run can't show its
-            # own spread), but never more than the retry budget.
-            if len(recs) >= args.n and len(calm) >= 2:
-                break
-        calm = [
-            r
-            for r in recs
-            if r[1] <= bench.PROBE_GATE and r[2] <= bench.IO_GATE
-        ]
-        times_all[name] = recs
-        if calm:
-            out[name] = min(r[0] for r in calm)
-        else:
-            uncalm.append(name)
-    print(
-        json.dumps(
-            {
-                "queries": out,
-                "uncalm": uncalm,
-                "runs": times_all,
-                "probe_gate_s": bench.PROBE_GATE,
-                "io_gate_s": bench.IO_GATE,
-                "cpus": args.cpus,
-                "sf": args.sf,
-            }
-        )
-    )
-    spark.stop()
+        print(f"  session {i + 1}/{SESSIONS} done", file=sys.stderr)
+
+    base = {row: dict(old.get(row, {})) for row in ROWS}
+    for row in ROWS:
+        for name in names:
+            base[row][name] = round(
+                statistics.median(s[row][name] for s in sessions), 3
+            )
+    base.update({
+        "metric": "headline_suite_baseline",
+        "sf": float(sf),
+        "cpus": cpus,
+        "sessions": SESSIONS,
+        "runs_per_query": args.n,
+        "n_queries": len(base["queries"]),
+        "value": round(sum(base["queries"].values()), 3),
+        "note": (
+            "Pinned by tools/pin_baseline.py: per row, the median over "
+            f"{SESSIONS} fresh-JVM sessions of bench.py's protocol "
+            "(bench.warm_up, then bench.measure: noop sink, cache "
+            "cleared, process-tree CPU without JIT compiler threads). "
+            "queries = min wall, queries_median = median wall, "
+            "queries_cpu = median CPU; bench.py flags a query whose "
+            "median CPU exceeds bench.GUARD x its queries_cpu row."
+        ),
+    })
+    bench.atomic_write_json(path, base)
+    print(json.dumps({"sessions": sessions, "baseline_file": path}))
 
 
 if __name__ == "__main__":

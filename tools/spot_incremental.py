@@ -12,8 +12,9 @@ Protocol, one SF per invocation (fresh JVM, like spot_bench --isolate):
 2. PROBE (the per-drop cost, the number that must stay index-scan-sized):
    read the index parquet back (minhash_lsh_probe uses a pre-banded
    index as-is), band + broadcast the 10% batch, count distinct
-   candidate pairs to a noop sink. N runs, each bracketed by the
-   two-leg CPU+I/O calm gate from bench.py; min of calm runs reported.
+   candidate pairs to a noop sink. ``--n`` runs through
+   ``bench.measure`` (cache cleared, wall and process-tree CPU); min
+   and median wall and median CPU reported.
 
 The 10%/90% split is the same deterministic md5 bucket the
 ``dedup_incremental_lsh`` oracle uses, so the probe semantics here are
@@ -23,8 +24,8 @@ instead of being banded in-plan.
     python tools/spot_incremental.py --sf .testdata/sf30
     python tools/spot_incremental.py --sf .testdata/sf100
 
-Prints one JSON line with index_build_s, index_rows, batch_rows,
-probe runs, calm mins and probe-leg evidence.
+Prints one JSON line with index_build_s, index_rows, batch_rows and
+the probe runs' (wall, cpu) readings and summaries.
 """
 
 from __future__ import annotations
@@ -33,7 +34,6 @@ import argparse
 import json
 import os
 import shutil
-import statistics
 import sys
 import time
 
@@ -45,14 +45,12 @@ def main() -> None:
     ap.add_argument("--sf", required=True)
     ap.add_argument("--cpus", type=int, default=32)
     ap.add_argument("--n", type=int, default=2)
-    ap.add_argument("--max-extra", type=int, default=4)
-    ap.add_argument("--calib-gate", type=float, default=1.0)
     ap.add_argument("--index-dir", default="/tmp/atp_incr_index")
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
 
-    from bench import IO_GATE, cpu_calibration, io_probe
+    from bench import measure, summarize
     from automotive_translation_pipeline_spark.operators.dedup import (
         lsh_banded_table,
         minhash_lsh_probe,
@@ -85,51 +83,23 @@ def main() -> None:
     index_rows = index.count()
     batch_rows = batch.count()
 
-    runs: list[tuple[float, float, float]] = []
-    attempts = 0
-    while attempts < args.n + args.max_extra:
-        attempts += 1
-        c0, i0 = cpu_calibration(), io_probe()
-        spark.catalog.clearCache()
-        t0 = time.time()
-        minhash_lsh_probe(
+    def probe(spark, _sf_dir):
+        return minhash_lsh_probe(
             index, batch, text_col="text", id_col="doc_id",
             num_hashes=16, bands=4, k=3,
-        ).write.format("noop").mode("overwrite").save()
-        sec = time.time() - t0
-        c1, i1 = cpu_calibration(), io_probe()
-        runs.append((round(sec, 3), max(c0, c1), max(i0, i1)))
-        print(
-            f"  probe run{attempts}: {sec:.1f}s calib={max(c0, c1):.2f} "
-            f"io={max(i0, i1):.3f}",
-            file=sys.stderr,
         )
-        calm = [
-            r for r in runs
-            if r[1] <= args.calib_gate and r[2] <= IO_GATE
-        ]
-        if attempts >= args.n and calm:
-            break
-    calm = [
-        r for r in runs if r[1] <= args.calib_gate and r[2] <= IO_GATE
-    ]
-    pool = calm or runs
-    best = min(pool, key=lambda r: r[0])
+
+    runs = [measure(spark, probe, args.sf) for _ in range(args.n)]
+    probe_min_s, probe_median_s, probe_cpu_s = summarize(runs)
     print(json.dumps({
         "sf_dir": args.sf,
         "cpus": args.cpus,
-        "calib_gate": args.calib_gate,
-        "io_gate": IO_GATE,
         "index_build_s": index_build_s,
         "index_rows": index_rows,
         "batch_rows": batch_rows,
-        "probe_min_s": best[0],
-        "probe_min_calib": best[1],
-        "probe_min_io": best[2],
-        "probe_median_s": round(
-            statistics.median(r[0] for r in runs), 3
-        ),
-        "calm": bool(calm),
+        "probe_min_s": probe_min_s,
+        "probe_median_s": probe_median_s,
+        "probe_cpu_s": probe_cpu_s,
         "runs": runs,
     }))
     spark.stop()
