@@ -33,6 +33,8 @@ import sys
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators.staging import stage, staged
+
 USAGE = """Automotive Translation Pipeline (Spark engine)
 
 Usage:
@@ -93,10 +95,13 @@ def cmd_translate(
     print(f"Output written:  {output_csv}")
 
 
+@staged()
 def cmd_analyze(
     spark: SparkSession, responses_jsonl: str, input_csv: str | None = None
 ) -> None:
-    """§3.2 error analysis: parse-outcome taxonomy + repaired store."""
+    """§3.2 error analysis: parse-outcome taxonomy + repaired store.
+    A ``staged()`` scope: the cached classification is released on
+    return."""
     from .functions.parsing import parse_translations
     from .functions.predicates import is_truncated
     from .functions.repair import repair_json_udf
@@ -113,7 +118,7 @@ def cmd_analyze(
     repaired_n = F.size(
         parse_translations(F.coalesce(repaired_content, F.col("content")))
     )
-    classified = raw.select(
+    classified = stage(raw.select(
         "custom_id",
         "content",
         repaired_content.alias("repaired_content"),
@@ -133,7 +138,7 @@ def cmd_analyze(
         .when(repaired_n > 0, "repaired")
         .otherwise("unparseable")
         .alias("error_type"),
-    ).persist()
+    ), "cache")
 
     report = error_rollup(classified).orderBy(F.col("n").desc(), "error_type")
     print("\nError taxonomy:")
@@ -185,9 +190,9 @@ def cmd_analyze(
         ).first()[0]
         print(f"\nOriginal rows:   {n_docs} (avg est. cost {avg_cost} tokens)")
         print(f"Missing ids:     {n_missing}")
-    classified.unpersist()
 
 
+@staged()
 def cmd_analyze_batch(
     spark: SparkSession,
     responses_jsonl: str,
@@ -199,7 +204,8 @@ def cmd_analyze_batch(
     ``debug_specific_batch``): one batch's expected-vs-received ids —
     missing translations, extras (R-15 ``detect_extras``), and the
     R-29 order check — from the request JSONL that created the batch
-    plus the response JSONL."""
+    plus the response JSONL. A ``staged()`` scope: the cached expected
+    ids are released on every return, also on error."""
     from .functions.parsing import parse_responses
     from .operators.joins import detect_extras
     from .operators.windows import sequence_check
@@ -209,77 +215,66 @@ def cmd_analyze_batch(
     req = read_request_jsonl(spark, requests_jsonl).filter(
         F.col("custom_id") == custom_id
     )
-    expected = req.select(
-        F.posexplode("payload").alias(
-            "exp_pos", "description_id", "english_sentence"
-        )
-    ).persist()
-    parsed = None
-    try:
-        n_expected = expected.count()
-        if n_expected == 0:
-            print(f"[ERROR] {custom_id} not found in {requests_jsonl}")
-            return 1
-        resp = read_response_jsonl(spark, responses_jsonl).filter(
-            F.col("custom_id") == custom_id
-        )
-        if resp.isEmpty():
-            print(f"[ERROR] {custom_id} not found in {responses_jsonl}")
-            return 1
-        parsed = (
-            parse_responses(resp)
-            .select(
-                F.col("batch_id").alias("custom_id"),
-                # Each response's rows leave the map in parse order.
-                F.monotonically_increasing_id().alias("pos"),
-                "description_id",
-                "translation",
-            )
-            .persist()
-        )
-        n_received = parsed.count()
-        chars = resp.select(F.length("content")).first()[0] or 0
-        print(f"Expected ids:    {n_expected}")
-        print(f"Received ids:    {n_received} (content {chars} chars)")
+    expected = stage(req.select(F.posexplode("payload").alias(
+        "exp_pos", "description_id", "english_sentence"
+    )), "cache")
+    n_expected = expected.count()
+    if n_expected == 0:
+        print(f"[ERROR] {custom_id} not found in {requests_jsonl}")
+        return 1
+    resp = read_response_jsonl(spark, responses_jsonl).filter(
+        F.col("custom_id") == custom_id
+    )
+    if resp.isEmpty():
+        print(f"[ERROR] {custom_id} not found in {responses_jsonl}")
+        return 1
+    # Not cached: one response's rows, and caching them measured a job
+    # more and no less CPU.
+    parsed = parse_responses(resp).select(
+        F.col("batch_id").alias("custom_id"),
+        # Each response's rows leave the map in parse order.
+        F.monotonically_increasing_id().alias("pos"),
+        "description_id",
+        "translation",
+    )
+    n_received = parsed.count()
+    chars = resp.select(F.length("content")).first()[0] or 0
+    print(f"Expected ids:    {n_expected}")
+    print(f"Received ids:    {n_received} (content {chars} chars)")
 
-        missing = expected.join(
-            parsed.select("description_id"), "description_id", "left_anti"
-        ).orderBy("exp_pos")
-        print(f"\nMissing translations for {custom_id}:")
-        for r in missing.collect():
-            print(f"  - {r['description_id']}: {r['english_sentence']}")
+    missing = expected.join(
+        parsed.select("description_id"), "description_id", "left_anti"
+    ).orderBy("exp_pos")
+    print(f"\nMissing translations for {custom_id}:")
+    for r in missing.collect():
+        print(f"  - {r['description_id']}: {r['english_sentence']}")
 
-        extras = detect_extras(
-            parsed.select("custom_id", "description_id"),
-            expected.withColumn("custom_id", F.lit(custom_id)),
-            keys=("custom_id", "description_id"),
-        )
-        print(f"\nExtra translations for {custom_id}:")
-        for r in extras.collect():
-            print(f"  - {r['description_id']}")
+    extras = detect_extras(
+        parsed.select("custom_id", "description_id"),
+        expected.withColumn("custom_id", F.lit(custom_id)),
+        keys=("custom_id", "description_id"),
+    )
+    print(f"\nExtra translations for {custom_id}:")
+    for r in extras.collect():
+        print(f"  - {r['description_id']}")
 
-        seq = sequence_check(
-            parsed.join(
-                expected.select(
-                    "description_id", (F.col("exp_pos") + 1).alias("num")
-                ),
-                "description_id",
+    seq = sequence_check(
+        parsed.join(
+            expected.select(
+                "description_id", (F.col("exp_pos") + 1).alias("num")
             ),
-            "custom_id",
-            "pos",
-            "num",
-        )
-        viol = seq.collect()
-        print(f"\nOrder violations: {len(viol)}")
-        for r in viol:
-            print(f"  - {r['description_id']}: requested at {r['num']}, "
-                  f"received at {r['expected_number']}")
-        return 0
-    finally:
-        # Both error returns and any failure release the cached frames.
-        expected.unpersist()
-        if parsed is not None:
-            parsed.unpersist()
+            "description_id",
+        ),
+        "custom_id",
+        "pos",
+        "num",
+    )
+    viol = seq.collect()
+    print(f"\nOrder violations: {len(viol)}")
+    for r in viol:
+        print(f"  - {r['description_id']}: requested at {r['num']}, "
+              f"received at {r['expected_number']}")
+    return 0
 
 
 def cmd_batch(

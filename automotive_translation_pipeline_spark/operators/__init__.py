@@ -1,27 +1,8 @@
 """Operator library.
 
-localCheckpoint doctrine (shared caveat for the ~20 eager/lazy
-``localCheckpoint`` call sites across these modules — ADVICE r10):
-
-* ``localCheckpoint`` stores blocks on EXECUTORS ONLY. It truncates
-  lineage, so it is NOT fault-tolerant: losing an executor (a bad
-  node, or dynamic allocation shrinking the pool) makes every
-  downstream action fail with missing checkpoint blocks. On the
-  long-running cluster deployments the operator docstrings target,
-  either pin executors for the job's lifetime
-  (``spark.dynamicAllocation.enabled=false`` or cached-block timeouts
-  high), or swap in a RELIABLE checkpoint for the few corpus-critical
-  intermediates: ``spark.sparkContext.setCheckpointDir(...)`` +
-  ``df.checkpoint()`` (same truncation semantics, HDFS/object-store
-  durability, one extra write+read). Every call site here checkpoints
-  BOUNDED intermediates (vocabulary-, group-, or candidate-sized
-  tables — never the corpus), so the reliable form's extra I/O is
-  cheap where it matters.
-* Checkpoint blocks are released when the DataFrame is
-  garbage-collected (or its underlying RDD unpersisted) — NOT by
-  ``spark.catalog.clearCache()``, which clears only the SQL relation
-  cache. Long sessions should drop references when done.
-"""
+Every persisted or checkpointed intermediate goes through
+:mod:`.staging` (``stage``/``staged``), which also holds the
+localCheckpoint doctrine."""
 
 from .aggregates import (  # noqa: F401
     error_rollup,

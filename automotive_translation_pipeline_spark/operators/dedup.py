@@ -19,6 +19,7 @@ from ..functions.text import (
     word_shingles,
     word_shingles_of,
 )
+from .staging import release, stage
 
 
 def anti_join_dedup(
@@ -238,7 +239,7 @@ def minhash_lsh_candidates(
     # racing concurrent stages, same trap as triangle_counts). One
     # bounded materialization ≈ the index-build step; measured sf1:
     # 11.8 → 10.4 s cold and ~10 → 5.8 s warm for the candidate query.
-    banded = banded.localCheckpoint()
+    banded = stage(banded)
     if max_bucket is not None:
         banded = _drop_over_cap_buckets(banded, max_bucket)
     left = banded.alias("l")
@@ -297,7 +298,7 @@ def minhash_lsh_probe(
             # the scan→shingle→md5→min chain runs ONCE, mirroring the
             # candidates path. A pre-built index is already a cheap
             # re-scannable artifact (parquet), so it is not checkpointed.
-            idx = idx.localCheckpoint()
+            idx = stage(idx)
     if max_bucket is not None:
         idx = _drop_over_cap_buckets(idx, max_bucket)
     if {"band", "bucket", id_col} <= set(batch_df.columns):
@@ -361,20 +362,20 @@ def connected_components(
     # table is cached — the old two-select union re-ran the upstream
     # per leg. The self-loop rows union in from the labels CHECKPOINT,
     # so materializing `looped` costs no extra upstream run.
-    sym = edges.select(
-        F.explode(
-            F.array(
-                F.struct(F.col(src).alias("node"), F.col(dst).alias("nbr")),
-                F.struct(F.col(dst).alias("node"), F.col(src).alias("nbr")),
-            )
-        ).alias("__e")
-    ).select("__e.node", "__e.nbr").persist()
-    labels = sym.select("node").distinct().withColumn("label", F.col("node"))
-    labels = labels.localCheckpoint()
-    looped = sym.union(labels.select("node", F.col("node").alias("nbr")))
+    both = F.array(
+        F.struct(F.col(src).alias("node"), F.col(dst).alias("nbr")),
+        F.struct(F.col(dst).alias("node"), F.col(src).alias("nbr")),
+    )
+    sym = stage(
+        edges.select(F.explode(both).alias("__e")).select("__e.node", "__e.nbr"),
+        "cache",
+    )
+    seed = stage(sym.select("node").distinct().withColumn("label", F.col("node")))
+    looped = sym.union(seed.select("node", F.col("node").alias("nbr")))
+    labels = seed
     for _ in range(max_iter):
         changed = Observation("cc_changed")
-        labels = (
+        prev, labels = labels, stage(
             looped.join(
                 labels.select(
                     F.col("node").alias("nbr"), F.col("label").alias("nbr_label")
@@ -392,11 +393,14 @@ def connected_components(
                 changed,
                 F.count(F.when(F.col("label") != F.col("__old"), 1)).alias("n"),
             )
-            .localCheckpoint()
         )
+        # The new round is checkpointed: the one it replaces is free
+        # (the seed stays, `looped` reads it).
+        if prev is not seed:
+            release(prev)
         if changed.get["n"] == 0:
             break
-    sym.unpersist()
+    release(sym, seed)
     return labels.select("node", F.col("label").alias("component"))
 
 
@@ -443,11 +447,11 @@ def ngram_jaccard_pairs(
     # Checkpoint the candidate pairs: they feed the id prune AND the
     # verification join, and they are tiny (LSH-bounded) next to the
     # chain that produced them.
-    cand = minhash_lsh_candidates(
+    cand = stage(minhash_lsh_candidates(
         df, text_col=text_col, id_col=id_col,
         num_hashes=num_hashes, bands=bands, k=k,
         max_bucket=max_bucket,
-    ).localCheckpoint()
+    ))
     ids = (
         cand.select(F.col("id_a").alias(id_col))
         .union(cand.select(F.col("id_b").alias(id_col)))
@@ -999,8 +1003,9 @@ def semantic_dedup(
     size, so total pair work is ``n x cell_size`` — linear in the
     corpus ONLY if cells stay constant-sized. The default
     ``n_cells=None`` derives that automatically (``ceil(n / target_cell_size)``;
-    the one count action is cheap here — the quantizer fit collects
-    its training set anyway, laziness is spent). A FIXED n_cells grows
+    up to ``fit_cap`` vectors ``n`` is the length of the quantizer's
+    fit-set collect, which is the whole corpus, and only above it is the
+    corpus counted). A FIXED n_cells grows
     cells with the corpus and goes quadratic — fine for a known size,
     wrong as a scaling default. The quantizer is the IVF one
     (similarity._coarse_quantize): numpy Lloyd on a deterministic
@@ -1032,13 +1037,13 @@ def semantic_dedup(
     import pandas as pd
     from pyspark.sql import types as T
 
-    from .similarity import _coarse_quantize
+    from .similarity import _coarse_quantize, _fit_rows
 
-    n = emb.count()
+    n, fit_rows = _fit_rows(emb, id_col, vec_col, fit_cap)
     if n_cells is None:
         n_cells = max(4, -(-n // target_cell_size))  # ceil division
     assigned, cent_df = _coarse_quantize(
-        emb, n_cells, seed, id_col, vec_col, n=n, fit_cap=fit_cap
+        emb, n_cells, seed, id_col, vec_col, fit_rows=fit_rows
     )
     # A local relation: collecting it runs no Spark job.
     cents = np.array([c for _, c in sorted(cent_df.collect())], dtype=np.float64)
@@ -1501,13 +1506,8 @@ def winnow_fingerprint_pairs(
     data. TWO near-identical copies are pinned (``fps`` and its
     frequency-filtered subset ``kept`` — the second checkpoint buys
     the pair join one fewer frequency-join replay at the cost of a
-    doubled footprint, both bounded by the ~2/(w+1) winnowed set), and
-    localCheckpoint RDD blocks are NOT released by
-    ``spark.catalog.clearCache()`` (that clears only the SQL relation
-    cache): they are freed when the DataFrame is garbage-collected or
-    its underlying RDD is unpersisted. Long-lived sessions should drop
-    references to the returned DataFrame when done; fresh-session
-    callers (as bench.py uses) are unaffected.
+    doubled footprint, both bounded by the ~2/(w+1) winnowed set); the
+    caller's ``staged()`` scope releases both.
     """
     words = F.split(normalized_text(F.col(text_col)), " ")
     base = df.select(
@@ -1533,7 +1533,7 @@ def winnow_fingerprint_pairs(
         .orderBy("__i")
         .rowsBetween(-(w - 1), Window.currentRow)
     )
-    fps = (
+    fps = stage(
         grams.withColumn("__min", F.min("__h").over(wsel))
         .filter(F.col("__h") == F.col("__min"))
         .select(id_col, "__h")
@@ -1547,15 +1547,14 @@ def winnow_fingerprint_pairs(
         # bimodal trap basket_brand_lift measured). One blocking
         # materialization of the ~2/(w+1)-winnowed narrow set removes
         # the race entirely.
-        .localCheckpoint()
     )
     df_count = fps.groupBy("__h").agg(F.count(F.lit(1)).alias("__df"))
     # kept feeds BOTH sides of the pair self-join; checkpoint it too
     # (bounded by the fps set) so the frequency join runs once, not
     # once per side.
-    kept = fps.join(
+    kept = stage(fps.join(
         df_count.filter(F.col("__df") <= max_df).select("__h"), "__h"
-    ).localCheckpoint()
+    ))
     a = kept.select(F.col(id_col).alias("id_a"), "__h")
     b = kept.select(F.col(id_col).alias("id_b"), "__h")
     return (

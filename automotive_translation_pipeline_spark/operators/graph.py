@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .staging import stage
+
 
 def pagerank(
     edges: DataFrame,
@@ -64,17 +66,11 @@ def pagerank(
     # so each iteration is ONE join + one keyed rollup — the minimal
     # power-iteration step. r/__outdeg stays a division (not a
     # precomputed reciprocal) so per-edge float math is unchanged.
-    deg = (
-        edges.groupBy("u")
-        .agg(F.count(F.lit(1)).alias("__outdeg"))
-        .localCheckpoint(eager=False)
+    deg = stage(
+        edges.groupBy("u").agg(F.count(F.lit(1)).alias("__outdeg")), "lazy"
     )
     n = deg.agg(F.count(F.lit(1)).cast("double").alias("__n"))
-    ew = (
-        edges.join(deg, "u")
-        .select("u", "v", "__outdeg")
-        .localCheckpoint(eager=False)
-    )
+    ew = stage(edges.join(deg, "u").select("u", "v", "__outdeg"), "lazy")
     ranks = (
         deg.select(F.col("u").alias("node"))
         .crossJoin(F.broadcast(n))
@@ -98,7 +94,7 @@ def pagerank(
             )
         )
         if checkpoint:
-            ranks = ranks.localCheckpoint(eager=False)
+            ranks = stage(ranks, "lazy")
     return ranks.crossJoin(F.broadcast(n)).select(
         "node", F.round(F.col("r") * F.col("__n"), ndigits).alias("pr_rel")
     )
@@ -130,7 +126,7 @@ def triangle_counts(pairs: DataFrame) -> DataFrame:
     # lands (measured 2x wall at sf1). One blocking edge-list
     # materialization is the standard graph-engine move and is bounded
     # by the candidate-pair count, never the corpus.
-    e = pairs.select("id_a", "id_b").localCheckpoint()
+    e = stage(pairs.select("id_a", "id_b"))
     deg = (
         e.select(F.col("id_a").alias("node"))
         .unionAll(e.select(F.col("id_b").alias("node")))
@@ -153,10 +149,10 @@ def triangle_counts(pairs: DataFrame) -> DataFrame:
     # orientation joins x9 — 86 Exchange prints for one triangle
     # count). One more edge-sized eager checkpoint makes e1/e2/e3
     # cheap scans. Same bound as `e` itself: |edges| narrow rows.
-    fwd = ed.select(
+    fwd = stage(ed.select(
         F.when(a_first, F.col("id_a")).otherwise(F.col("id_b")).alias("u"),
         F.when(a_first, F.col("id_b")).otherwise(F.col("id_a")).alias("v"),
-    ).localCheckpoint()
+    ))
     e1 = fwd.select(F.col("u").alias("a"), F.col("v").alias("b"))
     e2 = fwd.select(F.col("u").alias("b"), F.col("v").alias("c"))
     e3 = fwd.select(F.col("u").alias("a"), F.col("v").alias("c"))

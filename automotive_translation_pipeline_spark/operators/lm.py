@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import normalized_text
 from ..sources import local_frame
+from .staging import stage
 
 
 # Same row gate as BIGRAM_BROADCAST_MAX_VOCAB, for the word
@@ -116,7 +117,7 @@ def unigram_surprisal(
     # actual relation size for variable-length words (ADVICE r9 — a
     # 16M-row vocabulary of long tokens is not 16M × 16 B).
     gate = Observation("unigram_gate")
-    wc = (
+    wc = stage(
         base.select(exploded)
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("__wc"))
@@ -125,7 +126,6 @@ def unigram_surprisal(
             F.count(F.lit(1)).alias("__rows"),
             F.coalesce(F.sum(F.length("word")), F.lit(0)).alias("__chars"),
         )
-        .localCheckpoint()
     )
     stats = gate.get
     est_bytes = stats["__chars"] * 2 + stats["__rows"] * 48
@@ -143,16 +143,12 @@ def unigram_surprisal(
     # thing to persist; deriving total from the pairs directly would
     # either re-run the scan+explode branch or cache the pairs, both
     # corpus-sized costs).
-    per_doc = (
-        with_wc.groupBy(id_col)
-        .agg(
-            F.sum("__n").alias("n_words"),
-            (F.sum(F.col("__n") * F.log(F.col("__wc"))) / F.sum("__n")).alias(
-                "__mean_ln_wc"
-            ),
-        )
-        .persist()
-    )
+    per_doc = stage(with_wc.groupBy(id_col).agg(
+        F.sum("__n").alias("n_words"),
+        (F.sum(F.col("__n") * F.log(F.col("__wc"))) / F.sum("__n")).alias(
+            "__mean_ln_wc"
+        ),
+    ), "cache")
     total = per_doc.agg(F.sum("n_words").alias("__total"))
     return per_doc.crossJoin(F.broadcast(total)).select(
         F.col(id_col),
@@ -187,9 +183,9 @@ def split_word_drift(
     Scale shape: one corpus scan; the split label is a pure expression
     of the id (the same md5 bucket as the samplers — no join against a
     membership table); the per-word split counts collapse map-side into
-    one vocabulary-sized table, which is persisted so the totals
-    (1-row aggregate) and the scored top-k both read it; the top-k is
-    a TakeOrdered, never a global sort.
+    one vocabulary-sized table, which the totals (1-row aggregate) and
+    the scored top-k both read (caching it measured two jobs more and
+    no less CPU); the top-k is a TakeOrdered, never a global sort.
     """
     from .sampling import split_of
 
@@ -201,13 +197,9 @@ def split_word_drift(
             F.explode(F.split(normalized_text(F.col(text_col)), " ")).alias("word"),
         )
     )
-    vocab = (
-        words.groupBy("word")
-        .agg(
-            F.count(F.when(F.col("__split") == "train", F.lit(1))).alias("n_train"),
-            F.count(F.when(F.col("__split") == "eval", F.lit(1))).alias("n_eval"),
-        )
-        .persist()
+    vocab = words.groupBy("word").agg(
+        F.count(F.when(F.col("__split") == "train", F.lit(1))).alias("n_train"),
+        F.count(F.when(F.col("__split") == "eval", F.lit(1))).alias("n_eval"),
     )
     totals = vocab.agg(
         F.sum("n_train").cast("double").alias("__t_tr"),
@@ -353,13 +345,12 @@ def bigram_surprisal(
     # The vocabulary size is observed on the checkpoint's own pass, so
     # the broadcast gate below costs no job of its own.
     vocab = Observation("bigram_vocab")
-    c12 = (
+    c12 = stage(
         base.select(bg_cols)
         .select(h1, fp)
         .groupBy("__h1", "__fp")
         .agg(F.count(F.lit(1)).alias("__c12"))
         .observe(vocab, F.count(F.lit(1)).alias("__rows"))
-        .localCheckpoint()
     )
     n_bigrams = vocab.get["__rows"]
     if _bigram_fp_check_enabled():
@@ -650,9 +641,8 @@ def _bpe_loop(
         if counted
         else words.groupBy("word").agg(F.count(F.lit(1)).alias("wf"))
     )
-    vocab = (
-        counts.filter(F.col("word").rlike("^\\w+$"))
-        .select(
+    vocab = stage(
+        counts.filter(F.col("word").rlike("^\\w+$")).select(
             "word",
             # Spark's split keeps a trailing "" (the (?!^) lookahead
             # also matches at end-of-string under Java's limit=-1);
@@ -662,7 +652,6 @@ def _bpe_loop(
             ).alias("symbols"),
             F.col("wf"),
         )
-        .localCheckpoint()
     )
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(1, n_merges + 1):
@@ -705,9 +694,7 @@ def _bpe_loop(
                 ),
             ).otherwise(F.concat(acc, F.array(x))),
         )
-        vocab = vocab.select(
-            "word", folded.alias("symbols"), "wf"
-        ).localCheckpoint()
+        vocab = stage(vocab.select("word", folded.alias("symbols"), "wf"))
     return vocab, merges
 
 
@@ -744,10 +731,8 @@ def bpe_tokenize_stats(
             "word"
         ),
     ).filter(F.col("word").rlike("^\\w+$"))
-    counts = (
-        words.groupBy(group_col, "word")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .localCheckpoint()
+    counts = stage(
+        words.groupBy(group_col, "word").agg(F.count(F.lit(1)).alias("__n"))
     )
     wordfreq = counts.groupBy("word").agg(F.sum("__n").alias("wf"))
     vocab, _ = _bpe_loop(wordfreq, n_merges, counted=True)

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources import local_frame
+from .staging import stage
 
 #: Buckets for percentage splits: 10_000 gives 0.01% resolution.
 DEFAULT_BUCKETS = 10_000
@@ -321,15 +322,13 @@ def dsir_importance_weights(
     # rows so the pass runs once (persisting a TINY table is the
     # opposite trade from the corpus-sized caches this operator
     # dropped).
-    bkt = (
-        exploded.groupBy("__bkt")
-        .agg(
+    bkt = stage(
+        exploded.groupBy("__bkt").agg(
             F.count(F.lit(1)).alias("__raw_n"),
             F.sum(
                 F.when(F.col("__tgt"), F.lit(1)).otherwise(F.lit(0))
             ).alias("__tgt_n"),
         )
-        .localCheckpoint()
     )
     totals = bkt.agg(
         F.sum("__raw_n").alias("__t_raw"), F.sum("__tgt_n").alias("__t_tgt")

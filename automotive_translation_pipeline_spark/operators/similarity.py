@@ -290,13 +290,36 @@ def build_ivf_index(
     )
 
 
+def _fit_rows(
+    corpus: DataFrame, id_col: str, vec_col: str, fit_cap: int
+) -> tuple[int, list]:
+    """The coarse quantizer's fit set as (id, vec) rows ordered by id
+    (so the centroids do not depend on partitioning), and the corpus
+    size ``n``. Up to ``fit_cap`` vectors the fit set is the whole
+    corpus: one collect of at most ``fit_cap + 1`` rows returns it and
+    its length is ``n``. Only above the cap is the corpus counted, and
+    the fit set is then a deterministic md5-hash sample of about
+    ``fit_cap`` (at 100 TB the fit stays the same size)."""
+    from .sampling import hash_sample
+
+    pairs = corpus.select(id_col, vec_col)
+    rows = pairs.limit(fit_cap + 1).collect()
+    n = len(rows)
+    if n > fit_cap:
+        n = corpus.count()
+        # Full 32-bit hash resolution: with the default 10k buckets the
+        # fraction rounds to an empty sample past 200M vectors.
+        rows = hash_sample(pairs, id_col, fit_cap / n, buckets=1 << 32).collect()
+    return n, sorted(rows, key=lambda r: r[0])
+
+
 def _coarse_quantize(
     corpus: DataFrame,
     n_cells: int,
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n: int | None = None,
+    fit_rows: list | None = None,
     fit_cap: int = 20_000,
 ) -> tuple[DataFrame, DataFrame]:
     """The one coarse quantizer behind IVF, the persisted IVF index and
@@ -304,34 +327,22 @@ def _coarse_quantize(
     subspace (L2-normalized space), then every vector assigned to its
     nearest centroid by :func:`pq_encode` in one Arrow-batched pass.
 
-    The fit set is the corpus up to ``fit_cap`` vectors, beyond that a
-    deterministic md5-hash sample of about ``fit_cap`` (at 100 TB the
-    fit stays the same size), ordered by id so the centroids do not
-    depend on partitioning. ``n`` is the corpus count if the caller has
-    it. Cells are clamped to half the fit rows (at least 4, at most
+    The fit set is :func:`_fit_rows` (``fit_rows`` if the caller already
+    has it). Cells are clamped to half the fit rows (at least 4, at most
     all of them): past ``fit_cap / 2`` cells the cap binds.
 
     Returns (corpus as (id, vec, __cell), centroids as
     (__cell int, __centroid array<double>)). The assignment is lazy; the
-    fit is eager (one count if ``n`` is not given, one fit-set collect).
+    fit is eager (one bounded collect, plus a count above ``fit_cap``).
     The centroid table is built on the driver with ``local_frame``: a
     local relation, so joining it starts no Python worker and
     collecting it runs no Spark job (SemDeDup collects it back into the
     codebook its per-cell kernel closes over)."""
     import numpy as np
 
-    from .sampling import hash_sample
-
-    if n is None:
-        n = corpus.count()
-    # Full 32-bit hash resolution: with the default 10k buckets the
-    # fraction rounds to an empty sample past 200M vectors.
-    fit_set = (
-        corpus if n <= fit_cap
-        else hash_sample(corpus, id_col, fit_cap / n, buckets=1 << 32)
-    )
-    rows = sorted(fit_set.select(id_col, vec_col).collect(), key=lambda r: r[0])
-    X = np.array([r[1] for r in rows], dtype=np.float64)
+    if fit_rows is None:
+        _, fit_rows = _fit_rows(corpus, id_col, vec_col, fit_cap)
+    X = np.array([r[1] for r in fit_rows], dtype=np.float64)
     n_codes = min(n_cells, max(4, len(X) // 2), max(1, len(X)))
     codebook = _lloyd_codebook(X, m=1, n_codes=n_codes, seed=seed)
     assigned = pq_encode(corpus.select(id_col, vec_col), codebook, vec_col).select(

@@ -121,8 +121,8 @@ def mad_outliers(
     subtree was duplicated into the MAD branch because each broadcast
     build re-derived it). Now: one histogram aggregate per median
     (map-side combined to distinct (group, value) rows), the tiny
-    per-group median table eagerly checkpointed so the deviation pass
-    and the final join both read it, zero corpus sorts. The deviation
+    per-group median table broadcast once into the deviation pass,
+    zero corpus sorts. The deviation
     ordering used (dev, value); dev is a pure function of value within
     a group, so the dev at any rank — the only thing the MAD needs —
     is unchanged by the tiebreak.
@@ -135,7 +135,7 @@ def mad_outliers(
     limits; drop the hints there and let AQE pick the strategy (the
     rest of the plan is unchanged).
     """
-    med = _hist_median(df, group_cols, value_col, "__med").localCheckpoint()
+    med = _hist_median(df, group_cols, value_col, "__med")
     with_dev = df.join(F.broadcast(med), group_cols).withColumn(
         "__dev", F.abs(F.col(value_col) - F.col("__med"))
     )

@@ -52,9 +52,9 @@ def folder_pipeline(
     content, so their rows surface as ``is_failed`` sentinel rows
     exactly like the reference's failed-subprocess files.
 
-    Lazy: the two cached frames stay cached; ``cli batch`` runs the
-    ``pipeline.translating`` scope instead, which releases them."""
-    rows = _translate(folder_todo(spark, input_dir), 4000, translate_fn)[0]
+    Lazy: the caller's ``staged()`` scope owns the two cached frames;
+    ``cli batch`` runs the ``pipeline.translating`` scope instead."""
+    rows = _translate(folder_todo(spark, input_dir), 4000, translate_fn)
     return rows.drop("shard")
 
 

@@ -38,6 +38,7 @@ from ..operators.packing import (
     materialize_requests,
     with_cost,
 )
+from ..operators.staging import stage, staged
 from ..operators.windows import shift_flags
 from ..sources import load_testdata
 from ..translate import translate_requests
@@ -91,30 +92,27 @@ def _rejoin_and_flag(
     return shift_flags(flagged, batch_col="batch_id", order_col="seq")
 
 
-def _translate(
-    todo: DataFrame, limit: int, translate_fn
-) -> tuple[DataFrame, tuple[DataFrame, DataFrame]]:
-    """The one composition of the chain; returns the flagged rows and
-    the two frames their plan reads from cache. ``translate_fn`` is the
-    X-5 seam: ``translate_requests`` (mock or live), or a fault-injecting
+def _translate(todo: DataFrame, limit: int, translate_fn) -> DataFrame:
+    """The one composition of the chain; returns the flagged rows, whose
+    plan reads two staged (cached) frames. ``translate_fn`` is the X-5
+    seam: ``translate_requests`` (mock or live), or a fault-injecting
     map passed through ``folder_pipeline``."""
     # The batch assignment feeds BOTH the request materialization and
-    # the expected-rows join side; unpersisted, Spark recomputes the
+    # the expected-rows join side; uncached, Spark recomputes the
     # scan→filter→anti-join→window chain per consumer (4 source scans
-    # in the physical plan). Persist is the staging point — the
+    # in the physical plan). The cache is the staging point — the
     # reference kept this same artifact in driver memory
     # (auto_translate.py:340,932-935); on a cluster it's a
     # MEMORY_AND_DISK cache or an intermediate table write.
-    assigned = _pack(todo, limit).persist()
+    assigned = stage(_pack(todo, limit), "cache")
 
-    # X-5: the grouped translate map (mock in the harness). persist():
+    # X-5: the grouped translate map (mock in the harness). Cached:
     # the responses are the one paid, per-batch LLM call; every further
     # action on the result (a count, then a write) re-reads them instead
     # of calling the translator again. One row per batch, so the cache
     # is small.
-    responses = translate_fn(materialize_requests(assigned)).persist()
-    rows = _rejoin_and_flag(assigned, todo.columns, _parse_responses(responses))
-    return rows, (assigned, responses)
+    responses = stage(translate_fn(materialize_requests(assigned)), "cache")
+    return _rejoin_and_flag(assigned, todo.columns, _parse_responses(responses))
 
 
 @contextmanager
@@ -123,21 +121,18 @@ def translating(todo: DataFrame, limit: int = 4000) -> Iterator[DataFrame]:
     re-join → quality flags. ``todo`` carries (description_id,
     english_sentence, shard, seq), already filtered and deduplicated;
     its columns ride through, and batch ids are ``{shard}-N``.
-    The two cached frames are released on exit, also on error, so run
-    every action on the rows inside the ``with``."""
-    rows, held = _translate(todo, limit, translate_requests)
-    try:
-        yield rows
-    finally:
-        for df in held:
-            df.unpersist()
+    It is an ``operators.staging.staged`` scope: the two cached frames
+    are released on exit, also on error, so run every action on the
+    rows inside the ``with``."""
+    with staged():
+        yield _translate(todo, limit, translate_requests)
 
 
 def translate_docs(todo: DataFrame, limit: int = 4000) -> DataFrame:
     """:func:`translating` as a plain lazy DataFrame, for callers that
-    only plan (the catalog, the benchmark): the two cached frames stay
-    in the session's cache until it is cleared."""
-    return _translate(todo, limit, translate_requests)[0]
+    only plan (the catalog, the benchmark); the caller's ``staged()``
+    scope owns its two cached frames."""
+    return _translate(todo, limit, translate_requests)
 
 
 def _stage_table(

@@ -31,6 +31,7 @@ from .functions.timeutil import format_unix_ts
 from .operators.aggregates import error_rollup, group_counts
 from .operators.dedup import anti_join_dedup, exact_dedup
 from .operators.packing import assign_batches_cumsum, with_cost
+from .operators.staging import stage
 from .operators.windows import last_wins, sequence_check, shift_flags, topk_recent
 from .sources import load_testdata, local_frame, scan_ts_pruned
 
@@ -111,6 +112,15 @@ _CHANGED_THIS_ROUND = frozenset({
     "parse_udtf_lateral",  # docstring names the real test module
     # one path per operator (option-selected forks deleted):
     "dedup_ngram_jaccard",  # docstring + oracle comment drop the exhaustive twin
+    # one owner for materialized intermediates (operators.staging.stage):
+    "curation_full_pipeline",
+    "dedup_canonical_survivors",
+    "dedup_components",
+    "folder_status_taxonomy",
+    "graph_pagerank_dup_hubs",
+    "graph_triangle_counts",
+    "sql_recursive_bfs_hops",
+    "tpch_q15_top_supplier",
 })
 
 
@@ -1346,13 +1356,12 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the same pair generation and closes it with a recursive
     transitive-closure CTE — exact cluster parity, not just pair
     parity."""
-    from .operators.dedup import connected_components, minhash_lsh_candidates
+    from .operators.dedup import connected_components
 
     t = load_testdata(spark, sf_dir)
-    pairs = minhash_lsh_candidates(
-        t["documents"], text_col="text", id_col="doc_id", num_hashes=16, bands=4, k=3
-    ).persist()
-    return connected_components(pairs)
+    # No cache here: connected_components caches its symmetric edge
+    # table, the one frame it reads every round.
+    return connected_components(_lsh_pairs(t["documents"]))
 
 
 @register(
@@ -3389,7 +3398,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_revenue"
         )
     )
-    revenue = revenue.persist()
+    revenue = stage(revenue, "cache")
     max_rev = revenue.agg(F.max("total_revenue").alias("max_revenue"))
     best = (
         revenue.join(F.broadcast(max_rev))
@@ -5559,18 +5568,18 @@ def curation_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("__rn") == 1)
         .drop("__rn", "__fp")
     )
-    clean = (
+    clean = stage(
         remove_duplicate_spans_text(ded, k=8)
         .filter(F.col("kept_words") >= 5)
-        .withColumn("split", split_of(F.col("doc_id")))
-        .persist()
+        .withColumn("split", split_of(F.col("doc_id"))),
+        "cache",
     )
     train = clean.filter(F.col("split") == "train")
     evald = clean.filter(F.col("split") == "eval")
     contam = decontaminate(
         train, evald, text_col="clean_text", min_overlap=3
     )
-    surv = train.join(contam.select("doc_id"), "doc_id", "left_anti").persist()
+    surv = stage(train.join(contam.select("doc_id"), "doc_id", "left_anti"), "cache")
     dsir = dsir_importance_weights(
         surv, F.col("lang") == "en", text_col="clean_text"
     )
@@ -5744,14 +5753,12 @@ def folder_status_taxonomy(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("lang").alias("shard"),
         )
     )
-    # persist() is load-bearing (same staging pattern as pipeline_rows):
-    # `assigned` feeds BOTH the request build and the per-batch row
-    # counts; without it Catalyst duplicates the scan + pack window into
-    # each join branch — the kind of silent 2x that matters at 100 TB.
+    # `assigned` feeds both the request build and the per-batch row
+    # counts; caching it measured one job more and no less CPU.
     assigned = assign_batches_cumsum(
         with_cost(docs, "sentence"), order_col="doc_id", limit=4000,
         shard_col="shard",
-    ).persist()
+    )
     requests = materialize_requests(
         assigned, id_col="doc_id", text_col="sentence"
     )
@@ -5864,14 +5871,10 @@ def dedup_canonical_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.py:canonical_survivors). The oracle replays pair
     generation, closes clusters with a recursive transitive-closure CTE,
     and re-runs the same election window."""
-    from .operators.dedup import canonical_survivors, minhash_lsh_candidates
+    from .operators.dedup import canonical_survivors
 
-    t = load_testdata(spark, sf_dir)
-    docs = t["documents"]
-    pairs = minhash_lsh_candidates(
-        docs, text_col="text", id_col="doc_id", num_hashes=16, bands=4, k=3
-    ).persist()
-    return canonical_survivors(docs, pairs)
+    docs = load_testdata(spark, sf_dir)["documents"]
+    return canonical_survivors(docs, _lsh_pairs(docs))
 
 
 def _mmr_oracle_sql(k: int = 10, fetch_k: int = 40, lam: float = 0.7) -> str:
@@ -6943,6 +6946,17 @@ _DUCK_LSH_PAIRS = _DUCK_SHINGLE_CTE + """
 """
 
 
+def _lsh_pairs(docs: DataFrame) -> DataFrame:
+    """The Spark side of ``_DUCK_LSH_PAIRS``: MinHash(16)+LSH(4 bands)
+    candidate pairs over the documents' k=3 shingles, the graph the
+    cluster and graph-analytics entries run on."""
+    from .operators.dedup import minhash_lsh_candidates
+
+    return minhash_lsh_candidates(
+        docs, text_col="text", id_col="doc_id", num_hashes=16, bands=4, k=3
+    )
+
+
 @register(
     "graph_pagerank_dup_hubs",
     _DUCK_LSH_PAIRS
@@ -6978,18 +6992,16 @@ def graph_pagerank_dup_hubs(spark: SparkSession, sf_dir: str) -> DataFrame:
     A node well above pr_rel 1.0 is copied by documents that are
     themselves widely copied — the template/boilerplate family. The
     oracle replays the identical power iteration in SQL."""
-    from .operators.dedup import minhash_lsh_candidates
     from .operators.graph import pagerank
 
-    t = load_testdata(spark, sf_dir)
-    pairs = minhash_lsh_candidates(
-        t["documents"], text_col="text", id_col="doc_id",
-        num_hashes=16, bands=4, k=3,
-    ).persist()
+    pairs = _lsh_pairs(load_testdata(spark, sf_dir)["documents"])
     edges = pairs.select(
         F.col("id_a").alias("u"), F.col("id_b").alias("v")
     ).unionAll(pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
-    return pagerank(edges, iterations=3)
+    # Three rounds stack no plan worth truncating (pagerank's docstring),
+    # and the pairs read from minhash_lsh_candidates' checkpointed bands:
+    # neither a per-round checkpoint nor a pairs cache lowered CPU.
+    return pagerank(edges, iterations=3, checkpoint=False)
 
 
 @register(
@@ -7016,15 +7028,10 @@ def graph_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/graph.py:triangle_counts). Template families
     triangulate; chains of successive edits do not — the count
     separates the two failure modes."""
-    from .operators.dedup import minhash_lsh_candidates
     from .operators.graph import triangle_counts
 
-    t = load_testdata(spark, sf_dir)
-    pairs = minhash_lsh_candidates(
-        t["documents"], text_col="text", id_col="doc_id",
-        num_hashes=16, bands=4, k=3,
-    ).persist()
-    return triangle_counts(pairs)
+    docs = load_testdata(spark, sf_dir)["documents"]
+    return triangle_counts(stage(_lsh_pairs(docs), "cache"))
 
 
 @register(
@@ -7255,9 +7262,7 @@ def search_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.search import bm25_candidates, bm25_score_topk, rrf_fuse
 
     t = load_testdata(spark, sf_dir)
-    cand = bm25_candidates(
-        spark, t["documents"], _BM25_QUERIES
-    ).localCheckpoint()
+    cand = stage(bm25_candidates(spark, t["documents"], _BM25_QUERIES))
 
     def ranked(k1: float) -> DataFrame:
         scored = bm25_score_topk(cand, k=20, k1=k1)
@@ -7574,17 +7579,12 @@ def sql_recursive_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     components are small by construction so the path expansion stays
     bounded. (The iterative-DataFrame equivalent for unbounded graphs
     is operators/dedup.py:connected_components.)"""
-    from .operators.dedup import minhash_lsh_candidates
-
-    t = load_testdata(spark, sf_dir)
-    # persist() the candidate pairs: the recursive CTE references the
+    docs = load_testdata(spark, sf_dir)["documents"]
+    # Cache the candidate pairs: the recursive CTE references the
     # edge view once PER ITERATION, and without materialization every
     # BFS step re-runs the whole MinHash signature pipeline (measured
     # 60 s at sf0.1 vs ~6 s persisted).
-    pairs = minhash_lsh_candidates(
-        t["documents"], text_col="text", id_col="doc_id",
-        num_hashes=16, bands=4, k=3,
-    ).persist()
+    pairs = stage(_lsh_pairs(docs), "cache")
     pairs.createOrReplaceTempView("lsh_pairs")
     return spark.sql("""
         WITH RECURSIVE edges AS (
@@ -7679,10 +7679,8 @@ def profile_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per period and self-joined — duplicating the whole corpus
     # subtree (scan, range agg, distinct, window) into each branch: 6
     # corpus scans where 2 suffice (plan evidence in plans/r10).
-    c = (
-        bk.groupBy("event_type", "period", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
+    c = stage(
+        bk.groupBy("event_type", "period", "bucket").agg(F.count(F.lit(1)).alias("n"))
     )
     # Every event type appears in the count table (each type has >= 1
     # event, whatever its bucket/period), so the grid's type list is a
@@ -8978,10 +8976,10 @@ def basket_brand_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf1, calm both times). One blocking basket materialization
     # (one narrow row per order) pins every consumer to the same
     # bytes.
-    baskets = (
-        bl.groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("p_brand")).alias("brands"))
-        .localCheckpoint()
+    baskets = stage(
+        bl.groupBy("l_orderkey").agg(
+            F.sort_array(F.collect_set("p_brand")).alias("brands")
+        )
     )
     tot = baskets.agg(F.count(F.lit(1)).alias("n_orders"))
     sup = (

@@ -297,14 +297,19 @@ def streaming_incremental_dedup(
         minhash_lsh_candidates,
         minhash_lsh_probe,
     )
+    from ..operators.staging import stage, staged
 
+    # One scope per micro-batch: its checkpoints are released when the
+    # batch is written.
+    @staged()
     def _process(batch_df: DataFrame, _batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        banded = lsh_banded_table(
-            batch_df, text_col, id_col, num_hashes, bands, k
-        ).localCheckpoint()  # one banding feeds probe + self-join + sink
+        # One banding feeds probe + self-join + sink.
+        banded = stage(
+            lsh_banded_table(batch_df, text_col, id_col, num_hashes, bands, k)
+        )
         within = minhash_lsh_candidates(
             banded, id_col=id_col, max_bucket=max_bucket
         ).select(

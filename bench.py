@@ -24,13 +24,16 @@ baseline lands in ``regressions_vs_baseline``.
 The per-run detail (every wall and CPU reading in run order, the accuracy
 verdicts' detail) goes to the sidecar ``BENCH_detail_sf<sf>.json``,
 rewritten atomically after every query, so a run killed mid-suite leaves
-one that parses and lists the queries it finished.
+one that parses and lists the queries it finished. A run stopped by
+``SIGTERM`` (a timeout) still prints its line, built from the queries
+that finished and marked ``"partial": true``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import signal
 import statistics
 import sys
 import tempfile
@@ -39,6 +42,9 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
+from automotive_translation_pipeline_spark.operators.staging import (  # noqa: E402
+    staged,
+)
 from perfbench.harness import atomic_write_json, tree_cpu_seconds  # noqa: E402
 from perfbench.run import JIT_THREADS  # noqa: E402
 
@@ -163,15 +169,18 @@ def sf_tag(sf_dir: str) -> str:
 
 def measure(spark, query, sf_dir: str) -> tuple[float, float]:
     """Clear the cache, build ``query(spark, sf_dir)`` and run it through
-    the noop sink. Returns ``(wall_s, cpu_s)``: ``cpu_s`` is the CPU of
-    this process and all its descendants (the JVM and its Python workers)
-    over the run, without the JVM's JIT compiler threads, whose share
-    depends on how far the JIT has got rather than on the query."""
+    the noop sink in one ``staged()`` scope, so every frame the query
+    staged is released when it returns. Returns ``(wall_s, cpu_s)``:
+    ``cpu_s`` is the CPU of this process and all its descendants (the JVM
+    and its Python workers) over the run, without the JVM's JIT compiler
+    threads, whose share depends on how far the JIT has got rather than
+    on the query."""
     me = os.getpid()
     spark.catalog.clearCache()
     cpu0, jit0 = tree_cpu_seconds(me, skip_threads=JIT_THREADS)
     t0 = time.perf_counter()
-    query(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    with staged():
+        query(spark, sf_dir).write.format("noop").mode("overwrite").save()
     wall = time.perf_counter() - t0
     cpu1, jit1 = tree_cpu_seconds(me, skip_threads=JIT_THREADS)
     # A compiler thread the JVM retires mid-run takes its whole life's
@@ -272,7 +281,8 @@ def run_accuracy_hooks(spark, sf_dir: str) -> dict[str, dict]:
     out: dict[str, dict] = {}
     for name, hook in ACCURACY_CHECKS.items():
         try:
-            ok, detail = hook(spark, sf_dir)
+            with staged():
+                ok, detail = hook(spark, sf_dir)
             out[name] = {"verdict": "PASS" if ok else "FAIL",
                          "detail": str(detail)[:200]}
         except Exception as exc:  # noqa: BLE001 — artifact, not control flow
@@ -280,24 +290,54 @@ def run_accuracy_hooks(spark, sf_dir: str) -> dict[str, dict]:
     return out
 
 
+def suite_line(detail: dict) -> dict:
+    """The line's per-query maps and summary keys over the queries in
+    ``detail`` that finished, per-query maps first: the partial line on
+    ``SIGTERM`` is this, and the full line adds its keys between them."""
+    per_query = detail.get("queries", {})
+    return {
+        "queries_cpu": detail.get("queries_cpu", {}),
+        "queries_median": detail.get("queries_median", {}),
+        "queries": per_query,
+        "n_queries": len(per_query),
+        "sf": detail["sf"],
+        "cpus": detail["cpus"],
+        "unit": "sec",
+        "metric": "headline_suite_wall_time",
+        "value": round(sum(per_query.values()), 3),
+    }
+
+
+def print_partial_on_sigterm(detail: dict) -> None:
+    """On ``SIGTERM``, print :func:`suite_line` over the queries that
+    finished, marked ``"partial": true``, and exit."""
+
+    def on_term(signum, _frame):
+        print(json.dumps({**suite_line(detail), "partial": True}), flush=True)
+        sys.exit(128 + signum)
+
+    signal.signal(signal.SIGTERM, on_term)
+
+
 def main() -> None:
     import __spark_entry__ as entrymod
     from automotive_translation_pipeline_spark.session import get_spark
 
+    sf = sf_tag(SF_DIR)
+    # The same value, of the same type, in the sidecar and the line.
+    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
+    detail = {"sf": sf_val, "cpus": CPUS}
+    print_partial_on_sigterm(detail)
     spark = get_spark(app_name="atp_spark_bench", cpus=CPUS)
     qs = entrymod.queries()
     warm_up(spark, qs, SF_DIR)
 
-    sf = sf_tag(SF_DIR)
-    # The same value, of the same type, in the sidecar and the line.
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     baseline = committed_baseline(sf)
     base_cpu = baseline.get("queries_cpu", {})
     # The heavy set: the ten costliest queries by the baseline, and the
     # flagship; their extra runs steady the median where it matters most.
     rank = base_cpu or baseline.get("queries", {})
     heavy = set(sorted(rank, key=lambda k: -rank[k])[:10]) | {"pipeline_rows"}
-    detail = {"sf": sf_val, "cpus": CPUS}
     detail_path = run_suite(
         spark, qs, HEADLINE, SF_DIR, heavy, detail,
         os.path.join(HERE, f"BENCH_detail_sf{sf}.json"),
@@ -306,22 +346,23 @@ def main() -> None:
     # Engine-side throughput of the flagship (the BASELINE.md comparable:
     # rows through pack→translate→parse→rejoin→flags per second, warm),
     # over its fastest noop run above.
-    n_rows = qs["pipeline_rows"](spark, SF_DIR).count()
+    with staged():
+        n_rows = qs["pipeline_rows"](spark, SF_DIR).count()
     # Accuracy-hook verdicts at the bench SF: the rows-only entries'
     # bounded contracts travel with the perf numbers.
     accuracy = run_accuracy_hooks(spark, SF_DIR)
     detail["accuracy"] = accuracy
     detail_path = write_detail(detail_path, detail)
 
-    per_query = detail["queries"]
     # KEY ORDER IS A CONTRACT: a reader that keeps only the line's
     # trailing ~2000 chars must still get every summary metric, so the big
     # per-query maps go FIRST and the summary LAST; the per-run readings
     # live in the sidecar.
+    line = suite_line(detail)
     payload = {
-        "queries_cpu": detail["queries_cpu"],
-        "queries_median": detail["queries_median"],
-        "queries": per_query,
+        "queries_cpu": line.pop("queries_cpu"),
+        "queries_median": line.pop("queries_median"),
+        "queries": line.pop("queries"),
         "accuracy_verdicts": {
             k: v["verdict"] for k, v in accuracy.items()
         },
@@ -331,7 +372,6 @@ def main() -> None:
         ),
         "runs_per_query": N_RUNS,
         "runs_per_query_heavy": N_RUNS_HEAVY,
-        "cpus": CPUS,
     }
     # Scale evidence: compact pointers to the committed sf1/sf3 runs
     # (same suite, data from tools/gen_testdata.py — see SCALE.md
@@ -369,15 +409,12 @@ def main() -> None:
             ),
             "pipeline_rows": n_rows,
             "pipeline_rows_per_sec_warm": round(
-                n_rows / max(per_query["pipeline_rows"], 1e-9), 1
+                n_rows / max(payload["queries"]["pipeline_rows"], 1e-9), 1
             ),
-            "n_queries": len(per_query),
-            "sf": sf_val,
-            "unit": "sec",
-            "metric": "headline_suite_wall_time",
-            "value": round(sum(per_query.values()), 3),
+            **line,
         }
     )
+    signal.signal(signal.SIGTERM, signal.SIG_DFL)
     print(json.dumps(payload))
     spark.stop()
 

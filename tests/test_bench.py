@@ -5,7 +5,11 @@ from __future__ import annotations
 
 import json
 import os
+import signal
+import subprocess
+import sys
 import tempfile
+import time
 
 import bench
 from automotive_translation_pipeline_spark import queries_catalog as qc
@@ -69,3 +73,39 @@ def test_sidecar_falls_back_to_the_temp_dir(tmp_path, monkeypatch):
     assert got == os.path.join(str(tmp_path), "BENCH_detail_sfX.json")
     with open(got) as fh:
         assert json.load(fh) == {"queries": {"q": 1.0}}
+
+
+def test_sigterm_prints_the_finished_queries(sf_dir, tmp_path):
+    """``bench.py`` stopped by SIGTERM mid-suite still prints its line:
+    the last stdout line parses, is marked partial and lists only the
+    queries that finished, the same ones the sidecar holds. The run is
+    a checkout of symlinks in a temp dir, so its sidecar lands there."""
+    here = os.path.dirname(os.path.abspath(bench.__file__))
+    for name in ("bench.py", "__spark_entry__.py", "pyspark_atp_worker.py",
+                 "perfbench", "automotive_translation_pipeline_spark"):
+        os.symlink(os.path.join(here, name), tmp_path / name)
+    env = {**os.environ, "SPARK_GRAFT_SF_DIR": sf_dir,
+           "SPARK_GRAFT_CPUS": "2", "PYTHONPATH": str(tmp_path)}
+    proc = subprocess.Popen(
+        [sys.executable, str(tmp_path / "bench.py")], cwd=tmp_path, env=env,
+        stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True,
+    )
+    sidecar = tmp_path / f"BENCH_detail_sf{bench.sf_tag(sf_dir)}.json"
+    deadline = time.time() + 300
+    try:
+        while not sidecar.exists() and time.time() < deadline:
+            assert proc.poll() is None, "bench.py exited before its first query"
+            time.sleep(0.5)
+        proc.send_signal(signal.SIGTERM)
+        out, _ = proc.communicate(timeout=120)
+    finally:
+        proc.kill()
+    assert proc.returncode == 128 + signal.SIGTERM
+    line = json.loads(out.strip().splitlines()[-1])
+    assert line["partial"] is True
+    done = list(line["queries"])
+    assert 1 <= len(done) < len(bench.HEADLINE)
+    assert done == bench.HEADLINE[: len(done)]
+    assert set(line["queries_cpu"]) == set(done) and line["n_queries"] == len(done)
+    with open(sidecar) as fh:
+        assert list(json.load(fh)["queries"]) == done

@@ -170,21 +170,65 @@ def _run_stream(spark, tmp_path):
     assert spark.read.parquet(str(tmp_path / "out")).count() == 8
 
 
+def _response_line(custom_id, content):
+    return json.dumps({"custom_id": custom_id, "response": {
+        "status_code": 200,
+        "body": {"choices": [{"message": {"content": content}}]},
+    }, "error": None})
+
+
+def _run_analyze(spark, tmp_path):
+    src = tmp_path / "responses.jsonl"
+    src.write_text(
+        _response_line("b-1", json.dumps({"1": "eins", "2": "zwei"})) + "\n"
+        + _response_line("b-2", '```json\n{"3": "drei", "4": "vi') + "\n",
+        encoding="utf-8",
+    )
+    in_csv = tmp_path / "in.csv"
+    _write_csv(in_csv, [(str(i), f"pad {i}") for i in range(1, 6)])
+    cli.cmd_analyze(spark, str(src), str(in_csv))
+
+
+def _run_analyze_batch(spark, tmp_path):
+    requests = tmp_path / "requests.jsonl"
+    payload = json.dumps({"1": "alpha one", "2": "beta two"})
+    requests.write_text(json.dumps({
+        "custom_id": "b-1", "method": "POST", "url": "/v1/chat/completions",
+        "body": {"messages": [{"role": "user", "content": payload}]},
+    }) + "\n", encoding="utf-8")
+    responses = tmp_path / "responses.jsonl"
+    responses.write_text(
+        _response_line("b-1", json.dumps({"2": "zwei", "1": "eins"})) + "\n",
+        encoding="utf-8",
+    )
+    assert cli.cmd_analyze_batch(
+        spark, str(responses), str(requests), "b-1"
+    ) == 0
+
+
 @pytest.mark.parametrize(
     "run",
-    [_run_translate, _run_batch, _run_stream],
-    ids=["translate", "batch", "stream"],
+    [_run_translate, _run_batch, _run_stream, _run_analyze, _run_analyze_batch],
+    ids=["translate", "batch", "stream", "analyze", "analyze_batch"],
 )
 def test_cli_translate_releases_persisted_frames(spark, tmp_path, run):
-    """A translate job, a folder job and a streaming micro-batch each
-    leave no persisted RDD behind: the pipeline's two cached
-    intermediates are released after the sink write, so a long-lived
-    session running many jobs does not accumulate them."""
+    """A translate job, a folder job, a streaming micro-batch and both
+    analyze forms each leave no persisted RDD and no stored block
+    behind: their staged intermediates are released when the command
+    returns, so a long-lived session running many jobs does not
+    accumulate them."""
     jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
+
+    def resident():
+        return (
+            set(jsc.getPersistentRDDs().keySet().toArray()),
+            {info.id() for info in jsc.sc().getRDDStorageInfo()},
+        )
+
+    before = resident()
     run(spark, tmp_path)
-    after = set(jsc.getPersistentRDDs().keySet().toArray())
-    assert after - before == set()
+    after = resident()
+    assert after[0] <= before[0] and after[1] <= before[1]
 
 
 def test_cli_analyze_taxonomy(spark, tmp_path, capsys):

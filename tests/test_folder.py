@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from automotive_translation_pipeline_spark.operators.staging import stage, staged
 from automotive_translation_pipeline_spark.plans.folder import (
     folder_pipeline,
     folder_summary,
@@ -97,34 +98,35 @@ def test_folder_pipeline_fault_taxonomy(spark, tmp_path):
             lines.append(f"F{f}R{i:03d},{text.strip()}")
         (d / f"input_{f}.csv").write_text("\n".join(lines) + "\n")
 
-    rows = folder_pipeline(
-        spark, str(d), translate_fn=translate_requests_with_faults
-    ).persist()
-    expected = {
-        r["batch_id"]: r["status"]
-        for r in rows.select("batch_id")
-        .distinct()
-        .withColumn("status", batch_status(F.col("batch_id")))
-        .collect()
-    }
-    assert set(expected.values()) == {
-        "completed", "timeout", "api_error", "download_failed"
-    }
-    per_batch = {
-        r["batch_id"]: (r["n_failed"], r["n"])
-        for r in rows.groupBy("batch_id")
-        .agg(
-            F.sum(F.when(F.col("is_failed"), 1).otherwise(0)).alias("n_failed"),
-            F.count("*").alias("n"),
+    with staged():
+        rows = stage(
+            folder_pipeline(spark, str(d), translate_fn=translate_requests_with_faults),
+            "cache",
         )
-        .collect()
-    }
+        expected = {
+            r["batch_id"]: r["status"]
+            for r in rows.select("batch_id")
+            .distinct()
+            .withColumn("status", batch_status(F.col("batch_id")))
+            .collect()
+        }
+        assert set(expected.values()) == {
+            "completed", "timeout", "api_error", "download_failed"
+        }
+        per_batch = {
+            r["batch_id"]: (r["n_failed"], r["n"])
+            for r in rows.groupBy("batch_id")
+            .agg(
+                F.sum(F.when(F.col("is_failed"), 1).otherwise(0)).alias("n_failed"),
+                F.count("*").alias("n"),
+            )
+            .collect()
+        }
     for bid, (n_failed, n) in per_batch.items():
         if expected[bid] == "completed":
             assert n_failed < n, f"{bid} completed but all rows failed"
         else:
             assert n_failed == n, f"{bid} {expected[bid]} leaked translations"
-    rows.unpersist()
 
 
 def test_folder_summary(spark, tmp_path):

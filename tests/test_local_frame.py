@@ -154,3 +154,25 @@ def test_package_reads_only_the_known_env_vars():
                 offenders.append(f"{path}:{node.lineno}")
     assert offenders == []
     assert read <= ENV_READS, sorted(read - ENV_READS)
+
+
+# The calls that materialize or release a DataFrame's data.
+MATERIALIZING = {"persist", "localCheckpoint", "checkpoint", "cache", "unpersist"}
+
+
+def test_package_materializes_only_through_staging():
+    """No package module persists, checkpoints, caches or unpersists a
+    frame except ``operators/staging.py``: every intermediate has one
+    owner, the ``staged()`` scope that releases it."""
+    offenders = []
+    for path, tree in _package_trees():
+        if path.endswith(os.path.join("operators", "staging.py")):
+            continue
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in MATERIALIZING
+            ):
+                offenders.append(f"{path}:{node.lineno} .{node.func.attr}(")
+    assert offenders == []

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from automotive_translation_pipeline_spark.operators.staging import stage, staged
 from automotive_translation_pipeline_spark.plans import (
     translation_pipeline,
     translation_pipeline_summary,
@@ -27,15 +28,16 @@ def test_pipeline_rows(spark, sf_dir):
 
 
 def test_pipeline_failures_only_from_truncation(spark, sf_dir):
-    df = translation_pipeline(spark, sf_dir).cache()
-    failed_batches = {
-        r["batch_id"] for r in df.filter(F.col("is_failed")).select("batch_id").collect()
-    }
+    with staged():
+        df = stage(translation_pipeline(spark, sf_dir), "cache")
+        failed_batches = {
+            r["batch_id"]
+            for r in df.filter(F.col("is_failed")).select("batch_id").collect()
+        }
     # Every failure must come from a batch whose mock format is the
     # truncated one (format index 2).
     for b in failed_batches:
         assert sum(b.encode()) % 4 == 2, f"unexpected failure in batch {b}"
-    df.unpersist()
 
 
 def test_pipeline_summary_schema(spark, sf_dir):

@@ -4,7 +4,9 @@ Runs every __spark_entry__.queries() entry at --sf (default sf0.01),
 runs the matching oracle_sql() in DuckDB over the same parquet files,
 and compares row count, column names, and order-insensitive values.
 Each line ends with the entry's time and the number of Spark jobs the
-entry itself ran (build and collect, not its accuracy hook).
+entry itself ran (build and collect, not its accuracy hook). The entry
+and its accuracy hook each run in their own ``staged()`` scope, so no
+entry's staged frames outlive it.
 
 Usage: python tools/check_correctness.py [--sf DIR] [--only name1,name2]
 """
@@ -90,6 +92,7 @@ def main() -> int:
     args = ap.parse_args()
 
     import __spark_entry__ as entrymod
+    from automotive_translation_pipeline_spark.operators.staging import staged
     from automotive_translation_pipeline_spark.session import get_spark
 
     # Managed tables (staging, the ANN index) go to a temporary warehouse
@@ -116,7 +119,8 @@ def main() -> int:
         group = f"check_correctness.{name}"
         sc.setJobGroup(group, name)
         try:
-            spark_pdf = fn(spark, args.sf).toPandas()
+            with staged():
+                spark_pdf = fn(spark, args.sf).toPandas()
         except Exception:
             print(f"FAIL  {name}: SPARK ERROR\n{traceback.format_exc()}")
             n_fail += 1
@@ -142,7 +146,8 @@ def main() -> int:
                 n_rowsonly += 1
                 continue
             try:
-                ok, detail = hook(spark, args.sf)
+                with staged():
+                    ok, detail = hook(spark, args.sf)
             except Exception:
                 print(f"FAIL  {name}: ACCURACY HOOK ERROR\n"
                       f"{traceback.format_exc()}")

@@ -4,9 +4,9 @@ The per-round SCALE.md evidence (sf1 -> sf3 -> sf10 -> sf30 -> sf100
 ratio tables) is produced with this tool: ``--n`` runs per query through
 ``bench.measure`` (noop sink, cache cleared, wall and process-tree CPU
 without JIT compiler threads), min and median wall and median CPU
-reported, ONE fresh Spark session per invocation (heavy multi-sf
-sessions accumulate localCheckpoint blocks and shuffle files — run one
-sf per process).
+reported, ONE fresh Spark session per invocation (run one sf per
+process). Each measured run is one ``staged()`` scope, so a query's
+checkpoint and cache blocks are released before the next run starts.
 
     python tools/spot_bench.py --sf .testdata/sf10 \
         --only dedup_ngram_jaccard,dedup_winnow_pairs --n 2
@@ -59,13 +59,6 @@ def main() -> None:
                     help="paired mode: number of A/B rounds")
     ap.add_argument("--one-run", action="store_true",
                     help=argparse.SUPPRESS)
-    ap.add_argument("--isolate", action="store_true",
-                    help="one subprocess (fresh JVM) per query: heavy "
-                    "queries leak localCheckpoint blocks that slow "
-                    "later queries in the same session (measured 11 s "
-                    "-> 42 s for dedup_duplicate_spans at sf30 when it "
-                    "ran after the pre-fix ngram blowup); isolation "
-                    "makes every number a solo number")
     args = ap.parse_args()
     names = [q.strip() for q in args.only.split(",") if q.strip()]
     me = [sys.executable, os.path.abspath(__file__), "--sf", args.sf,
@@ -146,22 +139,6 @@ def main() -> None:
     rows = ("queries", "queries_median", "queries_cpu")
     merged: dict = {"sf_dir": args.sf, "n": args.n, "cpus": args.cpus,
                     **{row: {} for row in rows}}
-
-    if args.isolate:
-        for name in names:
-            out = subprocess.run(
-                me + ["--only", name, "--n", str(args.n)],
-                capture_output=True, text=True,
-            )
-            try:
-                row = _last_json(out)
-            except (ValueError, IndexError):
-                print(f"  {name}: subprocess failed", file=sys.stderr)
-                continue
-            for k in rows:
-                merged[k].update(row[k])
-        print(json.dumps(merged))
-        return
 
     import bench
     from automotive_translation_pipeline_spark import queries_catalog as qc

@@ -3,7 +3,7 @@ against a PERSISTED banded index (VERDICT r8 #8 — the plan proofs say
 the probe never shuffles or windows the corpus; this produces the
 sixth-decade numbers backing the headline 100 TB incremental claim).
 
-Protocol, one SF per invocation (fresh JVM, like spot_bench --isolate):
+Protocol, one SF per invocation (one fresh JVM, like spot_bench):
 
 1. INDEX BUILD (timed once, the amortized one-time cost): band the 90%
    corpus slice with ``lsh_banded_table`` and write the (doc_id, band,
